@@ -200,7 +200,8 @@ final class ItemKNN(
     materialize(graft.core.Ops.getTopKRecsBounded(
       sym, numNeighbours, "item_one", "item_two", "similarity"))
     half.unpersist()
-    fitItemsDf = dfs.select(F.col(cols.item)).distinct().cache()
+    // dfs holds one row per item (coStats and mergeStats group by item)
+    fitItemsDf = graft.core.Persist.leaf(dfs.select(F.col(cols.item)))
     this
   }
 

@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
+import graft.core.{Ops, Persist}
 
 /** Column roles shared by all recommenders. */
 final case class RecCols(
@@ -14,10 +14,17 @@ final case class RecCols(
 
 /** Base recommender skeleton (reference: replay/models/base_rec.py:86-690).
   *
-  * fit = materialize model state (a cached DataFrame — reference
-  * `cache().count()` at pop_rec.py:135 etc., kept so predict never
-  * recomputes); predict = lazy score plan → optional seen-filter (rank-crop
-  * + anti-join, base_rec.py:152-201) → deterministic top-k window.
+  * fit = materialize model state; predict = lazy score plan → optional
+  * seen-filter (rank-crop + anti-join, base_rec.py:152-201) →
+  * deterministic top-k window.
+  *
+  * State is a plan LEAF: `materialize` caches it through
+  * [[graft.core.Persist.leaf]] (reference `cache().count()`,
+  * pop_rec.py:135), so predict never recomputes it and its plan is one
+  * `Scan ExistingRDD` node however many refits built it. Ownership: the
+  * model owns its state and memos; a refit drops the memos derived from the
+  * old state, and the caller that replaces or discards a model releases
+  * the old state frames with `unpersist()`.
   */
 abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializable {
   protected[models] var fitQueriesDf: DataFrame = _
@@ -219,8 +226,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     require(coldWeight > 0 && coldWeight <= 1,
       s"coldWeight must be in (0, 1], got $coldWeight")
     fillCache = None
-    itemPopularity = state.cache()
-    itemPopularity.count() // eager, reference pop_rec.py:135
+    itemPopularity = Persist.leaf(state)
   }
 
   /** The popularity table restricted to a candidate set: right join +
@@ -441,8 +447,8 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
   var similarity: DataFrame = _
 
   protected def materialize(state: DataFrame): Unit = {
-    similarity = state.cache()
-    similarity.count()
+    releasePairScores() // the memo scored the previous similarity table
+    similarity = Persist.leaf(state)
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,

@@ -141,7 +141,9 @@ final case class InteractionEntriesFilter(
         .join(ic, F.col(itemCol) <=> F.col("_i"))
         .filter(cond)
         .select(current.columns.toIndexedSeq.map(F.col): _*)
-      current = step.localCheckpoint(true)
+      val next = step.localCheckpoint(true)
+      graft.core.Persist.releaseCheckpoint(current) // superseded round
+      current = next
       rows = current.count()
       iter += 1
     }

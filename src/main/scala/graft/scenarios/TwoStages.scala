@@ -6,7 +6,7 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.core.Ops
-import graft.models.{BaseRecommender, PopRec, RecCols}
+import graft.models.{BaseRecommender, NeighbourRec, PopRec, RecCols}
 import graft.preprocessing.HistoryFeatures
 import graft.splitters.{RatioSplitter, Splitter}
 
@@ -198,15 +198,9 @@ final class TwoStagesScenario(
     firstLevelTrain = flTrain.cache()
     userFeaturesFit = userFeatures
     itemFeaturesFit = itemFeatures
-    // r14 (guide §5, VERDICT r13 item 3): enrich runs twice per scenario
-    // (fit-side here, predict-side) against the SAME firstLevelTrain — let
-    // neighbour models share one cached predictPairs score frame instead of
-    // rebuilding the dense history⋈similarity table per call.
-    firstLevelModels.foreach {
-      case n: graft.models.NeighbourRec => n.memoPairScores = true
-      case _ => ()
-    }
-    val train = enrich(labeled, firstLevelTrain, userFeatures, itemFeatures)
+    // the refit above already dropped the models' previous pair-score memos
+    val train = withPairScoreMemo(
+      enrich(labeled, firstLevelTrain, userFeatures, itemFeatures))
     featureCols = train.columns.toIndexedSeq
       .filterNot(Set(cols.query, cols.item, "target").contains)
     // GBT schedules many jobs per boosting iteration — compact the
@@ -254,7 +248,8 @@ final class TwoStagesScenario(
     val cand = candidatesWithFallback(firstLevelModels.head, log,
       numNegatives, log).select(cols.query, cols.item).cache()
     lastCand = cand
-    val feats = enrich(cand, firstLevelTrain, userFeaturesFit, itemFeaturesFit)
+    val feats = withPairScoreMemo(
+      enrich(cand, firstLevelTrain, userFeaturesFit, itemFeaturesFit))
     val assembled = new VectorAssembler()
       .setInputCols(featureCols.toArray).setOutputCol("_features")
       .transform(feats)
@@ -262,6 +257,39 @@ final class TwoStagesScenario(
       .select(F.col(cols.query), F.col(cols.item),
         vector_to_array(F.col("probability")).getItem(1).as(cols.rating))
     Ops.getTopKRecs(scored, k, cols.query, cols.item, cols.rating)
+  }
+
+  /** Enrich runs twice per scenario (fit-side, predict-side) against the
+    * SAME firstLevelTrain — neighbour models share one cached predictPairs
+    * score frame instead of rebuilding the dense history⋈similarity table
+    * per call. The memo flag is on only
+    * while `body` builds its plan, then each model gets its caller's value
+    * back; the memo itself stays cached until the model is refit or the
+    * scenario is [[release]]d. */
+  private def withPairScoreMemo[T](body: => T): T = {
+    val neighbours = firstLevelModels.collect { case n: NeighbourRec => n }
+    val saved = neighbours.map(_.memoPairScores)
+    neighbours.foreach(_.memoPairScores = true)
+    try body
+    finally neighbours.zip(saved).foreach { case (n, f) => n.memoPairScores = f }
+  }
+
+  /** Release every frame the scenario cached: the first-level models'
+    * pair-score memos, the generated-feature stats, the first-level train
+    * half and the last predict's candidates. The fitted scenario still
+    * predicts afterwards (recomputing what it needs); the first-level
+    * models' own state stays with their owner. */
+  def release(): Unit = {
+    firstLevelModels.foreach {
+      case n: NeighbourRec => n.releasePairScores()
+      case _               => ()
+    }
+    statsCached.foreach { case (a, b, c) =>
+      a.unpersist(); b.unpersist(); c.unpersist()
+    }
+    statsCached = None
+    statsKey = null
+    Seq(firstLevelTrain, lastCand).filter(_ != null).foreach(_.unpersist())
   }
 
   def fitPredict(log: DataFrame, k: Int,

@@ -924,7 +924,7 @@ object StreamingOps {
                 s"snapshot swap: rename $next -> $cur failed; old snapshot restored")
             }
             fs.delete(prev, true)
-          } finally base.unpersist() // one materialized copy per batch otherwise
+          } finally graft.core.Persist.releaseCheckpoint(base) // one copy per batch otherwise
         }
         ()
       }

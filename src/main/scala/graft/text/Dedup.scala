@@ -265,7 +265,7 @@ object Dedup {
       converged = next
         .join(labels.withColumnRenamed("component", "_old"), Seq("node"))
         .filter(F.col("component") < F.col("_old")).isEmpty
-      labels.unpersist()
+      graft.core.Persist.releaseCheckpoint(labels)
       labels = next
       iter += 1
     }
@@ -322,7 +322,7 @@ object Dedup {
         .union(joined.select(F.col("u"), F.col("m").as("v"))))
         .localCheckpoint(true)
       converged = ss.except(e).isEmpty && e.except(ss).isEmpty
-      e.unpersist() // superseded checkpoint — don't accumulate round blocks
+      graft.core.Persist.releaseCheckpoint(e) // superseded — don't accumulate round blocks
       e = ss
       iter += 1
     }

@@ -69,6 +69,31 @@ class PlanSpec extends SparkSpec {
       "cropped item list should broadcast into the per-query cross join")
   }
 
+  test("ItemKNN predict on a refitted model broadcasts the similarity table") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import spark.implicits._
+    val fitLog = (for (u <- 1L to 40L; i <- 1L to 30L if (u * 7 + i * 3) % 5 < 2)
+      yield (u, i)).toDF("query_id", "item_id")
+    val probe = new graft.models.ItemKNN(numNeighbours = 5)
+    val (pairs, dfs) = graft.models.ItemKNN.mergeStats(
+      probe.coStats(fitLog.filter(col("query_id") <= 30)),
+      probe.coStats(fitLog.filter(col("query_id") > 30)))
+    val model = new graft.models.ItemKNN(numNeighbours = 5).fitFromStats(pairs, dfs)
+    // a history side estimated above the broadcast threshold: only the
+    // similarity table's materialized size can make it the build side
+    val log = spark.range(0, 2000000).select(
+      (col("id") % 1000).as("query_id"), (col("id") % 30 + 1).as("item_id"))
+    val df = model.predict(log, 10, queries = Some(Seq(1L, 2L).toDF("query_id")))
+    val builds = df.queryExecution.sparkPlan.collect { case j: BroadcastHashJoinExec =>
+      j.buildSide match { case BuildRight => j.right; case BuildLeft => j.left }
+    }
+    assert(builds.exists(_.output.exists(_.name == "similarity")),
+      "similarity table should be the broadcast build side:\n" +
+        df.queryExecution.sparkPlan.toString.take(1500))
+  }
+
   test("entity-set ranks avoid single-partition global windows") {
     // NewUsers/ColdUser splitters and the global item rank use the
     // range-partition + zipWithIndex rank — a Window node here would mean

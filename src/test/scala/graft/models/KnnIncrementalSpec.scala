@@ -45,6 +45,53 @@ class KnnIncrementalSpec extends SparkSpec {
     assert(simSet(fitted.predict(log, 3)) == simSet(inc.predict(log, 3)))
   }
 
+  test("a refit drops the predictPairs memo built on the old similarity table") {
+    val train = log // one reference: the memo is keyed on it
+    val pairs = train.select("query_id", "item_id").distinct()
+    def scores(m: ItemKNN) = m.predictPairs(pairs, train).collect()
+      .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
+    val m = new ItemKNN(numNeighbours = 5)
+    m.memoPairScores = true
+    m.fit(train.filter($"item_id" <= 6))
+    val before = scores(m)
+    m.fit(train)
+    val fresh = scores(new ItemKNN(numNeighbours = 5).fit(train))
+    assert(before != fresh, "fixture: the refit must change some score")
+    assert(scores(m) == fresh, "refit model served the old similarity table's scores")
+  }
+
+  test("refit state is a plan leaf: 1 and 4 refits plan alike, rows equal a full fit") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FormattedMode
+    // stats stay cached between refits, as a serving loop keeps them
+    def persisted(s: (DataFrame, DataFrame)) = {
+      s._1.cache().count(); s._2.cache().count(); s
+    }
+    def refitted(n: Int): ItemKNN = {
+      val probe = new ItemKNN(numNeighbours = 5)
+      var stats = persisted(probe.coStats(log.filter($"query_id" <= 4)))
+      var model = new ItemKNN(numNeighbours = 5).fitFromStats(stats._1, stats._2)
+      for (u <- 5L until 5L + n) {
+        val merged = persisted(ItemKNN.mergeStats(stats,
+          probe.coStats(log.filter($"query_id" === u))))
+        val next = new ItemKNN(numNeighbours = 5).fitFromStats(merged._1, merged._2)
+        Seq(model.similarity, model.fitItems, stats._1, stats._2).foreach(_.unpersist())
+        model = next
+        stats = merged
+      }
+      model
+    }
+    // expression and RDD ids differ between the two models' plans
+    def explainLength(m: ItemKNN) = m.predict(log, 3, queries = Some(Seq(1L, 2L).toDF("query_id")))
+      .queryExecution.explainString(FormattedMode).replaceAll("\\d+", "0").length
+    def nodes(m: ItemKNN) = m.similarity.queryExecution.analyzed.collect { case p => p }.size
+    val one = refitted(1)
+    val four = refitted(4)
+    assert(nodes(one) == 1 && nodes(four) == 1)
+    assert(explainLength(one) == explainLength(four))
+    assert(simSet(four.similarity) == simSet(new ItemKNN(numNeighbours = 5).fit(log).similarity))
+  }
+
   test("weighted fits refuse the sufficient-stats path") {
     intercept[IllegalArgumentException](
       new ItemKNN(weighting = Some("bm25")).coStats(log))

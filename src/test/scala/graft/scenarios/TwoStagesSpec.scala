@@ -2,7 +2,7 @@ package graft.scenarios
 
 import org.apache.spark.sql.{functions => F}
 import graft.SparkSpec
-import graft.models.PopRec
+import graft.models.{ItemKNN, PopRec}
 import graft.splitters.RatioSplitter
 
 /** TwoStagesScenario contracts (reference two_stages_scenario.py:112-760):
@@ -75,6 +75,28 @@ class TwoStagesSpec extends SparkSpec {
       Seq("query_id", "item_id"), "left_semi")
     assert(seen.count() == 0, "rerank output must stay seen-filtered")
     assert(sc.trainAuc > 0.5, s"train AUC ${sc.trainAuc}")
+  }
+
+  test("neighbour pair-score memo: caller's flag kept, release frees every scenario cache") {
+    val sparkCtx = spark.sparkContext
+    val mark = sparkCtx.emptyRDD[Int].id
+    val knn = new ItemKNN(numNeighbours = 3)
+    val fallback = new PopRec(useRating = true)
+    val sc = new TwoStagesScenario(Seq(knn), fallbackModel = Some(fallback),
+      numNegatives = 4, gbtMaxIter = 3, gbtMaxDepth = 3,
+      trainSplitter = RatioSplitter(0.5, tieCol = Some("session_id")))
+    assert(sc.fitPredict(log, k = 2).count() > 0)
+    assert(!knn.memoPairScores, "fit/predict must restore the caller's memo flag")
+    knn.memoPairScores = true
+    assert(sc.predict(log, k = 2).count() > 0)
+    assert(knn.memoPairScores)
+    sc.release()
+    // what is left belongs to the first-level models' owner
+    for (m <- Seq(knn, fallback)) Seq(m.fitQueries, m.fitItems).foreach(_.unpersist(true))
+    knn.similarity.unpersist(true)
+    fallback.itemPopularity.unpersist(true)
+    val left = sparkCtx.getPersistentRDDs.filter(_._1 > mark)
+    assert(left.isEmpty, left.values.map(_.toDebugString.take(300)).mkString("\n"))
   }
 
   test("random negatives mode runs and labels consistently") {
