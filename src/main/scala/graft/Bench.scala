@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import java.util.concurrent.TimeUnit
 
+import graft.core.Session
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline query set on SPARK_GRAFT_SF_DIR and
@@ -24,7 +25,8 @@ import org.apache.spark.sql.SparkSession
   * state accumulated across queries is not attributable per-row, so the
   * only way to make the 2× baseline gate adjudicable is process-level
   * isolation: the parent forks `java -cp <same classpath> graft.BenchChild
-  * <query>` per row, each child builds a fresh SparkSession, warms up,
+  * <query>` per row, each child builds a fresh session with the library's
+  * factory ([[graft.core.Session.build]]), warms up,
   * runs REPS repetitions (median, cache cleared between reps), prints one
   * JSON line, and exits. The parent aggregates.
   *
@@ -40,8 +42,6 @@ import org.apache.spark.sql.SparkSession
   * the full headline sweep runs behind SPARK_GRAFT_BENCH_FULL=1.
   *
   * Knobs:
-  *   SPARK_GRAFT_BENCH_FORK=0   legacy single-JVM in-process sweep (fast
-  *                              local iteration; NOT for official numbers)
   *   SPARK_GRAFT_BENCH_FULL=1   full [[headline]] sweep (default: the
   *                              driver-budget [[driverSet]])
   *   SPARK_GRAFT_BENCH_ONLY=a,b comma-separated subset
@@ -228,38 +228,6 @@ object Bench {
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  /** The shared benchmark SparkSession shape (parent legacy path and every
-    * forked child use the identical config, so the two modes differ only in
-    * process isolation).
-    */
-  def benchSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // one shuffle partition per core: measured 28% faster than the
-      // 3×-cores Session default at sf0.1/local[32] — single-JVM stages
-      // are scheduling-overhead-bound, not skew-bound, at this scale
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // r13: a global spark.sql.join.preferSortMergeJoin=false was probed
-      // (guide §3.1/§9) and deliberately NOT adopted — paired A/B at sf0.1
-      // read −10%/−17% on the single-long-key Gram joins (item_knn_predict,
-      // rp3beta) but +66% on the composite-key deviations join
-      // (model_slope_one_sample 18.3→27.8 s; a per-join MERGE hint only
-      // recovered it to 18.9), netting ~zero across the measured set while
-      // adding per-task hash-build memory that shrinks headroom at the
-      // driver's lower-core scaling runs. Sort-merge stays the default.
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Session: keep the bounded top-k crop hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 22).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
 
   /** Untimed warmup: JVM/codegen/parquet-footer costs land here, not on the
     * first measured query.
@@ -458,8 +426,7 @@ object Bench {
 
   /** Fork one fresh JVM for `name`; parse the child's JSON line. The child
     * inherits this JVM's exact classpath (sbt `run / fork := true` puts the
-    * full path in java.class.path) and the same -Xmx, so parent-mode and
-    * child-mode measurements are comparable.
+    * full path in java.class.path) and the same -Xmx.
     */
   private def forkOne(name: String, sfDir: String, reps: Int, cpus: String): Double = {
     val java = new File(new File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
@@ -506,7 +473,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val fork = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
     val names = selectedQueries()
 
     val calibrate = sys.env.getOrElse("SPARK_GRAFT_BENCH_CALIBRATE", "1") != "0"
@@ -518,46 +484,32 @@ object Bench {
           f"(${CalibrationBandHi} s) - this record is contaminated by box " +
           "load; re-run on a quiet box before treating it as a baseline")
 
-    val (results, calibration) =
-      if (fork) {
-        val calStart =
-          if (calibrate) forkOne(CalibrationName, sfDir, reps, cpus) else -1.0
-        warnDrift("start", calStart)
-        // cumulative re-emit after every row: a driver timeout mid-sweep
-        // still leaves the last complete cumulative line in its stdout
-        // window (calibration mid/end default until measured). A MID
-        // calibration runs halfway through the sweep — r13's record drifted
-        // 25.9 -> 7.7 s WITHIN one sweep, so two endpoints under-sample the
-        // load curve the per-row numbers actually saw.
-        val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-        var calMid = -1.0
-        names.zipWithIndex.foreach { case (name, i) =>
-          System.err.println(s"[bench] (${i + 1}/${names.size}) forking $name")
-          acc += name -> forkOne(name, sfDir, reps, cpus)
-          if (calibrate && names.size >= 8 && i + 1 == names.size / 2) {
-            calMid = forkOne(CalibrationName, sfDir, reps, cpus)
-            warnDrift("mid", calMid)
-          }
-          emit(acc.toSeq, sfDir,
-            if (calibrate) Some((calStart, calMid, calStart)) else None, cpus)
-        }
-        val calEnd =
-          if (calibrate) forkOne(CalibrationName, sfDir, reps, cpus) else -1.0
-        warnDrift("end", calEnd)
-        (acc.toSeq,
-          if (calibrate) Some((calStart, calMid, calEnd)) else None)
-      } else {
-        val spark = benchSession(cpus)
-        warmup(spark, sfDir)
-        val calStart =
-          if (calibrate) timeQuery(spark, sfDir, CalibrationName, reps) else -1.0
-        val rs = names.map(name => name -> timeQuery(spark, sfDir, name, reps))
-        val calEnd =
-          if (calibrate) timeQuery(spark, sfDir, CalibrationName, reps) else -1.0
-        spark.stop()
-        (rs, if (calibrate) Some((calStart, -1.0, calEnd)) else None)
+    val calStart =
+      if (calibrate) forkOne(CalibrationName, sfDir, reps, cpus) else -1.0
+    warnDrift("start", calStart)
+    // cumulative re-emit after every row: a timeout mid-sweep still
+    // leaves the last complete cumulative line in the captured stdout
+    // (calibration mid/end default until measured). A MID
+    // calibration runs halfway through the sweep — r13's record drifted
+    // 25.9 -> 7.7 s WITHIN one sweep, so two endpoints under-sample the
+    // load curve the per-row numbers actually saw.
+    val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    var calMid = -1.0
+    names.zipWithIndex.foreach { case (name, i) =>
+      System.err.println(s"[bench] (${i + 1}/${names.size}) forking $name")
+      results += name -> forkOne(name, sfDir, reps, cpus)
+      if (calibrate && names.size >= 8 && i + 1 == names.size / 2) {
+        calMid = forkOne(CalibrationName, sfDir, reps, cpus)
+        warnDrift("mid", calMid)
       }
-    emit(results, sfDir, calibration, cpus)
+      emit(results.toSeq, sfDir,
+        if (calibrate) Some((calStart, calMid, calStart)) else None, cpus)
+    }
+    val calEnd =
+      if (calibrate) forkOne(CalibrationName, sfDir, reps, cpus) else -1.0
+    warnDrift("end", calEnd)
+    emit(results.toSeq, sfDir,
+      if (calibrate) Some((calStart, calMid, calEnd)) else None, cpus)
   }
 }
 
@@ -568,7 +520,8 @@ object Bench {
 object BenchChild {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, repsS, cpus) = args
-    val spark = Bench.benchSession(cpus)
+    val spark = Session.build(master = s"local[$cpus]")
+    spark.sparkContext.setLogLevel("ERROR")
     Bench.warmup(spark, sfDir)
     val median = Bench.timeQuery(spark, sfDir, name, repsS.toInt)
     println(s"""{"name":"$name","median":$median}""")

@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = Session.build(master = "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

@@ -1,13 +1,15 @@
 package graft
 
+import graft.core.Session
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool (guide §1 measure-first): run ONE query end-to-end and print a
   * per-job wall-time attribution — job id, seconds, and the first line of
   * the job's call site / description — so an expensive row's cost can be
-  * assigned to its stages before optimizing. Same session shape as the
-  * bench (honors SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR). Not part of any
-  * timed path.
+  * assigned to its stages before optimizing. Builds its session with the
+  * library's factory ([[graft.core.Session.build]]), as the bench does
+  * (honors SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR). Not part of any timed
+  * path.
   *
   * Usage: sbt "runMain graft.JobProfile <query> [reps]"
   */
@@ -17,7 +19,7 @@ object JobProfile {
     val reps = if (args.length > 1) args(1).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Bench.benchSession(cpus)
+    val spark = Session.build(master = s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
   * idiomatic extension hook:
   *
   *   - config: `spark.sql.extensions=graft.core.GraftExtensions`
-  *   - builder: `SparkSession.builder().withExtensions(new GraftExtensions)`
+  *   - builder: `.withExtensions(new GraftExtensions)` on a session builder
   *   - post-hoc: `GraftExtensions.register(spark)` on a live session
   *     (tests, notebooks — extension classes only apply at build time).
   *

@@ -91,11 +91,11 @@ object Graph {
             s"($dampingPct * (coalesce(_inc, 0L) + (_dangling div ${n}L))) div 100"))
             .as("_rank"))
         .localCheckpoint(true)
-      ranks.unpersist() // superseded checkpoint — don't accumulate blocks
+      Persist.releaseCheckpoint(ranks) // superseded checkpoint — don't accumulate blocks
       ranks = next
     }
     val out = ranks.select(F.col("_node").as("node"), F.col("_rank").as("rank"))
-    e.unpersist(); nodes.unpersist()
+    Persist.releaseCheckpoint(e, nodes)
     out
   }
 
@@ -173,11 +173,11 @@ object Graph {
             .otherwise(F.expr(s"($dampingPct * coalesce(_inc, 0L)) div 100"))
             .as("_rank"))
         .localCheckpoint(true)
-      ranks.unpersist()
+      Persist.releaseCheckpoint(ranks)
       ranks = next
     }
     val out = ranks.select(F.col("_node").as("node"), F.col("_rank").as("rank"))
-    e.unpersist(); nodes.unpersist()
+    Persist.releaseCheckpoint(e, nodes)
     out
   }
 
@@ -238,11 +238,11 @@ object Graph {
             s"($dampingPct * (coalesce(_inc, 0L) + (_dangling div ${n}L))) div 100"))
             .as("_rank"))
         .localCheckpoint(true)
-      ranks.unpersist()
+      Persist.releaseCheckpoint(ranks)
       ranks = next
     }
     val out = ranks.select(F.col("_node").as("node"), F.col("_rank").as("rank"))
-    e.unpersist(); nodes.unpersist()
+    Persist.releaseCheckpoint(e, nodes)
     out
   }
 
@@ -309,19 +309,19 @@ object Graph {
         .select(F.col("_dst").as("_n2"), F.col("_hub"))
         .groupBy(F.col("_n2").as("_node")).agg(F.sum("_hub").as("_raw"))
       val nextAuths = renorm(authRaw, "_auth")
-      if (auths != null) auths.unpersist()
+      if (auths != null) Persist.releaseCheckpoint(auths)
       auths = nextAuths
       val hubRaw = auths.join(eByDst, F.col("_node") === F.col("_dst"))
         .select(F.col("_src").as("_n2"), F.col("_auth"))
         .groupBy(F.col("_n2").as("_node")).agg(F.sum("_auth").as("_raw"))
       val nextHubs = renorm(hubRaw, "_hub")
-      hubs.unpersist()
+      Persist.releaseCheckpoint(hubs)
       hubs = nextHubs
     }
     val out = hubs.join(auths, Seq("_node"))
       .select(F.col("_node").as("node"), F.col("_hub").as("hub_units"),
         F.col("_auth").as("auth_units"))
-    eBySrc.unpersist(); eByDst.unpersist(); nodes.unpersist()
+    Persist.releaseCheckpoint(eBySrc, eByDst, nodes)
     out
   }
 
@@ -430,6 +430,7 @@ object Graph {
       oriented.select(F.col("_lo").as("_v"), F.col("_hi").as("_w")),
       Seq("_v", "_w"), "left_semi")
       .localCheckpoint(true)
+    Persist.releaseCheckpoint(e, oriented)
     val perNode = closed.select(F.col("_p").as("_node"))
       .union(closed.select(F.col("_v").as("_node")))
       .union(closed.select(F.col("_w").as("_node")))
@@ -484,12 +485,12 @@ object Graph {
         .agg(F.max_by(F.col("_label"),
           F.col("_cnt") * F.lit(2147483648L) - F.col("_label")).as("_label"))
         .localCheckpoint(true)
-      labels.unpersist()
+      Persist.releaseCheckpoint(labels)
       labels = next
     }
     val out = labels.select(F.col("_node").as("node"),
       F.col("_label").as("community"))
-    adj.unpersist()
+    Persist.releaseCheckpoint(adj)
     out
   }
 
@@ -518,6 +519,7 @@ object Graph {
     var deg: DataFrame = null
     while (!converged && it < maxIter) {
       it += 1
+      if (deg != null) Persist.releaseCheckpoint(deg)
       deg = e.select(F.col("_a").as("_node"))
         .union(e.select(F.col("_b").as("_node")))
         .groupBy("_node").agg(F.count(F.lit(1)).as("_deg"))
@@ -531,10 +533,11 @@ object Graph {
           .join(keep.select(F.col("_node").as("_a")), Seq("_a"), "left_semi")
           .join(keep.select(F.col("_node").as("_b")), Seq("_b"), "left_semi")
           .localCheckpoint(true)
-        e.unpersist()
+        Persist.releaseCheckpoint(e)
         e = next
       }
     }
+    Persist.releaseCheckpoint(e)
     require(converged, s"kCore: no fixpoint after $maxIter rounds")
     val out = deg.filter(F.col("_deg") >= k)
       .select(F.col("_node").as("node"), F.col("_deg").as("degree"))
@@ -577,13 +580,19 @@ object Graph {
         .join(settled, Seq("_node"), "left_anti")
         .select(F.col("_node"), F.lit(depth.toLong).as("_dist"))
         .localCheckpoint(true)
-      if (next.isEmpty) depth = maxDepth // converged: stop expanding
-      else {
-        settled = settled.unionAll(next).localCheckpoint(true)
+      if (next.isEmpty) { // converged: stop expanding
+        depth = maxDepth
+        Persist.releaseCheckpoint(next)
+      } else {
+        val grown = settled.unionAll(next).localCheckpoint(true)
+        if (frontier ne settled) Persist.releaseCheckpoint(frontier)
+        Persist.releaseCheckpoint(settled)
+        settled = grown
         frontier = next
       }
     }
-    adj.unpersist()
+    if (frontier ne settled) Persist.releaseCheckpoint(frontier)
+    Persist.releaseCheckpoint(adj)
     settled.select(F.col("_node").as("node"), F.col("_dist").as("distance"))
   }
 
@@ -634,11 +643,11 @@ object Graph {
         .groupBy("_node").agg(F.min("_d").as("_d"))
         .localCheckpoint(true)
       val nfp = fingerprint(next)
-      if (nfp == fp) converged = true
-      else { fp = nfp; dist.unpersist(); dist = next }
+      if (nfp == fp) { converged = true; Persist.releaseCheckpoint(next) }
+      else { fp = nfp; Persist.releaseCheckpoint(dist); dist = next }
     }
     require(converged, s"shortestPaths: no fixpoint after $maxIter rounds")
-    adj.unpersist()
+    Persist.releaseCheckpoint(adj)
     dist.select(F.col("_node").as("node"), F.col("_d").as("distance"))
   }
 
@@ -703,7 +712,7 @@ object Graph {
         .select("_a", "_b").localCheckpoint(true)
       val n2 = next.count()
       if (n2 == n) converged = true
-      e.unpersist(); oriented.unpersist()
+      Persist.releaseCheckpoint(e, oriented)
       e = next; n = n2
     }
     require(converged, s"kTruss: no fixpoint after $maxIter rounds")
@@ -731,23 +740,30 @@ object Graph {
     var k = 2
     var exhausted = false
     while (k <= maxK && !exhausted) {
-      val core = kCore(cur, "_a", "_b", k.toLong, maxIter)
-        .select(F.col("node"), F.lit(k.toLong).as("_k"))
+      val peel = kCore(cur, "_a", "_b", k.toLong, maxIter)
+      val core = peel.select(F.col("node"), F.lit(k.toLong).as("_k"))
         .localCheckpoint(true)
+      Persist.releaseCheckpoint(peel)
       if (core.isEmpty) exhausted = true
       else {
-        out = out.join(core, Seq("node"), "left")
+        val nextOut = out.join(core, Seq("node"), "left")
           .select(F.col("node"),
             F.coalesce(F.col("_k"), F.col("coreness")).as("coreness"))
           .localCheckpoint(true)
-        cur = cur
+        if (k > 2) Persist.releaseCheckpoint(out) // a checkpoint once a level has peeled
+        out = nextOut
+        val nextCur = cur
           .join(core.select(F.col("node").as("_a")), Seq("_a"), "left_semi")
           .join(core.select(F.col("node").as("_b")), Seq("_b"), "left_semi")
           .localCheckpoint(true)
+        Persist.releaseCheckpoint(cur) // at k = 2 this is e, which out no longer reads
+        cur = nextCur
       }
+      Persist.releaseCheckpoint(core)
       k += 1
     }
-    e.unpersist()
+    // with no level peeled, out is still planned on e
+    if (cur ne e) Persist.releaseCheckpoint(cur)
     out
   }
 

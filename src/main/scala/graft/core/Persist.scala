@@ -33,14 +33,14 @@ object Persist {
     out
   }
 
-  /** Free the blocks of a `localCheckpoint`ed frame. `Dataset.unpersist`
+  /** Free the blocks of `localCheckpoint`ed frames. `Dataset.unpersist`
     * does not: the checkpoint is no CacheManager entry but a persisted RDD
     * under the frame's `LogicalRDD`, which stays in `getPersistentRDDs`.
     * Frames planned on top of the checkpoint can no longer be computed
     * afterwards — release only superseded or fully consumed checkpoints. */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
+  def releaseCheckpoint(dfs: DataFrame*): Unit =
+    dfs.foreach(_.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = true)
       case _             => ()
-    }
+    })
 }

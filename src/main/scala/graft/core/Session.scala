@@ -2,15 +2,23 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory (reference: replay/utils/session_handler.py:22-101):
-  * shuffle partitions sized to cores, Kryo, AQE on (runtime re-plan,
-  * skew-join splitting, partition coalescing — the reference predates AQE
-  * and hand-tuned what AQE now does), off-heap-friendly defaults. */
+/** The one session factory (reference: replay/utils/session_handler.py:22-101).
+  * The library, the benchmarks, the oracle dump (Verify) and the specs all
+  * build their session here, so every one of them runs the same config:
+  * one shuffle partition per core, Kryo, UTC and a high hash-aggregate
+  * fallback threshold. AQE (runtime re-plan, skew-join splitting, partition
+  * coalescing) is on by Spark's own default.
+  *
+  * The reference sizes shuffle partitions at 3× cores. graft uses 1×: at
+  * sf0.1/local[32] it measured 28 % faster than 3×, because single-JVM
+  * stages at this scale are bound by scheduling overhead, not by skew.
+  *
+  * `spark.ui.enabled=false` is left to the JVM options of the launcher
+  * (build.sbt, the bench's forked children). */
 object Session {
   def build(
       appName: String = "graft",
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitionsPerCore: Int = 3,
   ): SparkSession = {
     val cores = master match {
       case m if m.startsWith("local[") && m != "local[*]" =>
@@ -20,13 +28,15 @@ object Session {
     val s = SparkSession.builder()
       .appName(appName)
       .master(master)
-      .config("spark.sql.shuffle.partitions", (cores * shufflePartitionsPerCore).toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.kryoserializer.buffer.max", "256m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // spark.sql.join.preferSortMergeJoin=false was probed (r13) and not
+      // adopted: paired A/B at sf0.1 read −10%/−17% on the single-long-key
+      // Gram joins (item_knn_predict, rp3beta) but +66% on the
+      // composite-key deviations join (model_slope_one_sample 18.3→27.8 s),
+      // netting ~zero while adding per-task hash-build memory.
       // ObjectHashAggregate (typed Aggregators, e.g. the bounded top-k
       // crop) falls back to SORT-based aggregation after this many hash
       // map entries — the 128 default turns every >128-query task into

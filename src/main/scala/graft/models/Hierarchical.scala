@@ -34,21 +34,6 @@ final class HierarchicalRecommender(
 ) extends Serializable {
   require(depth >= 2, s"depth must be >= 2, got $depth")
 
-  /** r14 probe (VERDICT r13 item 8, guide §2.6): batch all leaf-level
-    * ULinUCB fits into ONE job via [[ULinUCB.fitBatch]] (node-tagged union,
-    * per-node-partitioned windows — value-identical per node, pinned by
-    * ULinUCBSpec). MEASURED AND REJECTED as the default at sf0.1: the job
-    * count drops 112 → 91, but the official forked-bench shape reads the
-    * batched fit SLOWER (same build, alternating A/B: 13.9/10.8 s per-node
-    * vs 15.9/14.2 s batched) — at this scale the per-node fits are
-    * sub-second actions whose driver synchronization is cheaper than the
-    * batched plan's bigger optimize/stage-barrier critical path. The toggle
-    * stays for cluster-scale trees (hundreds of leaves, where per-node
-    * driver round-trips dominate); the default is the measured-faster
-    * per-node path. */
-  private val BatchLeafFits: Boolean =
-    sys.env.getOrElse("GRAFT_HCB_BATCH_LEAVES", "0") == "1"
-
   /** One fitted tree node. `path` is the cluster-id route from the root
     * ("" for root, "0/2" = root child 0 → its child 2). */
   private[models] final case class Node(path: String, isLeaf: Boolean,
@@ -102,25 +87,14 @@ final class HierarchicalRecommender(
   def fit(log: DataFrame, itemFeatures: DataFrame): this.type = {
     itemFeatCols = itemFeatures.columns.filterNot(_ == cols.item).toIndexedSeq
     nodes = Map.empty
-    // r14 (guide §2.6 / VERDICT r13 item 8): leaf fits are collected during
-    // the tree walk and run as ONE batched ULinUCB fit over the union of
-    // the node slices (node-id column, per-node-partitioned windows) —
-    // job count ~ tree depth instead of node count. Per-node state is
-    // value-identical to the per-node fits (see ULinUCB.fitBatch).
-    val leafInputs =
-      scala.collection.mutable.ListBuffer.empty[(String, DataFrame, DataFrame)]
-
     def fitNode(path: String, level: Int, slice: DataFrame,
         feats: DataFrame): Unit = {
       val isLeaf = level == depth - 1
       if (isLeaf) {
-        if (BatchLeafFits) leafInputs += ((path, slice, feats))
-        else {
-          // discrete clusterer: each item is its own cluster
-          val rec = new ULinUCB(alpha, cols).fit(slice, feats)
-          val assign = feats.select(F.col(cols.item), F.col(cols.item).as("_cl"))
-          nodes += path -> Node(path, isLeaf = true, rec, assign.cache())
-        }
+        // discrete clusterer: each item is its own cluster
+        val rec = new ULinUCB(alpha, cols).fit(slice, feats)
+        val assign = feats.select(F.col(cols.item), F.col(cols.item).as("_cl"))
+        nodes += path -> Node(path, isLeaf = true, rec, assign.cache())
       } else {
         val (assigned, centers) = clusterItems(feats)
         val relabeled = slice.join(F.broadcast(assigned), Seq(cols.item))
@@ -140,25 +114,6 @@ final class HierarchicalRecommender(
       }
     }
     fitNode("", 0, log, itemFeatures)
-    // one batched fit over every leaf slice (the leaves are
-    // nClusters^(depth-1) of the tree's nodes — the driver-loop hot spot)
-    if (leafInputs.nonEmpty) {
-      val nodeCol = "_nodep"
-      val taggedLog = leafInputs.map { case (p, sl, _) =>
-        sl.select(F.lit(p).as(nodeCol), F.col(cols.item), F.col(cols.query),
-          F.col(cols.rating))
-      }.reduce(_ unionByName _)
-      val taggedFeats = leafInputs.map { case (p, _, ft) =>
-        ft.select(F.lit(p).as(nodeCol) +: F.col(cols.item) +:
-          itemFeatCols.map(F.col): _*)
-      }.reduce(_ unionByName _)
-      val fitted = ULinUCB.fitBatch(taggedLog, taggedFeats, nodeCol,
-        leafInputs.map(_._1).toSeq, alpha, cols)
-      leafInputs.foreach { case (p, _, ft) =>
-        val assign = ft.select(F.col(cols.item), F.col(cols.item).as("_cl"))
-        nodes += p -> Node(p, isLeaf = true, fitted(p), assign.cache())
-      }
-    }
     this
   }
 

@@ -1,5 +1,6 @@
 package graft.models
 
+import graft.core.Persist
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Item popularity recommender (reference: replay/models/pop_rec.py:121-137).
@@ -93,14 +94,22 @@ final class CatPopRec(
         .join(edges, Seq("category"))
         .filter(col("parent_cat").isNotNull)
         .select(col("parent_cat").as("category"), col("leaf"))
-      frontier = step.localCheckpoint(true)
-      if (frontier.isEmpty) done = true
-      else closure = closure.unionByName(frontier).distinct().localCheckpoint(true)
+      // from depth 1 on, frontier and closure are superseded checkpoints
+      val next = step.localCheckpoint(true)
+      if (depth > 0) Persist.releaseCheckpoint(frontier)
+      frontier = next
+      if (frontier.isEmpty) { done = true; Persist.releaseCheckpoint(frontier) }
+      else {
+        val grown = closure.unionByName(frontier).distinct().localCheckpoint(true)
+        if (depth > 0) Persist.releaseCheckpoint(closure)
+        closure = grown
+      }
       depth += 1
     }
     if (!done)
       throw new IllegalArgumentException(
         s"category tree deeper than $maxDepth levels — cycle in catTree?")
+    edges.unpersist() // a cache: a closure still planned on it recomputes it
     closure
   }
 

@@ -143,81 +143,3 @@ final class ULinUCB(
     graft.core.Ops.getTopKRecsBounded(out, k, cols.query, cols.item, cols.rating)
   }
 }
-
-/** Companion: batched multi-node fit (see [[ULinUCB.fitBatch]] notes). */
-object ULinUCB {
-  /** r14 (guide §2.6 overlap independent work / VERDICT r13 item 8): fit
-    * MANY node-scoped ULinUCB models in ONE distributed pass. The
-    * per-node computation is embarrassingly independent — tag every log /
-    * feature row with its node, run the SAME cells → prefix-window → solve
-    * pipeline partitioned by (node, cell) instead of (cell), and slice the
-    * per-node state frames out of one cached solved frame. Per-node values
-    * are identical to [[fit]] run node-by-node: the groupBy keys and the
-    * prefix-window partitions are node-scoped, so no row from another node
-    * ever enters a node's sums (and the hierarchical gates' integral
-    * features make every sum exact in double regardless of add order).
-    * HierarchicalRecommender uses this to fit a whole tree LEVEL in one
-    * job instead of one driver-synchronized fit per node. */
-  private[models] def fitBatch(log: DataFrame, itemFeatures: DataFrame,
-      nodeCol: String, nodePaths: Seq[String], alpha: Double,
-      cols: RecCols): Map[String, ULinUCB] = {
-    val spark = log.sparkSession
-    import spark.implicits._
-    val featCols = itemFeatures.columns
-      .filterNot(c => c == cols.item || c == nodeCol)
-    val d = featCols.length
-    val x = F.array(featCols.toIndexedSeq.map(c => F.col(c).cast("double")): _*)
-    val featsAll = itemFeatures
-      .select(F.col(nodeCol), F.col(cols.item), x.as("_x")).cache()
-    featsAll.count()
-
-    val joined = log.join(F.broadcast(featsAll), Seq(nodeCol, cols.item))
-      .select(F.col(nodeCol), F.col(cols.query), F.col("_x"),
-        F.col(cols.rating).cast("double").as("_r"))
-    val gramCells = F.flatten(F.transform(F.col("_x"), xi =>
-      F.transform(F.col("_x"), xj => xi * xj)))
-    val rxCells = F.transform(F.col("_x"), xi => xi * F.col("_r"))
-    val cells = joined
-      .select(F.col(nodeCol), F.col(cols.query),
-        F.posexplode(F.concat(gramCells, rxCells)))
-      .toDF(nodeCol, cols.query, "_i", "_v")
-      .groupBy(nodeCol, cols.query, "_i").agg(F.sum("_v").as("_s"))
-    val prefix = cells.withColumn("_cum",
-      F.sum("_s").over(Window.partitionBy(nodeCol, "_i").orderBy(cols.query)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val byUser = prefix.groupBy(nodeCol, cols.query)
-      .agg(F.transform(
-        F.sort_array(F.collect_list(F.struct(F.col("_i"), F.col("_cum")))),
-        s => s.getField("_cum")).as("_cells"))
-
-    val solved = byUser.map { row =>
-      val node = row.getString(0)
-      val q = row.getLong(1)
-      val all = row.getSeq[Double](2).toArray
-      val gram = all.take(d * d)
-      val bvec = all.drop(d * d)
-      if (d == 2) {
-        val a11 = gram(0) + 1.0; val a12 = gram(1)
-        val a21 = a12; val a22 = gram(3) + 1.0
-        val det = a11 * a22 - a12 * a21
-        val ai = Array(a22 / det, -a12 / det, -a21 / det, a11 / det)
-        val theta = Array(ai(0) * bvec(0) + ai(1) * bvec(1),
-          ai(2) * bvec(0) + ai(3) * bvec(1))
-        (node, q, theta, ai)
-      } else {
-        val A = DenseMatrix.create(d, d, gram) + DenseMatrix.eye[Double](d)
-        val aInv = inv(A)
-        val theta = aInv * DenseVector(bvec)
-        (node, q, theta.toArray, aInv.toArray)
-      }
-    }.toDF(nodeCol, cols.query, "theta", "ainv")
-    val solvedAll = solved.cache()
-    solvedAll.count()
-
-    nodePaths.map { p =>
-      p -> new ULinUCB(alpha, cols).restore(
-        solvedAll.filter(F.col(nodeCol) === p).drop(nodeCol),
-        featsAll.filter(F.col(nodeCol) === p).drop(nodeCol), d)
-    }.toMap
-  }
-}

@@ -1,6 +1,8 @@
 package graft.text
 
+import graft.core.Persist
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Byte-pair-encoding tokenizer training + encoding (Sennrich, Haddow &
   * Birch 2016, "Neural Machine Translation of Rare Words with Subword
@@ -138,6 +140,11 @@ object Bpe {
       .toDF("syms", "n")
       .persist()
     seqs.count()
+    // seqs is a cached frame, or every 8th round a checkpoint, which
+    // `unpersist()` does not free
+    def release(df: DataFrame): Unit =
+      if (df.queryExecution.logical.isInstanceOf[LogicalRDD]) Persist.releaseCheckpoint(df)
+      else df.unpersist()
     val out = Seq.newBuilder[(String, String, Long)]
     var step = 0
     var done = false
@@ -165,12 +172,13 @@ object Bpe {
         // otherwise rebuild the whole merge history on every job
         val mat = if ((step + 1) % 8 == 0) next.localCheckpoint() else next
         mat.count()
-        seqs.unpersist()
+        if (mat ne next) next.unpersist()
+        release(seqs)
         seqs = mat
         step += 1
       }
     }
-    seqs.unpersist()
+    release(seqs)
     out.result()
   }
 

@@ -1,11 +1,13 @@
 package graft
 
+import graft.core.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for specs; mirrors the reference's tiny-fixture
-  * golden-value style (SURVEY §5). */
+  * golden-value style (SURVEY §5). The session comes from the library's
+  * factory, so specs run the config that library users get. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -21,13 +23,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.build(appName = "graft-test", master = "local[4]")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,7 +1,8 @@
 package graft.core
 
 import graft.SparkSpec
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.execution.LogicalRDD
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -519,5 +520,48 @@ class GraphSpec extends SparkSpec {
       yield (u, (u * 13 + k * 7) % 40)).filter(e => e._1 != e._2)
     assert(links(edges, minCommon = 2L, parts = 1)
       == links(edges, minCommon = 2L, parts = 11))
+  }
+
+  /** Run `op`, compute its result, and return the ids of the RDDs it left
+    * persisted beyond the checkpoints the result itself reads (the
+    * PersistSpec count). Those are then released too. */
+  private def leftBehind(op: => DataFrame): Set[Int] = {
+    val sc = spark.sparkContext
+    val mark = sc.emptyRDD[Int].id
+    val out = op
+    assert(out.collect().nonEmpty, "the result must still compute after the releases")
+    val owned = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val left = sc.getPersistentRDDs.keySet.filter(_ > mark).toSet -- owned
+    Persist.releaseCheckpoint(out)
+    left
+  }
+
+  // a pseudo-random graph plus a K5, so every core, truss and triangle
+  // result is non-empty
+  private def graphEdges = ((for (u <- 0L until 30L; k <- 1L to 3L)
+    yield (u, (u * 11 + k * 5) % 30)).filter(e => e._1 != e._2) ++
+    (for (a <- 100L to 104L; b <- a + 1 to 104L) yield (a, b))).toDF("src", "dst")
+
+  test("pageRank, labelPropagation, kCore and shortestPaths release their superseded checkpoints") {
+    val e = graphEdges
+    val seeds = Seq(0L, 7L).toDF("node")
+    val weighted = e.withColumn("weight", F.col("src") % 3 + 1)
+    assert(leftBehind(Graph.pageRank(e, iterations = 4)).isEmpty)
+    assert(leftBehind(Graph.labelPropagation(e, iterations = 4)).isEmpty)
+    assert(leftBehind(Graph.kCore(e, k = 3L)).isEmpty)
+    assert(leftBehind(Graph.shortestPaths(weighted, seeds)).isEmpty)
+  }
+
+  test("the other iterative graph operators release their superseded checkpoints") {
+    val e = graphEdges
+    val seeds = Seq(0L, 7L).toDF("node")
+    val weighted = e.withColumn("weight", F.col("src") % 3 + 1)
+    assert(leftBehind(Graph.personalizedPageRank(e, seeds)).isEmpty)
+    assert(leftBehind(Graph.pageRankWeighted(weighted)).isEmpty)
+    assert(leftBehind(Graph.hits(e)).isEmpty)
+    assert(leftBehind(Graph.triangleCounts(e)).isEmpty)
+    assert(leftBehind(Graph.bfsDistances(e, seeds, maxDepth = 3)).isEmpty)
+    assert(leftBehind(Graph.kTruss(e, k = 3)).isEmpty)
+    assert(leftBehind(Graph.coreNumbers(e, maxK = 4)).isEmpty)
   }
 }

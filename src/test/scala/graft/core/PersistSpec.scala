@@ -5,9 +5,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
+import graft.models.CatPopRec
 import graft.preprocessing.InteractionEntriesFilter
 import graft.streaming.StreamingOps
-import graft.text.Dedup
+import graft.text.{Bpe, Dedup}
 
 class PersistSpec extends SparkSpec {
   import spark.implicits._
@@ -88,5 +89,24 @@ class PersistSpec extends SparkSpec {
     } finally q.stop()
     assert(spark.read.parquet(snap).count() == 3)
     assert(persistedSince(m).isEmpty, persistedSince(m))
+  }
+
+  test("distributed BPE training and CatPopRec's closure release their superseded frames") {
+    val words = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")
+    val corpus = Seq((0L, words.mkString(" "))).toDF("doc_id", "text")
+    val m = mark()
+    val merges = Bpe.train(corpus, numMerges = 12, maxCollectWords = 0)
+    assert(merges.count() >= 8, "the merge loop must reach its checkpoint round")
+    assert(persistedSince(m).isEmpty, persistedSince(m))
+
+    val tree = Seq(("root", null: String), ("a", "root"), ("b", "root"),
+      ("a1", "a"), ("a2", "a")).toDF("category", "parent_cat")
+    val m2 = mark()
+    val closure = new CatPopRec(tree, Seq((0L, "a1")).toDF("item_id", "category"))
+      .leafClosure
+    assert(closure.count() == 8)
+    Persist.releaseCheckpoint(closure)
+    assert(persistedSince(m2).isEmpty, persistedSince(m2))
   }
 }

@@ -139,41 +139,6 @@ class ULinUCBSpec extends SparkSpec {
     assert(hb.toSeq == ha.toSeq)
   }
 
-  test("ULinUCB.fitBatch: per-node state is value-identical to node-by-node fits") {
-    // r14 (the hierarchical leaf-level batching): the batched multi-node
-    // fit must reproduce each node's individual fit EXACTLY — the prefix
-    // windows and groupBy keys are node-scoped, so no cross-node row can
-    // perturb a node's sums.
-    val log = (1L to 30L).flatMap { q =>
-      (0 until 4).map(j => (q, (q * 5 + j * 7) % 16, ((q + j) % 3).toDouble))
-    }.toDF("query_id", "item_id", "rating")
-    val feats = (0L until 16L).map(i =>
-      (i, (i % 4).toDouble, (i % 5).toDouble)).toDF("item_id", "f1", "f2")
-    // two "nodes": disjoint item slices (the hierarchical leaf shape)
-    val itemsA = feats.filter($"item_id" < 8)
-    val itemsB = feats.filter($"item_id" >= 8)
-    val sliceA = log.filter($"item_id" < 8)
-    val sliceB = log.filter($"item_id" >= 8)
-    val tagged = sliceA.select(F.lit("/a").as("_nodep"), $"item_id", $"query_id", $"rating")
-      .unionByName(sliceB.select(F.lit("/b").as("_nodep"), $"item_id", $"query_id", $"rating"))
-    val taggedFeats = itemsA.select(F.lit("/a").as("_nodep"), $"item_id", $"f1", $"f2")
-      .unionByName(itemsB.select(F.lit("/b").as("_nodep"), $"item_id", $"f1", $"f2"))
-    val batched = ULinUCB.fitBatch(tagged, taggedFeats, "_nodep",
-      Seq("/a", "/b"), alpha = -2.0, cols = RecCols())
-    val single = Map(
-      "/a" -> new ULinUCB(alpha = -2.0).fit(sliceA, itemsA),
-      "/b" -> new ULinUCB(alpha = -2.0).fit(sliceB, itemsB))
-    for (p <- Seq("/a", "/b")) {
-      def norm(m: ULinUCB) = m.userState.collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getSeq[Double](2)))
-        .sortBy(_._1).toSeq
-      assert(norm(batched(p)) == norm(single(p)), s"node $p state diverged")
-      def rel(m: ULinUCB) = m.relevance(log).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(rel(batched(p)) == rel(single(p)), s"node $p relevance diverged")
-    }
-  }
-
   test("HierarchicalRecommender routes each user inside one root cluster, ≤k, seen-filtered") {
     val log = (1L to 40L).flatMap { q =>
       (0 until 3).map(j => (q, (q * 7 + j * 13) % 20, ((q + j) % 2).toDouble))
