@@ -2114,7 +2114,7 @@ object SparkEntry {
     }),
     "model_item_knn_bm25" -> ((s, d) => {
       // bm25-weighted variant (knn.py:92-156). Weights are ppm-quantized
-      // to exact BIGINTs inside the fit (ItemKNN.doFit), so dots/norms are
+      // to exact BIGINTs inside the fit (ItemKNN.cells), so dots/norms are
       // exact integer sums and the cosine is one deterministic IEEE
       // expression — the ranking needs no round-before-rank, and the
       // output is floor-ppm (exact BIGINT), killing the round-boundary
@@ -4926,7 +4926,7 @@ object SparkEntry {
          |  FROM filt) WHERE rn <= 3""".stripMargin,
     // bm25 weights mirrored term-by-term (same operand order as
     // ItemKNN.reweight), then floor-ppm quantized to exact BIGINTs like
-    // the engine (ItemKNN.doFit): dots and norm² are exact integer sums,
+    // the engine (ItemKNN.cells): dots and norm² are exact integer sums,
     // the cosine one deterministic IEEE expression, output floor-ppm.
     "model_item_knn_bm25" ->
       s"""$interactionsSql,

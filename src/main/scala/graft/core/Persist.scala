@@ -33,6 +33,16 @@ object Persist {
     out
   }
 
+  /** `next`, after releasing `old`, the frame it replaces. A `cache()` of
+    * the plan `old` was cached from reuses its cache entry (a refit on the
+    * same input), so that entry stays for `next`. */
+  private[graft] def replace(old: DataFrame, next: DataFrame): DataFrame = {
+    if (old != null &&
+        !old.queryExecution.analyzed.sameResult(next.queryExecution.analyzed))
+      old.unpersist()
+    next
+  }
+
   /** Free the blocks of `localCheckpoint`ed frames. `Dataset.unpersist`
     * does not: the checkpoint is no CacheManager entry but a persisted RDD
     * under the frame's `LogicalRDD`, which stays in `getPersistentRDDs`.

@@ -1,8 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
+import graft.core.Persist
 
 /** Content-based item KNN (engine extra — the reference's neighbour
   * family is purely collaborative; this is the COLD-ITEM complement: an
@@ -24,11 +23,12 @@ import graft.core.Ops
   * Scale: the feature self-join is the hazard transposed once more — a
   * near-universal feature (every item shares "lang:en") contributes
   * |audience|² pairs. `maxFeatureAudience` caps each feature's
-  * contribution to a deterministic pseudo-random item subset before the
-  * join (the UserKNN discipline; the SQL oracles assume the cap does not
-  * bind on gate data — drop universal features upstream, they carry no
-  * signal and quadratic cost). Pair generation is upper-triangle then
-  * symmetrized; the per-item crop bounds predict's fan-out. */
+  * contribution with [[ItemKNN.cap]] before the join (the SQL oracles
+  * assume it does not bind, see there — drop universal features upstream,
+  * they carry no signal and quadratic cost). The similarity comes from the
+  * family's cosine kernel ([[ItemKNN.stats]] → [[ItemKNN.topK]]) with the
+  * feature as the join key: upper-triangle pairs, symmetrized; the
+  * per-item crop bounds predict's fan-out. */
 final class ContentKNN(
     val numNeighbours: Int = 10,
     val shrink: Double = 0.0,
@@ -44,46 +44,18 @@ final class ContentKNN(
 
   /** Build the content similarity state from (item, feature) rows. */
   def fitFeatures(feats: DataFrame): this.type = {
-    val base = feats.select(F.col(cols.item), F.col("feature"))
-      .distinct().cache()
-    // r13 (guide §2.4): when the cap window is active it feeds norms + both
-    // self-join sides — cache once instead of running it three times (the
-    // uncapped branch is `base`, already cached).
-    val capped = (if (maxFeatureAudience > 0) {
-      val w = Window.partitionBy("feature").orderBy(
-        F.xxhash64(F.col(cols.item), F.col("feature")),
-        F.col(cols.item).asc)
-      base.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= maxFeatureAudience).drop("_rn")
-    } else base).cache()
-    val norms = capped.groupBy(cols.item)
-      .agg(F.sqrt(F.count(F.lit(1)).cast("double")).as("_norm"))
-    val l = capped.select(F.col("feature"), F.col(cols.item).as("item_one"))
-    val r = capped.select(F.col("feature"), F.col(cols.item).as("item_two"))
-    val dots = l.join(r, Seq("feature"))
-      .filter(F.col("item_one") < F.col("item_two"))
-      .groupBy("item_one", "item_two")
-      .agg(F.count(F.lit(1)).cast("double").as("_dot"))
-    // r13 (guide §2.4): `half` feeds both symmetrization branches — cached
-    // so the feature-Gram join+aggregation runs once, released after crop.
-    val half = dots
-      .join(norms.withColumnRenamed(cols.item, "item_one")
-        .withColumnRenamed("_norm", "_n1"), Seq("item_one"))
-      .join(norms.withColumnRenamed(cols.item, "item_two")
-        .withColumnRenamed("_norm", "_n2"), Seq("item_two"))
-      .select(F.col("item_one"), F.col("item_two"),
-        (F.col("_dot") / (F.col("_n1") * F.col("_n2") + F.lit(shrink)))
-          .as("similarity"))
-      .cache()
-    val sym = half.unionByName(half.select(
-      F.col("item_two").as("item_one"), F.col("item_one").as("item_two"),
-      F.col("similarity")))
-    materialize(Ops.getTopKRecsBounded(
-      sym, numNeighbours, "item_one", "item_two", "similarity"))
-    half.unpersist()
-    if (capped ne base) capped.unpersist() // scratch; state = similarity+base
-    features = base
-    fitItemsDf = base.select(F.col(cols.item)).distinct().cache()
+    features = Persist.replace(features,
+      Persist.leaf(feats.select(F.col(cols.item), F.col("feature")).distinct()))
+    fitItemsDf = Persist.replace(fitItemsDf,
+      features.select(F.col(cols.item)).distinct().cache())
+    // r13 (guide §2.4): the capped cells feed norms + both self-join sides —
+    // cache once instead of running the cap window three times.
+    val cells = ItemKNN.cap(features, "feature", Seq(cols.item, "feature"),
+      cols.item, maxFeatureAudience).withColumn("_v", F.lit(1L)).cache()
+    val (pairs, dfs) = ItemKNN.stats(cells, "feature", cols.item, "item_one", "item_two")
+    ItemKNN.topK(pairs, dfs, cols.item, "item_one", "item_two", numNeighbours,
+      shrink)(materialize)
+    cells.unpersist() // scratch; state = similarity + features
     this
   }
 

@@ -2,7 +2,6 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
 
 /** P³ / RP³β random-walk recommender (engine extra — Cooper et al.,
   * WWW 2014 "Random Walks in Recommender Systems"; Paudel et al., TiiS
@@ -27,7 +26,7 @@ import graft.core.Ops
   *
   * Scale: the user self-join is the ItemKNN Gram hazard and is bounded the
   * same two ways — `maxUserHistory` caps each user's pair fan-out
-  * (portable xxhash64 subset, unbiased w.r.t. item ids), and
+  * ([[ItemKNN.cap]]; the SQL oracles assume it does not bind), and
   * `topKNeighbours` crops the walk matrix per source item before predict,
   * so the history⋈similarity join streams a bounded per-item fan-out.
   * Pair generation is item₁ < item₂ then both directions emitted from the
@@ -52,14 +51,9 @@ final class P3AlphaRec(
   var trainPairs: DataFrame = _
 
   protected def doFit(log: DataFrame): Unit = {
-    val base = log.select(F.col(cols.query), F.col(cols.item)).distinct()
-    val capped = (if (maxUserHistory > 0) {
-      val w = Window.partitionBy(cols.query).orderBy(
-        F.xxhash64(F.col(cols.query), F.col(cols.item)),
-        F.col(cols.item).asc)
-      base.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= maxUserHistory).drop("_rn")
-    } else base).cache()
+    val capped = ItemKNN.cap(
+      log.select(F.col(cols.query), F.col(cols.item)).distinct(),
+      cols.query, Seq(cols.query, cols.item), cols.item, maxUserHistory).cache()
     // r13 (guide §2.4): `capped` feeds FIVE subtrees of the fit plan (du,
     // di, both self-join sides, trainPairs) — uncached, each re-ran the
     // scan→distinct→cap-window chain. One cache = one computation; the

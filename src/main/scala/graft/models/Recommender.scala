@@ -22,9 +22,11 @@ final case class RecCols(
   * [[graft.core.Persist.leaf]] (reference `cache().count()`,
   * pop_rec.py:135), so predict never recomputes it and its plan is one
   * `Scan ExistingRDD` node however many refits built it. Ownership: the
-  * model owns its state and memos; a refit drops the memos derived from the
-  * old state, and the caller that replaces or discards a model releases
-  * the old state frames with `unpersist()`.
+  * model owns its state and memos. A refit of the same instance releases
+  * the state frames it replaces ([[graft.core.Persist.replace]]) and drops
+  * the memos derived from the old state; the caller that discards a model,
+  * or replaces it with another instance, releases that model's state with
+  * `unpersist()`.
   */
 abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializable {
   protected[models] var fitQueriesDf: DataFrame = _
@@ -38,8 +40,8 @@ abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializab
 
   def fit(log: DataFrame): this.type = {
     // distinct entity frames, broadcast later by AQE (base_rec.py:99-137)
-    fitQueriesDf = log.select(cols.query).distinct().cache()
-    fitItemsDf = log.select(cols.item).distinct().cache()
+    fitQueriesDf = Persist.replace(fitQueriesDf, log.select(cols.query).distinct().cache())
+    fitItemsDf = Persist.replace(fitItemsDf, log.select(cols.item).distinct().cache())
     doFit(log)
     this
   }
@@ -226,7 +228,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     require(coldWeight > 0 && coldWeight <= 1,
       s"coldWeight must be in (0, 1], got $coldWeight")
     fillCache = None
-    itemPopularity = Persist.leaf(state)
+    itemPopularity = Persist.replace(itemPopularity, Persist.leaf(state))
   }
 
   /** The popularity table restricted to a candidate set: right join +
@@ -448,7 +450,7 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
 
   protected def materialize(state: DataFrame): Unit = {
     releasePairScores() // the memo scored the previous similarity table
-    similarity = Persist.leaf(state)
+    similarity = Persist.replace(similarity, Persist.leaf(state))
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,

@@ -1,8 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
 
 /** Weighted Slope One rating predictor (Lemire & Maclachlan, SDM 2005 —
   * engine extra: with [[BiasModel]] it completes the classic
@@ -20,7 +18,8 @@ import graft.core.Ops
   *
   * Scale: the deviation table is the item×item co-occurrence hazard —
   * the SAME self-join as ItemKNN's Gram, bounded the same way
-  * (`maxUserHistory` caps each user's pair fan-out; upper-triangle then
+  * (`maxUserHistory` caps each user's pair fan-out with [[ItemKNN.cap]],
+  * which the SQL oracles assume does not bind; upper-triangle then
   * antisymmetrized, halving the shuffle: dev(i→j) = −dev(j→i)).
   * Prediction is one equi-join of the user's history onto the deviation
   * table plus one aggregation; candidates are automatically restricted
@@ -40,13 +39,8 @@ final class SlopeOne(
     val base = log.groupBy(cols.query, cols.item)
       .agg(F.expr(s"sum(floor(${cols.rating} * 1e6)) div count(*)")
         .cast("long").as("_r"))
-    if (maxUserHistory > 0) {
-      val w = Window.partitionBy(cols.query).orderBy(
-        F.xxhash64(F.col(cols.query), F.col(cols.item)),
-        F.col(cols.item).asc)
-      base.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= maxUserHistory).drop("_rn")
-    } else base
+    ItemKNN.cap(base, cols.query, Seq(cols.query, cols.item), cols.item,
+      maxUserHistory)
   }
 
   /** Upper-triangle (item_from, item_to, n, dev_ppm) from a capped base. */

@@ -1,16 +1,16 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
+import graft.core.Persist
 
 /** User-user cosine KNN (engine extra — the reference ships only the
   * item-based neighbour model, replay/models/knn.py:74-229; this is its
   * exact transpose, the other classic memory-based CF baseline).
   *
-  * fit: binary user vectors over distinct (user, item) pairs, dot products
-  * via a self-join on the ITEM key (user1 < user2 then symmetrized —
-  * halves the shuffle, same discipline as ItemKNN), cosine with shrinkage
+  * fit: binary user vectors over distinct (user, item) pairs through the
+  * family's cosine kernel ([[ItemKNN.stats]] → [[ItemKNN.topK]]) with the
+  * ITEM as the join key: dot products via a self-join on the item (user1 <
+  * user2 then symmetrized), cosine with shrinkage
   * sim = dot / (‖u‖·‖v‖ + shrink), then a per-user top-`numNeighbours`
   * bounded crop. Unweighted sums are exact integer counts, so the
   * similarity needs no rounding before the crop (the ItemKNN rule).
@@ -22,10 +22,9 @@ import graft.core.Ops
   *
   * Scale: the item self-join is the hazard (a catalog blockbuster with
   * 10⁶ consumers would contribute 10¹² pairs) — `maxItemAudience` caps
-  * each item's contribution to a deterministic pseudo-random subset
-  * before the join, the transpose of ItemKNN's maxUserHistory cap, and
-  * the same NOTE applies: the SQL oracles assume the cap does not bind
-  * on gate data. */
+  * each item's contribution with [[ItemKNN.cap]] before the join, the
+  * transpose of ItemKNN's maxUserHistory cap (the SQL oracles assume it
+  * does not bind, see there). */
 final class UserKNN(
     val numNeighbours: Int = 10,
     val shrink: Double = 0.0,
@@ -38,46 +37,22 @@ final class UserKNN(
   var trainPairs: DataFrame = _
 
   protected def doFit(log: DataFrame): Unit = {
-    val base = log.select(cols.query, cols.item).distinct().cache()
-    // r13 (guide §2.4): `capped` feeds norms + both self-join sides — cache
-    // once instead of re-running the audience-cap window three times.
-    val capped = (if (maxItemAudience > 0) {
-      val w = Window.partitionBy(cols.item).orderBy(
-        F.xxhash64(F.col(cols.query), F.col(cols.item)),
-        F.col(cols.query).asc)
-      base.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= maxItemAudience).drop("_rn")
-    } else base).cache()
-
-    val norms = capped.groupBy(cols.query)
-      .agg(F.sqrt(F.count(F.lit(1)).cast("double")).as("_norm"))
-    val l = capped.select(F.col(cols.item), F.col(cols.query).as("query_one"))
-    val r = capped.select(F.col(cols.item), F.col(cols.query).as("query_two"))
-    val dots = l.join(r, Seq(cols.item))
-      .filter(F.col("query_one") < F.col("query_two"))
-      .groupBy("query_one", "query_two")
-      .agg(F.count(F.lit(1)).cast("double").as("_dot"))
-    // r13 (guide §2.4): `half` feeds both symmetrization branches — cached
-    // so the Gram join+aggregation runs once, released after the crop.
-    val half = dots
-      .join(norms.withColumnRenamed(cols.query, "query_one")
-        .withColumnRenamed("_norm", "_n1"), Seq("query_one"))
-      .join(norms.withColumnRenamed(cols.query, "query_two")
-        .withColumnRenamed("_norm", "_n2"), Seq("query_two"))
-      .select(F.col("query_one"), F.col("query_two"),
-        (F.col("_dot") / (F.col("_n1") * F.col("_n2") + F.lit(shrink)))
-          .as("similarity"))
-      .cache()
-    val sym = half.unionByName(half.select(
-      F.col("query_two").as("query_one"), F.col("query_one").as("query_two"),
-      F.col("similarity")))
-    similarity = Ops.getTopKRecsBounded(sym, numNeighbours,
-      "query_one", "query_two", "similarity").cache()
-    similarity.count()
-    half.unpersist()
-    trainPairs = base
-    trainPairs.count()
-    if (capped ne base) capped.unpersist() // scratch; state = similarity+base
+    trainPairs = Persist.replace(trainPairs,
+      Persist.leaf(log.select(cols.query, cols.item).distinct()))
+    // r13 (guide §2.4): the capped cells feed norms + both self-join sides —
+    // cache once instead of re-running the audience-cap window three times.
+    val cells = ItemKNN.cap(trainPairs, cols.item, Seq(cols.query, cols.item),
+      cols.query, maxItemAudience).withColumn("_v", F.lit(1L)).cache()
+    val (pairs, dfs) = ItemKNN.stats(cells, cols.item, cols.query, "query_one", "query_two")
+    // a cached frame, not a leaf: its plan shows the crop (PlanSpec), and
+    // UserKNN has no stats refit whose plans could nest
+    ItemKNN.topK(pairs, dfs, cols.query, "query_one", "query_two", numNeighbours,
+      shrink) { crop =>
+      val next = crop.cache()
+      next.count()
+      similarity = Persist.replace(similarity, next)
+    }
+    cells.unpersist() // scratch; state = similarity + trainPairs
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,

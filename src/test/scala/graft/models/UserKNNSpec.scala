@@ -46,6 +46,15 @@ class UserKNNSpec extends SparkSpec {
     val b = it.similarity.orderBy("item_one", "item_two")
       .as[(Long, Long, Double)].collect().toSeq
     assert(a == b)
+    // ContentKNN is ItemKNN with features in the users' role: over a
+    // feature table f, ContentKNN(f) equals ItemKNN(f with feature as query)
+    val f = log.select(F.col("item_id"), F.col("query_id").as("feature"))
+    val c = new ContentKNN(numNeighbours = 3, maxFeatureAudience = 0).fitFeatures(f)
+    val ik = new ItemKNN(numNeighbours = 3, maxUserHistory = 0)
+      .fit(f.withColumnRenamed("feature", "query_id"))
+    def cells(s: org.apache.spark.sql.DataFrame) = s.orderBy("item_one", "item_two")
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(cells(c.similarity) == cells(ik.similarity))
   }
 
   test("predictPairs scores pairs, zero for out-of-neighbourhood") {
