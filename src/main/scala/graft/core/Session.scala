@@ -5,9 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one session factory (reference: replay/utils/session_handler.py:22-101).
   * The library, the benchmarks, the oracle dump (Verify) and the specs all
   * build their session here, so every one of them runs the same config:
-  * one shuffle partition per core, Kryo, UTC and a high hash-aggregate
-  * fallback threshold. AQE (runtime re-plan, skew-join splitting, partition
-  * coalescing) is on by Spark's own default.
+  * one shuffle partition per core, Kryo, UTC, a high hash-aggregate
+  * fallback threshold and a 1000-entry generated-class cache. AQE
+  * (runtime re-plan, skew-join splitting, partition coalescing) is on by
+  * Spark's own default.
   *
   * The reference sizes shuffle partitions at 3× cores. graft uses 1×: at
   * sf0.1/local[32] it measured 28 % faster than 3×, because single-JVM
@@ -48,6 +49,11 @@ object Session {
       // maxSeen ≫ 10⁴) should lower this threshold or stay on the
       // rank-window path, which spills.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 22).toString)
+      // generated-class cache (a static conf: it takes effect only for the
+      // first session of a JVM). One perfbench batch loop compiles ~300
+      // classes; at Spark's 100 entries a second loop in the same JVM
+      // recompiled 310 of them, at 1000 none.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -2,6 +2,7 @@ package graft.models
 
 import breeze.linalg.{inv, DenseMatrix}
 import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.core.Persist
 
 /** EASE — Embarrassingly Shallow Autoencoder (Steck, WWW 2019,
   * arXiv:1905.03375): the closed-form item-item linear model that is the
@@ -145,6 +146,8 @@ final class Ease(
       oj += 1
     }
     import spark.implicits._
+    // this path fits from cells alone: its fit items are the Gram's items
+    fitItemsDf = Persist.replace(fitItemsDf, Persist.leaf(itemIds.toSeq.toDF(cols.item)))
     materialize(out.toSeq.toDF("item_one", "item_two", "similarity"))
     this
   }

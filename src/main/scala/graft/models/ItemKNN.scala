@@ -1,6 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.storage.StorageLevel
 import graft.core.{Ops, Persist}
 
 /** Item-item cosine KNN (reference: replay/models/knn.py:74-229).
@@ -196,8 +197,12 @@ object ItemKNN {
   private[models] def topK(pairs: DataFrame, dfs: DataFrame, entity: String,
       one: String, two: String, k: Int, shrink: Double)(
       keep: DataFrame => Unit): Unit = {
-    val norms = dfs.select(F.col(entity),
-      F.sqrt(F.col("df").cast("double")).as("_norm"))
+    // both pair sides join the norms: a lazy `dfs` (a fit's aggregation)
+    // is cached for the crop, so it shuffles once, not once per side; a
+    // cached one (persisted co-stats) is read as it is
+    val lazyDfs = dfs.storageLevel == StorageLevel.NONE
+    val norms0 = dfs.select(F.col(entity), F.sqrt(F.col("df").cast("double")).as("_norm"))
+    val norms = if (lazyDfs) norms0.cache() else norms0
     // r13 (guide §2.4): `half` feeds both symmetrization branches — cached
     // so the Gram join+aggregation runs once, released after the crop.
     val half = pairs
@@ -220,5 +225,6 @@ object ItemKNN {
     // (similarity desc, two asc) order matches.
     keep(Ops.getTopKRecsBounded(sym, k, one, two, "similarity"))
     half.unpersist()
+    if (lazyDfs) norms.unpersist()
   }
 }

@@ -2,6 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import java.nio.file.{Files, Paths}
+import graft.core.Persist
 
 /** Model persistence (reference: replay/utils/model_handler.py:42-118 +
   * spark_utils.py:789-818 — the reference pickles params into a 1-row
@@ -214,7 +215,9 @@ object ModelIO {
       case other => throw new IllegalArgumentException(s"unknown neighbour kind $other")
     }
     m.similarity = spark.read.parquet(s"$path/similarity").cache()
-    m.fitItemsDf = m.similarity.select(F.col("item_one").as(m.cols.item)).distinct()
+    // both sides: predict's seen filter needs every item_two among them
+    m.fitItemsDf = Persist.leaf(m.similarity.select(F.col("item_one").as(m.cols.item))
+      .union(m.similarity.select(F.col("item_two").as(m.cols.item))).distinct())
     m
   }
 
@@ -628,7 +631,7 @@ object ModelIO {
       maxFeatureAudience = p.getOrElse("maxFeatureAudience", "1000").toInt)
     m.similarity = spark.read.parquet(s"$path/similarity").cache()
     m.features = spark.read.parquet(s"$path/features").cache()
-    m.fitItemsDf = m.features.select(F.col(m.cols.item)).distinct()
+    m.fitItemsDf = Persist.leaf(m.features.select(F.col(m.cols.item)).distinct())
     m
   }
 

@@ -22,9 +22,11 @@ final case class RecCols(
   * [[graft.core.Persist.leaf]] (reference `cache().count()`,
   * pop_rec.py:135), so predict never recomputes it and its plan is one
   * `Scan ExistingRDD` node however many refits built it. Ownership: the
-  * model owns its state and memos. A refit of the same instance releases
-  * the state frames it replaces ([[graft.core.Persist.replace]]) and drops
-  * the memos derived from the old state; the caller that discards a model,
+  * model owns its state and memos, and the one scratch frame its last
+  * predict cached. A refit of the same instance releases the state frames
+  * it replaces ([[graft.core.Persist.replace]]) and drops the memos
+  * derived from the old state; a predict releases the previous predict's
+  * scratch frame, a refit the last one. The caller that discards a model,
   * or replaces it with another instance, releases that model's state with
   * `unpersist()`.
   */
@@ -39,11 +41,31 @@ abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializab
   protected def doFit(log: DataFrame): Unit
 
   def fit(log: DataFrame): this.type = {
+    releaseScratch()
     // distinct entity frames, broadcast later by AQE (base_rec.py:99-137)
     fitQueriesDf = Persist.replace(fitQueriesDf, log.select(cols.query).distinct().cache())
-    fitItemsDf = Persist.replace(fitItemsDf, log.select(cols.item).distinct().cache())
+    fitItemsDf = Persist.replace(fitItemsDf, keepFitItems(log.select(cols.item).distinct()))
     doFit(log)
     this
+  }
+
+  /** How [[fit]] keeps the distinct fit items: a lazy `cache()`, which a
+    * refit on the same input shares. */
+  protected def keepFitItems(items: DataFrame): DataFrame = items.cache()
+
+  private var scratch: DataFrame = _
+
+  /** `df`, cached as this model's predict scratch frame; the previous
+    * predict's scratch frame is released. Releasing it cannot break that
+    * predict's lazy result: a plan whose cache is gone recomputes it. */
+  protected def keepScratch(df: DataFrame): DataFrame = {
+    scratch = Persist.replace(scratch, df.cache())
+    scratch
+  }
+
+  private def releaseScratch(): Unit = {
+    if (scratch != null) scratch.unpersist()
+    scratch = null
   }
 
   /** Restrict an item-keyed state frame to a candidate item set
@@ -85,7 +107,7 @@ abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializab
     // instead of evicting the executors.
     val recs =
       if (filterSeen) {
-        val seenPairs = history.select(cols.query, cols.item).distinct().cache()
+        val seenPairs = keepScratch(history.select(cols.query, cols.item).distinct())
         val maxSeen = seenPairs.groupBy(cols.query)
           .agg(F.count(F.lit(1)).as("_n"))
           .agg(F.max("_n")).first() match {
@@ -283,8 +305,8 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
-    val seenCnt = history.groupBy(cols.query)
-      .agg(F.countDistinct(cols.item).as("_seen")).cache()
+    val seenCnt = keepScratch(history.groupBy(cols.query)
+      .agg(F.countDistinct(cols.item).as("_seen")))
     val maxSeen = seenCnt.agg(F.max("_seen")).first() match {
       case r if r.isNullAt(0) => 0L
       case r                  => r.getLong(0)
@@ -298,8 +320,8 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
       .drop("_rank", "_seen")
     val unseen = cand.join(history.select(cols.query, cols.item).distinct(),
       Seq(cols.query, cols.item), "left_anti")
-    // seenCnt stays cached: it feeds both the maxSeen action above and the
-    // (lazy) candidate plan — unpersisting here would force a recompute.
+    // seenCnt stays cached until the next predict or refit: it feeds both
+    // the maxSeen action above and the (lazy) candidate plan.
     Ops.getTopKRecs(unseen, k, cols.query, cols.item, cols.rating)
   }
 
@@ -330,8 +352,8 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val seenCnt =
       if (filterSeen)
-        history.groupBy(cols.query)
-          .agg(F.countDistinct(cols.item).as("_seen")).cache()
+        keepScratch(history.groupBy(cols.query)
+          .agg(F.countDistinct(cols.item).as("_seen")))
       else null
     val maxSeen =
       if (filterSeen) seenCnt.agg(F.max("_seen")).first() match {
@@ -443,6 +465,22 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
 /** Models whose state is an item-item similarity table; prediction is
   * "sum of similarities of my seen items to the candidate"
   * (reference: base_neighbour_rec.py:55-127).
+  *
+  * Predict shuffles once. The requested users' history rows (repeat
+  * purchases count) are repartitioned by query; everything after that is
+  * local to a query's partition: a broadcast join onto the similarity
+  * table, the per-(query, candidate) sum and the top-k window, whose
+  * clustering on the query the repartition already satisfies.
+  *
+  * The seen filter needs no anti-join and no second scan of the log. The
+  * broadcast side also carries one SELF ROW `(item, item, null)` per fit
+  * item, so a history item that reaches itself lands in its own candidate
+  * group; `sum` skips the null, so scores are unchanged, and a group with
+  * more rows than similarities (`count(1) > count(similarity)`) is a seen
+  * item and is dropped. This needs every `item_two` of the similarity in
+  * [[fitItems]], which every fit path and the loader keep as a
+  * materialized [[graft.core.Persist.leaf]]: its real size lets the planner
+  * broadcast the side by size, as before.
   */
 abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
   /** (item_one, item_two, similarity) — materialized by doFit. */
@@ -452,6 +490,10 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
     releasePairScores() // the memo scored the previous similarity table
     similarity = Persist.replace(similarity, Persist.leaf(state))
   }
+
+  /** The fit items are the seen filter's self rows: a leaf, so the
+    * broadcast side's size estimate is real. */
+  override protected def keepFitItems(items: DataFrame): DataFrame = Persist.leaf(items)
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,
       items: Option[DataFrame] = None): DataFrame =
@@ -467,23 +509,28 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
-    // candidate restriction: filter the similarity table on the PREDICTED
-    // side before the sum — commutes with the per-item aggregation
-    val sim = items.map(it => similarity.join(
+      .select(F.col(cols.query), F.col(cols.item))
+      .repartition(F.col(cols.query))
+    val selfRows = fitItemsDf.select(F.col(cols.item).as("item_one"),
+      F.col(cols.item).as("item_two"), F.lit(null).cast("double").as("similarity"))
+    val side = if (filterSeen) similarity.unionByName(selfRows) else similarity
+    // candidate restriction: filter the PREDICTED side before the sum —
+    // commutes with the per-item aggregation
+    val sim = items.map(it => side.join(
       it.select(F.col(cols.item).as("item_two")).distinct(),
-      Seq("item_two"), "left_semi")).getOrElse(similarity)
-    // history ⋈ similarity: shuffle on item — the similarity side is
-    // already cropped to top neighbours per item, bounding the fan-out
+      Seq("item_two"), "left_semi")).getOrElse(side)
     // round to 9 decimals before ranking: float sums are partition-order
     // dependent at the last ulp, and an unrounded rating would make
     // "equal" candidates rank differently between runs/layouts
-    var recs = history.select(F.col(cols.query), F.col(cols.item))
+    val rating = F.round(F.sum("similarity"), 9).as(cols.rating)
+    val scored = history
       .join(sim, F.col(cols.item) === F.col("item_one"))
       .groupBy(F.col(cols.query), F.col("item_two").as(cols.item))
-      .agg(F.round(F.sum("similarity"), 9).as(cols.rating))
-    if (filterSeen)
-      recs = recs.join(history.select(cols.query, cols.item).distinct(),
-        Seq(cols.query, cols.item), "left_anti")
+    val recs =
+      if (filterSeen)
+        scored.agg(rating, (F.count(F.lit(1)) > F.count("similarity")).as("_seen"))
+          .filter(!F.col("_seen")).drop("_seen")
+      else scored.agg(rating)
     Ops.getTopKRecs(recs, k, cols.query, cols.item, cols.rating)
   }
 

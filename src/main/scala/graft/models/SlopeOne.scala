@@ -1,6 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.core.Persist
 
 /** Weighted Slope One rating predictor (Lemire & Maclachlan, SDM 2005 —
   * engine extra: with [[BiasModel]] it completes the classic
@@ -66,21 +67,23 @@ final class SlopeOne(
   private def materializeFrom(half0: DataFrame, capped: DataFrame,
       cacheHalf: Boolean): Unit = {
     val half = if (cacheHalf) half0.cache() else half0
-    deviations = half.unionByName(half.select(
+    deviations = Persist.replace(deviations, half.unionByName(half.select(
       F.col("item_to").as("item_from"), F.col("item_from").as("item_to"),
-      F.col("n"), (-F.col("dev_ppm")).as("dev_ppm"))).cache()
+      F.col("n"), (-F.col("dev_ppm")).as("dev_ppm"))).cache())
     deviations.count()
     if (cacheHalf) half.unpersist()
-    ratings = capped.withColumnRenamed("_r", "r_ppm").cache()
+    ratings = Persist.replace(ratings, capped.withColumnRenamed("_r", "r_ppm").cache())
     ratings.count()
   }
 
   protected def doFit(log: DataFrame): Unit = {
-    // r13 (guide §2.4): `capped` feeds both self-join sides and the ratings
-    // state — cache is free here because materializeFrom caches the ratings
-    // (== capped renamed) anyway; this just moves the cache below the
-    // expensive pre-average+cap chain so the pair join reads it too.
-    val capped = cappedBase(log).cache()
+    // r13 (guide §2.4): the ratings state feeds both self-join sides, so
+    // the pair join reads the cached pre-average+cap chain. Cache it once,
+    // as the ratings: a rename-only projection of a cached frame shares
+    // that frame's cache entry, so unpersisting a separately cached
+    // `capped` would drop the ratings' cache too.
+    ratings = Persist.replace(ratings,
+      cappedBase(log).withColumnRenamed("_r", "r_ppm").cache())
     // r14 (guide §1/§2.4, third option after r13 probed cacheHalf both
     // ways): the BATCH fit builds the full ordered-pair deviation table in
     // ONE aggregation — self-join without the upper-triangle filter, both
@@ -91,20 +94,17 @@ final class SlopeOne(
     // are the same exact-integer sums, just grouped directly. The
     // half-based materializeFrom stays for fitFromStats (the incremental/
     // streaming stats contract is the upper triangle).
-    val l = capped.select(F.col(cols.query),
-      F.col(cols.item).as("item_from"), F.col("_r").as("_rf"))
-    val r = capped.select(F.col(cols.query),
-      F.col(cols.item).as("item_to"), F.col("_r").as("_rt"))
-    deviations = l.join(r, Seq(cols.query))
+    val l = ratings.select(F.col(cols.query),
+      F.col(cols.item).as("item_from"), F.col("r_ppm").as("_rf"))
+    val r = ratings.select(F.col(cols.query),
+      F.col(cols.item).as("item_to"), F.col("r_ppm").as("_rt"))
+    deviations = Persist.replace(deviations, l.join(r, Seq(cols.query))
       .filter(F.col("item_from") =!= F.col("item_to"))
       .groupBy("item_from", "item_to")
       .agg(F.count(F.lit(1)).as("n"),
         F.sum(F.col("_rt") - F.col("_rf")).as("dev_ppm"))
-      .cache()
+      .cache())
     deviations.count()
-    ratings = capped.withColumnRenamed("_r", "r_ppm").cache()
-    ratings.count()
-    capped.unpersist() // state lives on in the cached deviations/ratings
   }
 
   // ---- incremental refit (the ItemKNN/EASE discipline) ------------------
@@ -134,8 +134,9 @@ final class SlopeOne(
   def fitFromStats(half: DataFrame, cappedRatings: DataFrame): this.type = {
     materializeFrom(half, cappedRatings.withColumnRenamed("r_ppm", "_r"),
       cacheHalf = true)
-    fitQueriesDf = ratings.select(F.col(cols.query)).distinct().cache()
-    fitItemsDf = ratings.select(F.col(cols.item)).distinct().cache()
+    fitQueriesDf = Persist.replace(fitQueriesDf,
+      ratings.select(F.col(cols.query)).distinct().cache())
+    fitItemsDf = Persist.replace(fitItemsDf, ratings.select(F.col(cols.item)).distinct().cache())
     this
   }
 

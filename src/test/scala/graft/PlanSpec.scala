@@ -94,6 +94,25 @@ class PlanSpec extends SparkSpec {
         df.queryExecution.sparkPlan.toString.take(1500))
   }
 
+  test("ItemKNN predict shuffles once, by query, and plans no anti-join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import spark.implicits._
+    val log = (for (u <- 1L to 40L; i <- 1L to 30L if (u * 7 + i * 3) % 5 < 2)
+      yield (u, i)).toDF("query_id", "item_id")
+    val model = new graft.models.ItemKNN(numNeighbours = 5).fit(log)
+    val df = model.predict(log, 10, queries = Some(Seq(1L, 2L).toDF("query_id")))
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    // the cached model state's own plans sit inside InMemoryRelations, not
+    // among the children walked here
+    val shuffles = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"expected one exchange:\n$plan")
+    assert(shuffles.head.outputPartitioning.toString.contains("query_id"), plan.toString)
+    assert(!plan.toString.contains("LeftAnti"), s"seen filter planned as an anti-join:\n$plan")
+  }
+
   test("entity-set ranks avoid single-partition global windows") {
     // NewUsers/ColdUser splitters and the global item rank use the
     // range-partition + zipWithIndex rank — a Window node here would mean

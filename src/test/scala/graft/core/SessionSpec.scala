@@ -21,6 +21,7 @@ class SessionSpec extends SparkSpec {
     "spark.sql.session.timeZone",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
     "spark.sql.adaptive.enabled",
+    "spark.sql.codegen.cache.maxEntries",
   )
 
   private def childConf(): Map[String, String] = {
@@ -59,6 +60,7 @@ class SessionSpec extends SparkSpec {
     assert(conf("spark.sql.session.timeZone") == "UTC")
     assert(conf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "4194304")
     assert(conf("spark.sql.adaptive.enabled") == "true")
+    assert(conf("spark.sql.codegen.cache.maxEntries") == "1000")
   }
 
   test("the specs' shared session is built by the factory") {

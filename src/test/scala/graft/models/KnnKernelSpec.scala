@@ -148,4 +148,31 @@ class KnnKernelSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
       "a refit left a cached frame of the replaced state behind")
   }
+
+  test("P3AlphaRec and SlopeOne refits release the state they replace") {
+    val sc = spark.sparkContext
+    val mark = sc.emptyRDD[Int].id
+    val p3 = new P3AlphaRec(topKNeighbours = 3)
+    val s1 = new SlopeOne()
+    def state = Seq(p3.similarity, p3.userDegrees, p3.trainPairs, p3.fitQueries, p3.fitItems,
+      s1.deviations, s1.ratings, s1.fitQueries, s1.fitItems)
+    // a repeated input shares the cache entries of the frames it replaces
+    for (in <- Seq(log, log, log.filter($"query_id" <= 5))) {
+      for (m <- Seq(p3, s1)) {
+        m.fit(in)
+        m.fitQueries.count()
+        m.fitItems.count()
+      }
+      assert(state.forall(_.storageLevel.useMemory), "current state must stay cached")
+    }
+    // the incremental path replaces the same frames
+    val (half, ratings) = s1.mergeStats(s1.coStats(log.filter($"query_id" <= 3)),
+      s1.coStats(log.filter($"query_id" > 3)))
+    s1.fitFromStats(half, ratings)
+    s1.fitQueries.count()
+    s1.fitItems.count()
+    state.foreach(_.unpersist())
+    assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
+      "a refit left a cached frame of the replaced state behind")
+  }
 }

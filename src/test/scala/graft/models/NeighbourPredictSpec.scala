@@ -1,0 +1,166 @@
+package graft.models
+
+import java.nio.file.Files
+
+import graft.SparkSpec
+import graft.core.Ops
+import org.apache.spark.sql.{DataFrame, functions => F}
+
+/** NeighbourRec predict (one exchange, self-row seen marker) against the
+  * plan it replaced, the self-row coverage it relies on, and the release
+  * of predict scratch frames. */
+class NeighbourPredictSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** The replaced predict plan, written out: history ⋈ similarity, sum per
+    * (query, candidate), `left_anti` against the distinct history, top-k. */
+  private def oldPredict(m: NeighbourRec, log: DataFrame, k: Int,
+      queries: DataFrame, filterSeen: Boolean, items: Option[DataFrame]): DataFrame = {
+    val history = log.join(queries, Seq("query_id"), "left_semi")
+    val sim = items.map(it => m.similarity.join(
+      it.select(F.col("item_id").as("item_two")).distinct(),
+      Seq("item_two"), "left_semi")).getOrElse(m.similarity)
+    var recs = history.select(F.col("query_id"), F.col("item_id"))
+      .join(sim, F.col("item_id") === F.col("item_one"))
+      .groupBy(F.col("query_id"), F.col("item_two").as("item_id"))
+      .agg(F.round(F.sum("similarity"), 9).as("rating"))
+    if (filterSeen)
+      recs = recs.join(history.select("query_id", "item_id").distinct(),
+        Seq("query_id", "item_id"), "left_anti")
+    Ops.getTopKRecs(recs, k, "query_id", "item_id", "rating")
+  }
+
+  private def triples(df: DataFrame): Set[(Long, Long, Double)] =
+    df.select(F.col("query_id").cast("long"), F.col("item_id").cast("long"),
+      F.col("rating")).as[(Long, Long, Double)].collect().toSet
+
+  // user 9 asks but has no history; users 1 and 3 buy items again
+  private val queries = (1L to 9L).toDF("query_id")
+
+  /** Every (k, filterSeen, items) combination gives the old plan's rows. */
+  private def assertSameAsOldPlan(m: NeighbourRec, log: DataFrame, what: String): Unit = {
+    val restrict = Seq(10L, 12L, 14L, 15L, 17L).toDF("item_id")
+    for (k <- Seq(2, 50); filterSeen <- Seq(true, false);
+         items <- Seq(None, Some(restrict))) {
+      val got = triples(m.predict(log, k, Some(queries), filterSeen, items))
+      val want = triples(oldPredict(m, log, k, queries, filterSeen, items))
+      assert(want.nonEmpty, s"$what: vacuous fixture")
+      assert(got == want, s"$what k=$k filterSeen=$filterSeen items=${items.isDefined}:" +
+        s"\n got  ${got.toSeq.sorted.mkString(" ")}\n want ${want.toSeq.sorted.mkString(" ")}")
+    }
+  }
+
+  private def log = Seq(
+    (1L, 10L), (1L, 11L), (1L, 12L), (1L, 10L), (1L, 10L),
+    (2L, 10L), (2L, 13L), (2L, 14L),
+    (3L, 11L), (3L, 12L), (3L, 15L), (3L, 15L),
+    (4L, 12L), (4L, 13L), (4L, 16L),
+    (5L, 10L), (5L, 14L), (5L, 16L), (5L, 17L),
+    (6L, 11L), (6L, 13L), (6L, 17L),
+    (7L, 15L), (7L, 16L), (7L, 17L), (7L, 10L),
+    (8L, 18L),
+  ).map { case (q, i) => (q, i, 1.0, s"s$q") }
+    .toDF("query_id", "item_id", "rating", "session_id")
+
+  test("ItemKNN predict equals the anti-join plan: full fit and fitFromStats") {
+    val full = new ItemKNN(numNeighbours = 3).fit(log)
+    assertSameAsOldPlan(full, log, "ItemKNN.fit")
+    val probe = new ItemKNN(numNeighbours = 3)
+    val (pairs, dfs) = ItemKNN.mergeStats(
+      probe.coStats(log.filter($"query_id" <= 4)), probe.coStats(log.filter($"query_id" > 4)))
+    assertSameAsOldPlan(new ItemKNN(numNeighbours = 3).fitFromStats(pairs, dfs), log,
+      "ItemKNN.fitFromStats")
+    // the default query set is the fit users
+    assert(triples(full.predict(log, 3)) ==
+      triples(oldPredict(full, log, 3, full.fitQueries, filterSeen = true, None)))
+  }
+
+  test("ContentKNN, AssociationRules and EASE predict equal the anti-join plan") {
+    val feats = Seq(
+      (10L, "a"), (10L, "b"), (11L, "a"), (12L, "b"), (12L, "c"), (13L, "c"),
+      (14L, "a"), (14L, "c"), (15L, "d"), (16L, "d"), (16L, "b"), (17L, "a"), (18L, "e"),
+    ).toDF("item_id", "feature")
+    assertSameAsOldPlan(new ContentKNN(numNeighbours = 3).fitFeatures(feats), log, "ContentKNN")
+    val rules = new AssociationRules(minItemCount = 1, minPairCount = 1, numNeighbours = 3)
+    assertSameAsOldPlan(rules.fit(log), log, "AssociationRules")
+    assertSameAsOldPlan(new Ease(lambda = 2.0).fit(log), log, "Ease")
+  }
+
+  test("a loaded ItemKNN equals the anti-join plan, also for a seen item with no neighbours") {
+    // 19 has no neighbours of its own but is a candidate through 10 and
+    // 14; users 1, 2 and 7 have it in their history, user 5 has not
+    val handMade = new ItemKNN()
+    handMade.similarity = Seq(
+      (10L, 11L, 0.5), (10L, 19L, 0.75), (11L, 10L, 0.5), (12L, 13L, 0.25),
+      (13L, 12L, 0.25), (14L, 19L, 0.125), (15L, 16L, 0.375), (17L, 10L, 0.625),
+    ).toDF("item_one", "item_two", "similarity")
+    val withNineteen = log.unionByName(Seq(1L, 2L, 7L)
+      .map(q => (q, 19L, 1.0, s"s$q")).toDF("query_id", "item_id", "rating", "session_id"))
+    val dir = Files.createTempDirectory("neighbour_predict").toString
+    ModelIO.saveNeighbour(handMade, s"$dir/knn")
+    val loaded = ModelIO.loadItemKNN(spark, s"$dir/knn")
+    assertSameAsOldPlan(loaded, withNineteen, "loaded ItemKNN")
+    val recs = triples(loaded.predict(withNineteen, 10, Some(queries)))
+    assert(!recs.exists(r => r._1 != 5L && r._2 == 19L), "a seen item was recommended")
+    assert(recs.exists(r => r._1 == 5L && r._2 == 19L), "19 is a candidate for user 5")
+  }
+
+  test("every item_two of a neighbour model's similarity is among its fit items") {
+    val feats = log.select(F.col("item_id"), F.concat(F.lit("f"),
+      (F.col("item_id") % 3).cast("string")).as("feature")).distinct()
+    val probe = new ItemKNN(numNeighbours = 3)
+    val (pairs, dfs) = probe.coStats(log)
+    val ease = new Ease(lambda = 2.0)
+    val dir = Files.createTempDirectory("neighbour_cover").toString
+    val slim = new SLIM().fit(log)
+    ModelIO.saveNeighbour(slim, s"$dir/slim")
+    val models: Seq[(String, NeighbourRec)] = Seq(
+      "ItemKNN.fit" -> new ItemKNN(numNeighbours = 3).fit(log),
+      "ItemKNN.fitFromStats" -> new ItemKNN(numNeighbours = 3).fitFromStats(pairs, dfs),
+      "ContentKNN" -> new ContentKNN(numNeighbours = 3).fitFeatures(feats),
+      "AssociationRules" ->
+        new AssociationRules(minItemCount = 1, minPairCount = 1, numNeighbours = 3).fit(log),
+      "SLIM" -> slim,
+      "AdmmSlim" -> new AdmmSlim(lambda1 = 0.05, lambda2 = 1.0).fit(log),
+      "Ease.fit" -> new Ease(lambda = 2.0).fit(log),
+      "Ease.fitFromCells" -> ease.fitFromCells(ease.gramCells(log)),
+      "ModelIO.loadNeighbour" -> ModelIO.loadNeighbour(spark, s"$dir/slim"),
+    )
+    for ((what, m) <- models) {
+      assert(m.similarity.count() > 0, s"$what: empty similarity")
+      val missing = m.similarity.select(F.col("item_two").as("item_id"))
+        .except(m.fitItems.select("item_id")).count()
+      assert(missing == 0, s"$what: $missing item_two values are not fit items")
+    }
+  }
+
+  test("predict scratch frames: at most one per model, none after a refit") {
+    val sc = spark.sparkContext
+    val subsets = Seq(Seq(1L, 2L), Seq(3L, 4L, 5L), Seq(6L, 7L))
+    for (m <- Seq(new UserKNN(numNeighbours = 3), new PopRec())) {
+      val name = m.getClass.getSimpleName
+      val mark = sc.emptyRDD[Int].id
+      def state: Seq[DataFrame] = (m match {
+        case u: UserKNN => Seq(u.similarity, u.trainPairs)
+        case p: PopRec  => Seq(p.itemPopularity)
+        case _          => Nil
+      }) ++ Seq(m.fitQueries, m.fitItems)
+      def fitAndMaterialize(in: DataFrame): Set[Int] = {
+        m.fit(in)
+        state.foreach(_.count())
+        sc.getPersistentRDDs.keySet.filter(_ > mark).toSet
+      }
+      val withState = fitAndMaterialize(log)
+      for (qs <- subsets)
+        m.predict(log, 3, Some(qs.toDF("query_id"))).collect()
+      val scratch = sc.getPersistentRDDs.keySet.filter(_ > mark).toSet -- withState
+      assert(scratch.size <= 1, s"$name: ${scratch.size} predict scratch frames stay cached")
+      fitAndMaterialize(log.filter($"query_id" <= 6))
+      assert(scratch.intersect(sc.getPersistentRDDs.keySet.toSet).isEmpty,
+        s"$name: a refit kept the last predict's scratch frame")
+      state.foreach(_.unpersist())
+      assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
+        s"$name: a cached frame outlived the model's state")
+    }
+  }
+}
