@@ -1,7 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.Ops
+import graft.core.{Ops, Persist}
 
 /** Damped-mean bias baseline — the classic rating predictor
   * r̂(u,i) = μ + b_u + b_i (the standard CF baseline from the Netflix-era
@@ -37,13 +37,13 @@ final class BiasModel(
     val g = base.agg(F.sum("_r").as("_s"), F.count(F.lit(1)).as("_n")).first()
     require(g.getLong(1) > 0, "empty log")
     muPpm = Math.floorDiv(g.getLong(0), g.getLong(1))
-    itemBias = base.groupBy(cols.item)
+    itemBias = Persist.replace(itemBias, base.groupBy(cols.item)
       .agg(F.sum("_r").as("_s"), F.count(F.lit(1)).as("_n"))
       .select(F.col(cols.item),
         F.expr(s"(_s - _n * ${muPpm}L) div (${lambdaItem}L + _n)")
           .as("b_i_ppm"))
-      .cache()
-    userBias = base
+      .cache())
+    userBias = Persist.replace(userBias, base
       .join(itemBias, Seq(cols.item))
       .groupBy(cols.query)
       .agg(F.sum("_r").as("_s"), F.sum("b_i_ppm").as("_sb"),
@@ -51,7 +51,7 @@ final class BiasModel(
       .select(F.col(cols.query),
         F.expr(s"(_s - _n * ${muPpm}L - _sb) div (${lambdaUser}L + _n)")
           .as("b_u_ppm"))
-      .cache()
+      .cache())
     itemBias.count(); userBias.count()
   }
 
@@ -88,13 +88,13 @@ final class BiasModel(
     val g = stats.agg(F.sum("s_ppm").as("_s"), F.sum("n").as("_n")).first()
     require(!g.isNullAt(1) && g.getLong(1) > 0, "empty stats")
     muPpm = Math.floorDiv(g.getLong(0), g.getLong(1))
-    itemBias = stats.groupBy(cols.item)
+    itemBias = Persist.replace(itemBias, stats.groupBy(cols.item)
       .agg(F.sum("s_ppm").as("_s"), F.sum("n").as("_n"))
       .select(F.col(cols.item),
         F.expr(s"(_s - _n * ${muPpm}L) div (${lambdaItem}L + _n)")
           .as("b_i_ppm"))
-      .cache()
-    userBias = stats
+      .cache())
+    userBias = Persist.replace(userBias, stats
       .join(itemBias, Seq(cols.item))
       .groupBy(cols.query)
       .agg(F.sum("s_ppm").as("_s"),
@@ -103,7 +103,7 @@ final class BiasModel(
       .select(F.col(cols.query),
         F.expr(s"(_s - _n * ${muPpm}L - _sb) div (${lambdaUser}L + _n)")
           .as("b_u_ppm"))
-      .cache()
+      .cache())
     itemBias.count(); userBias.count()
     // entity frames from the cached tiers (their groupBy keys ARE the
     // distinct entity sets) — no extra pass over the stats pipeline, and
@@ -114,8 +114,8 @@ final class BiasModel(
     // Interaction stats never carry NULL item ids by the feed contract
     // (mapGroupsWithState keys / groupBy keys of real interactions), so the
     // derivation is set-identical on every supported input.
-    fitQueriesDf = userBias.select(F.col(cols.query)).cache()
-    fitItemsDf = itemBias.select(F.col(cols.item)).cache()
+    fitQueriesDf = Persist.replace(fitQueriesDf, userBias.select(F.col(cols.query)).cache())
+    fitItemsDf = Persist.replace(fitItemsDf, itemBias.select(F.col(cols.item)).cache())
     stats.unpersist()
     this
   }

@@ -125,7 +125,6 @@ final class HierarchicalRecommender(
       filterSeen: Boolean = true): DataFrame = {
     require(nodes.nonEmpty, "HierarchicalRecommender.predict before fit")
     val qs = queries.getOrElse(log.select(cols.query).distinct())
-    val seen = log.select(cols.query, cols.item).distinct()
 
     def walk(path: String, users: DataFrame): DataFrame = {
       val node = nodes(path)

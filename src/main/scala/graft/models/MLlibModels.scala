@@ -204,24 +204,13 @@ final class ALSRec(
     val qs = queries.getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val uf = foldInFactors(history, alpha)
-    val (seen, maxSeen) =
-      if (filterSeen) {
-        val sp = history.select(cols.query, cols.item).distinct().cache()
-        val m = sp.groupBy(cols.query).agg(F.count(F.lit(1)).as("_n"))
-          .agg(F.max("_n")).first() match {
-          case row if row.isNullAt(0) => 0
-          case row                    => row.getLong(0).toInt
-        }
-        (Some(sp), m)
-      } else (None, 0)
+    val (seen, maxSeen) = seenFilter(history, filterSeen)
     val scored = uf.crossJoin(itemVectorsDF.withColumnRenamed("vec", "_iv"))
       .select(F.col(cols.query), F.col(cols.item),
         AnnIndex.dot(F.col("vec"), F.col("_iv")).as(cols.rating))
-    var recs = Ops.getTopKRecsBounded(scored, k + maxSeen,
+    val recs = Ops.getTopKRecsBounded(scored, k + maxSeen,
       cols.query, cols.item, cols.rating)
-    seen.foreach(sp => recs = recs.join(sp,
-      Seq(cols.query, cols.item), "left_anti"))
-    Ops.getTopKRecs(recs, k, cols.query, cols.item, cols.rating)
+    Ops.getTopKRecs(dropSeen(recs, seen), k, cols.query, cols.item, cols.rating)
   }
 
   /** Reference als.py:22-24: rank ~ loguniform_int [8, 256] (ln-space). */
@@ -399,12 +388,14 @@ final class Word2VecRec(
 
 /** KMeans cluster recommender (reference: replay/models/cluster.py:43-120):
   * cluster queries by their feature vector; per-cluster item relevance =
-  * interaction count normalized by the cluster's max. */
+  * interaction count normalized by the cluster's max. Predict runs the
+  * recommenders' one seen filter and owns its scratch frames as they do
+  * ([[PredictScratch]]). */
 final class ClusterRec(
     val nClusters: Int = 10,
     val seed: Long = 42,
     val cols: RecCols = RecCols(),
-) extends Serializable {
+) extends Serializable with PredictScratch {
   import org.apache.spark.ml.clustering.KMeans
   import org.apache.spark.ml.feature.VectorAssembler
 
@@ -412,6 +403,7 @@ final class ClusterRec(
   var clusterItems: DataFrame = _    // (cluster, item, rating)
 
   def fit(log: DataFrame, queryFeatures: DataFrame): this.type = {
+    releaseScratch()
     val featCols = queryFeatures.columns.filterNot(_ == cols.query)
     val assembled = new VectorAssembler()
       .setInputCols(featCols).setOutputCol("_features").setHandleInvalid("skip")
@@ -449,12 +441,7 @@ final class ClusterRec(
     // never interacted (1/15000 customers at sf0.1; caught by the r8
     // model_recs_certificate n_queries cross-check)
     val logQueries = log.select(cols.query).distinct()
-    val seen = log.select(cols.query, cols.item).distinct().cache()
-    val maxSeen = seen.groupBy(cols.query).agg(F.count(F.lit(1)).as("_n"))
-      .agg(F.max("_n")).first() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
+    val (seen, maxSeen) = seenFilter(log, filterSeen = true)
     // crop the catalog PER CLUSTER before the query fan-out: every query in
     // a cluster sees the same item list, so its per-query top-(k+maxSeen)
     // under (rating desc, item asc) is exactly the cluster's
@@ -466,7 +453,7 @@ final class ClusterRec(
     // the crop the full per-(cluster, item) table would eventually hit the
     // 8 GB broadcast limit.
     val croppedCatalog = Ops.getTopKRecsBounded(
-      clusterItems, k + maxSeen.toInt, "cluster", cols.item, cols.rating)
+      clusterItems, k + maxSeen, "cluster", cols.item, cols.rating)
     // explicit broadcast: the join key has only nClusters distinct values,
     // so a shuffle join would collapse to nClusters tasks (measured 3× the
     // whole predict at sf0.1)
@@ -474,7 +461,6 @@ final class ClusterRec(
       .join(logQueries, Seq(cols.query), "left_semi")
       .join(F.broadcast(croppedCatalog), Seq("cluster"))
       .select(F.col(cols.query), F.col(cols.item), F.col(cols.rating))
-    val unseen = recs.join(seen, Seq(cols.query, cols.item), "left_anti")
-    Ops.getTopKRecs(unseen, k, cols.query, cols.item, cols.rating)
+    Ops.getTopKRecs(dropSeen(recs, seen), k, cols.query, cols.item, cols.rating)
   }
 }

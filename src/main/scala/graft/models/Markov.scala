@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
+import graft.core.{Ops, Persist}
 
 /** First-order Markov next-item recommender — the relational stand-in for
   * the reference's sequential next-item family (replay/models/nn/sequential:
@@ -52,7 +52,7 @@ final class MarkovRec(
         F.col(cols.item).as("item_two"))
       .agg(F.count(F.lit(1)).as("cnt"))
       .filter(F.col("cnt") >= minCount)
-    transitions = t.cache()
+    transitions = Persist.replace(transitions, t.cache())
     transitions.count()
   }
 
@@ -82,7 +82,8 @@ final class MarkovRec(
     * concatenated user-disjoint slices (minCount applied here). */
   def fitFromStats(stats: DataFrame): this.type = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    transitions = stats.filter(F.col("cnt") >= minCount).cache()
+    transitions = Persist.replace(transitions,
+      stats.filter(F.col("cnt") >= minCount).cache())
     transitions.count()
     this
   }
@@ -115,16 +116,7 @@ final class MarkovRec(
     val trans0 = items.map(it => transitions.join(
       it.select(F.col(cols.item).as("item_two")).distinct(),
       Seq("item_two"), "left_semi")).getOrElse(transitions)
-    val (seenPairs, maxSeen) =
-      if (filterSeen) {
-        val sp = history.select(cols.query, cols.item).distinct().cache()
-        val m = sp.groupBy(cols.query).agg(F.count(F.lit(1)).as("_n"))
-          .agg(F.max("_n")).first() match {
-          case r if r.isNullAt(0) => 0
-          case r                  => r.getLong(0).toInt
-        }
-        (Some(sp), m)
-      } else (None, 0)
+    val (seen, maxSeen) = seenFilter(history, filterSeen)
     // per-source crop: at most maxSeen candidates per query are seen, so
     // the top (k + maxSeen) transitions per source item cover the exact
     // post-filter top-k
@@ -132,14 +124,11 @@ final class MarkovRec(
       .orderBy(F.col("cnt").desc, F.col("item_two").asc)
     val trans = trans0.withColumn("_rk", F.row_number().over(wc))
       .filter(F.col("_rk") <= k + maxSeen).drop("_rk")
-    var recs = lastItems(history)
+    val recs = lastItems(history)
       .join(trans, F.col("_last") === F.col("item_one"))
       .select(F.col(cols.query), F.col("item_two").as(cols.item),
         F.col("cnt").cast("double").as(cols.rating))
-    seenPairs.foreach { sp =>
-      recs = recs.join(sp, Seq(cols.query, cols.item), "left_anti")
-    }
-    Ops.getTopKRecs(recs, k, cols.query, cols.item, cols.rating)
+    Ops.getTopKRecs(dropSeen(recs, seen), k, cols.query, cols.item, cols.rating)
   }
 
   /** minCount int [1, 10] — the only fit hyperparameter (engine extra;

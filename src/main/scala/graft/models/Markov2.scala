@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
+import graft.core.{Ops, Persist}
 
 /** Second-order Markov next-item recommender with stupid backoff — the
   * sparse-context completion of [[MarkovRec]] (the relational stand-ins
@@ -47,10 +47,16 @@ final class Markov2Rec(
         F.col(cols.item).as("item_two"))
       .agg(F.count(F.lit(1)).as("cnt"))
       .filter(F.col("cnt") >= minCount)
-    transitions2 = t2.cache()
+    transitions2 = Persist.replace(transitions2, t2.cache())
     transitions2.count()
-    backoff = new MarkovRec(minCount, tieBreak, cols)
-    backoff.fit(log)
+    backoffTier.fit(log)
+  }
+
+  /** The order-1 tier: one instance across refits, so that a refit of the
+    * tier releases the state it replaces. */
+  private def backoffTier: MarkovRec = {
+    if (backoff == null) backoff = new MarkovRec(minCount, tieBreak, cols)
+    backoff
   }
 
   // ---- incremental refit (the MarkovRec discipline, one lag deeper) -----
@@ -85,9 +91,10 @@ final class Markov2Rec(
     * concatenated user-disjoint slices. */
   def fitFromStats(t2Stats: DataFrame, t1Stats: DataFrame): this.type = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    transitions2 = t2Stats.filter(F.col("cnt") >= minCount).cache()
+    transitions2 = Persist.replace(transitions2,
+      t2Stats.filter(F.col("cnt") >= minCount).cache())
     transitions2.count()
-    backoff = new MarkovRec(minCount, tieBreak, cols).fitFromStats(t1Stats)
+    backoffTier.fitFromStats(t1Stats)
     this
   }
 
@@ -120,21 +127,12 @@ final class Markov2Rec(
     val t20 = items.map(it => transitions2.join(
       it.select(F.col(cols.item).as("item_two")).distinct(),
       Seq("item_two"), "left_semi")).getOrElse(transitions2)
-    val (seenPairs, maxSeen) =
-      if (filterSeen) {
-        val sp = history.select(cols.query, cols.item).distinct().cache()
-        val m = sp.groupBy(cols.query).agg(F.count(F.lit(1)).as("_n"))
-          .agg(F.max("_n")).first() match {
-          case r if r.isNullAt(0) => 0
-          case r                  => r.getLong(0).toInt
-        }
-        (Some(sp), m)
-      } else (None, 0)
+    val (seen, maxSeen) = seenFilter(history, filterSeen)
     val wc = Window.partitionBy("ctx2", "ctx1")
       .orderBy(F.col("cnt").desc, F.col("item_two").asc)
     val t2 = t20.withColumn("_rk", F.row_number().over(wc))
       .filter(F.col("_rk") <= k + maxSeen).drop("_rk")
-    val ctx = lastTwo(history).cache()
+    val ctx = keepScratch(lastTwo(history))
     val cand2 = ctx.filter(F.col("_l2").isNotNull)
       .join(t2, F.col("_l2") === F.col("ctx2") &&
         F.col("_l1") === F.col("ctx1"))
@@ -148,11 +146,7 @@ final class Markov2Rec(
       .join(order2Queries, Seq(cols.query), "left_anti")
     val cand1 = backoff.predict(log, k,
       queries = Some(backoffQueries), filterSeen = filterSeen, items = items)
-    var recs2 = cand2
-    seenPairs.foreach { sp =>
-      recs2 = recs2.join(sp, Seq(cols.query, cols.item), "left_anti")
-    }
-    Ops.getTopKRecs(recs2, k, cols.query, cols.item, cols.rating)
+    Ops.getTopKRecs(dropSeen(cand2, seen), k, cols.query, cols.item, cols.rating)
       .unionByName(cand1)
   }
 

@@ -122,15 +122,8 @@ final class P3AlphaRec(
       .agg(F.sum("sim_ppt").as("_s"))
       .join(userDegrees, Seq(cols.query))
       .select(F.col(cols.query), F.col("item_to").as(cols.item),
-        F.expr("_s div du").cast("long").as("score_ppt"))
-      .withColumn(cols.rating, F.col("score_ppt").cast("double") / 1e12)
+        (F.expr("_s div du").cast("long").cast("double") / 1e12).as(cols.rating))
   }
-
-  override def predict(log: DataFrame, k: Int,
-      queries: Option[DataFrame] = None, filterSeen: Boolean = true,
-      items: Option[DataFrame] = None): DataFrame =
-    super.predict(log, k, queries, filterSeen, items)
-      .select(F.col(cols.query), F.col(cols.item), F.col(cols.rating))
 
   override def searchBorders: Map[String, (Double, Double)] = Map(
     "beta" -> (0.0, 3.0), "top_k_neighbours" -> (10.0, 500.0))

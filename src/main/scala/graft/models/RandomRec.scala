@@ -1,7 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.Ops
+import graft.core.{Ops, Persist}
 
 /** Weighted random recommender (reference: random_rec.py:180-228 +
   * base_rec.py:1283-1364).
@@ -49,7 +49,7 @@ final class RandomRec(
       case other => throw new IllegalArgumentException(s"unknown distribution $other")
     }
     fillCache = None
-    itemWeights = w.cache()
+    itemWeights = Persist.replace(itemWeights, w.cache())
     itemWeights.count()
   }
 
@@ -181,14 +181,13 @@ final class RandomRec(
         // the single-filter form.
         val selCut = sel.withColumn("_cut",
           F.exp(F.col("_w") * -t) * (1.0 - 1e-9) - 1e-18)
-        val agged = qs.select(cols.query).crossJoin(selCut)
+        val agged = keepScratch(qs.select(cols.query).crossJoin(selCut)
           .filter(u > F.col("_cut") || F.col("_w") <= 0)
           .withColumn(cols.rating, F.log(u + F.lit(1e-18)) / F.col("_w"))
           .filter(F.col(cols.rating) > F.lit(-t) || F.col("_w") <= 0)
           .groupBy(cols.query)
           .agg(graft.core.BoundedTopKAgg.topKPairs(
-            m, F.col(cols.rating), F.col(cols.item)).as("_tk"))
-          .cache()
+            m, F.col(cols.rating), F.col(cols.item)).as("_tk")))
         val good = agged.filter(F.size(F.col("_tk")) >= m)
         val short = qs.select(cols.query)
           .join(good.select(cols.query), Seq(cols.query), "left_anti")
@@ -223,12 +222,7 @@ final class RandomRec(
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
-    val seenPairs = history.select(cols.query, cols.item).distinct().cache()
-    val maxSeen = seenPairs.groupBy(cols.query)
-      .agg(F.count(F.lit(1)).as("_n")).agg(F.max("_n")).first() match {
-      case r if r.isNullAt(0) => 0
-      case r                  => r.getLong(0).toInt
-    }
+    val (seen, maxSeen) = seenFilter(history, filterSeen = true)
     val sel = selectedWeights(items)
     val u = pairUniform(qs.schema(cols.query).dataType,
       sel.schema(cols.item).dataType)
@@ -236,32 +230,29 @@ final class RandomRec(
       case None =>
         // tiny catalog / crop disabled: the base shape (score is already
         // bounded at k+maxSeen per query)
-        score(qs, k, maxSeen, items)
-          .join(seenPairs, Seq(cols.query, cols.item), "left_anti")
+        dropSeen(score(qs, k, maxSeen, items), seen)
       case Some(t) =>
         val selCut = sel.withColumn("_cut",
           F.exp(F.col("_w") * -t) * (1.0 - 1e-9) - 1e-18)
-        val agged = qs.select(cols.query).crossJoin(selCut)
+        val survivors = qs.select(cols.query).crossJoin(selCut)
           .filter(u > F.col("_cut") || F.col("_w") <= 0)
-          .join(seenPairs, Seq(cols.query, cols.item), "left_anti")
+        val agged = keepScratch(dropSeen(survivors, seen)
           .withColumn(cols.rating, F.log(u + F.lit(1e-18)) / F.col("_w"))
           .filter(F.col(cols.rating) > F.lit(-t) || F.col("_w") <= 0)
           .groupBy(cols.query)
           .agg(graft.core.BoundedTopKAgg.topKPairs(
-            k, F.col(cols.rating), F.col(cols.item)).as("_tk"))
-          .cache()
+            k, F.col(cols.rating), F.col(cols.item)).as("_tk")))
         val good = agged.filter(F.size(F.col("_tk")) >= k)
         val short = qs.select(cols.query)
           .join(good.select(cols.query), Seq(cols.query), "left_anti")
         // unfiltered repair (rare by the Chernoff bound; exact always):
         // full keyed stream for the short queries, k+maxSeen heap, THEN
         // the seen anti-join — the base-path shape, scoped to them
-        val repair = Ops.getTopKRecsBounded(
+        val repair = dropSeen(Ops.getTopKRecsBounded(
           short.crossJoin(sel)
             .withColumn(cols.rating, F.log(u + F.lit(1e-18)) / F.col("_w"))
             .drop("_w"),
-          k + maxSeen, cols.query, cols.item, cols.rating)
-          .join(seenPairs, Seq(cols.query, cols.item), "left_anti")
+          k + maxSeen, cols.query, cols.item, cols.rating), seen)
         good.select(F.col(cols.query), F.explode(F.col("_tk")).as("_p"))
           .select(F.col(cols.query), F.col("_p.item").as(cols.item),
             F.col("_p.rating").as(cols.rating))

@@ -12,25 +12,89 @@ final case class RecCols(
     ts: String = "timestamp",
 )
 
+/** The frames a predict caches for itself ("scratch"), and the one seen
+  * filter every predict runs (reference `_filter_seen`,
+  * base_rec.py:152-201).
+  *
+  * A predict starts with [[seenFilter]], which releases the previous
+  * predict's scratch frames; the predict then owns the frames it caches
+  * through [[keepScratch]] until the next predict, or until a fit calls
+  * [[releaseScratch]]. Releasing them cannot break a predict's lazy
+  * result: a plan whose cache is gone recomputes it. */
+private[models] trait PredictScratch {
+  def cols: RecCols
+
+  private var scratch: List[DataFrame] = Nil
+
+  /** `df`, cached as one of this predict's scratch frames. */
+  protected def keepScratch(df: DataFrame): DataFrame = {
+    val cached = df.cache()
+    scratch ::= cached
+    cached
+  }
+
+  private[models] def releaseScratch(): Unit = {
+    scratch.foreach(_.unpersist())
+    scratch = Nil
+  }
+
+  /** Starts a predict over `history`, the requested queries' log rows.
+    * With `filterSeen`, returns the distinct (query, item) seen pairs,
+    * this predict's first scratch frame, and the most pairs any query has:
+    * a query loses at most that many candidates to the seen filter, so a
+    * crop to k + maxSeen per query keeps the exact top-k. Distinct pairs,
+    * not raw events (reference `_calc_max_hist_len`,
+    * base_rec.py:1203-1220): re-interactions must not widen the crop. The
+    * cached pairs feed both the maxSeen action and the anti-join, so the
+    * history is scanned and deduplicated once (twice uncached: 2.6 s of a
+    * 12 s sf0.1 predict); `cache()` is MEMORY_AND_DISK, so an oversized
+    * pair set spills. */
+  private[models] def seenFilter(history: DataFrame,
+      filterSeen: Boolean): (Option[DataFrame], Int) = {
+    releaseScratch()
+    if (!filterSeen) return (None, 0)
+    val pairs = keepScratch(history.select(cols.query, cols.item).distinct())
+    val maxSeen = pairs.groupBy(cols.query)
+      .agg(F.count(F.lit(1)).as("_n"))
+      .agg(F.max("_n")).first() match {
+      case r if r.isNullAt(0) => 0
+      case r                  => r.getLong(0).toInt
+    }
+    (Some(pairs), maxSeen)
+  }
+
+  /** `recs` without the seen pairs that [[seenFilter]] returned. */
+  private[models] def dropSeen(recs: DataFrame, seen: Option[DataFrame]): DataFrame =
+    seen.fold(recs)(recs.join(_, Seq(cols.query, cols.item), "left_anti"))
+}
+
 /** Base recommender skeleton (reference: replay/models/base_rec.py:86-690).
   *
   * fit = materialize model state; predict = lazy score plan → optional
   * seen-filter (rank-crop + anti-join, base_rec.py:152-201) →
   * deterministic top-k window.
   *
+  * One seen filter: every predict that drops seen items, here and in the
+  * subclasses that override predict, takes the seen pairs and the crop
+  * width from [[PredictScratch.seenFilter]] and crops its own candidates
+  * to k + maxSeen (globally, per query, per source item, per cluster)
+  * before the anti-join. [[NeighbourRec]] is the one exception.
+  *
   * State is a plan LEAF: `materialize` caches it through
   * [[graft.core.Persist.leaf]] (reference `cache().count()`,
   * pop_rec.py:135), so predict never recomputes it and its plan is one
   * `Scan ExistingRDD` node however many refits built it. Ownership: the
-  * model owns its state and memos, and the one scratch frame its last
-  * predict cached. A refit of the same instance releases the state frames
-  * it replaces ([[graft.core.Persist.replace]]) and drops the memos
+  * model owns its state and memos, and the scratch frames its last
+  * predict cached (the seen pairs and any other frame a predict caches,
+  * [[PredictScratch]]). A refit of the same instance releases the state
+  * frames it replaces ([[graft.core.Persist.replace]]) and drops the memos
   * derived from the old state; a predict releases the previous predict's
-  * scratch frame, a refit the last one. The caller that discards a model,
-  * or replaces it with another instance, releases that model's state with
-  * `unpersist()`.
+  * scratch frames, a `fit` the last ones. The caller that discards a
+  * model, or replaces it with another instance, releases that model's
+  * state with `unpersist()`.
   */
-abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializable {
+abstract class BaseRecommender(val cols: RecCols = RecCols())
+    extends Serializable with PredictScratch {
   protected[models] var fitQueriesDf: DataFrame = _
   protected[models] var fitItemsDf: DataFrame = _
 
@@ -52,21 +116,6 @@ abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializab
   /** How [[fit]] keeps the distinct fit items: a lazy `cache()`, which a
     * refit on the same input shares. */
   protected def keepFitItems(items: DataFrame): DataFrame = items.cache()
-
-  private var scratch: DataFrame = _
-
-  /** `df`, cached as this model's predict scratch frame; the previous
-    * predict's scratch frame is released. Releasing it cannot break that
-    * predict's lazy result: a plan whose cache is gone recomputes it. */
-  protected def keepScratch(df: DataFrame): DataFrame = {
-    scratch = Persist.replace(scratch, df.cache())
-    scratch
-  }
-
-  private def releaseScratch(): Unit = {
-    if (scratch != null) scratch.unpersist()
-    scratch = null
-  }
 
   /** Restrict an item-keyed state frame to a candidate item set
     * (reference `_filter_interactions_queries_items_dataframes`,
@@ -96,28 +145,9 @@ abstract class BaseRecommender(val cols: RecCols = RecCols()) extends Serializab
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
-    // distinct pairs, not raw events (reference _calc_max_hist_len,
-    // base_rec.py:1203-1220 countDistinct): the seen-filter can only drop
-    // distinct pairs, so re-interaction-heavy logs shouldn't widen the crop.
-    // ONE materialization (r12): the distinct pairs feed BOTH the maxSeen
-    // scalar (count per query over distinct pairs ≡ countDistinct) and the
-    // seen anti-join below — uncached, predict scanned and deduped the
-    // history twice (measured 2.6 s of a 12 s sf0.1 predict). cache() is
-    // MEMORY_AND_DISK, so at cluster scale an oversized pair set spills
-    // instead of evicting the executors.
-    val recs =
-      if (filterSeen) {
-        val seenPairs = keepScratch(history.select(cols.query, cols.item).distinct())
-        val maxSeen = seenPairs.groupBy(cols.query)
-          .agg(F.count(F.lit(1)).as("_n"))
-          .agg(F.max("_n")).first() match {
-          case r if r.isNullAt(0) => 0
-          case r                  => r.getLong(0).toInt
-        }
-        score(qs, k, maxSeen, items)
-          .join(seenPairs, Seq(cols.query, cols.item), "left_anti")
-      } else score(qs, k, 0, items)
-    Ops.getTopKRecs(recs, k, cols.query, cols.item, cols.rating)
+    val (seen, maxSeen) = seenFilter(history, filterSeen)
+    Ops.getTopKRecs(dropSeen(score(qs, k, maxSeen, items), seen),
+      k, cols.query, cols.item, cols.rating)
   }
 
   def fitPredict(log: DataFrame, k: Int): DataFrame = fit(log).predict(log, k)
@@ -305,25 +335,21 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
-    val seenCnt = keepScratch(history.groupBy(cols.query)
-      .agg(F.countDistinct(cols.item).as("_seen")))
-    val maxSeen = seenCnt.agg(F.max("_seen")).first() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
-    val ranked = topRanked(k + maxSeen.toInt, items)
-    val cand = qs.select(cols.query)
-      .join(seenCnt, Seq(cols.query), "left")
-      .na.fill(0L, Seq("_seen"))
-      .crossJoin(F.broadcast(ranked))
+    val (seen, maxSeen) = seenFilter(history, filterSeen = true)
+    val cand = withSeenCount(qs.select(cols.query), seen.get)
+      .crossJoin(F.broadcast(topRanked(k + maxSeen, items)))
       .filter(F.col("_rank") <= F.lit(k) + F.col("_seen"))
       .drop("_rank", "_seen")
-    val unseen = cand.join(history.select(cols.query, cols.item).distinct(),
-      Seq(cols.query, cols.item), "left_anti")
-    // seenCnt stays cached until the next predict or refit: it feeds both
-    // the maxSeen action above and the (lazy) candidate plan.
-    Ops.getTopKRecs(unseen, k, cols.query, cols.item, cols.rating)
+    Ops.getTopKRecs(dropSeen(cand, seen), k, cols.query, cols.item, cols.rating)
   }
+
+  /** `df` with each query's number of seen items as `_seen` (0 for a query
+    * without history): `count(item)` over the distinct seen pairs, which is
+    * `countDistinct(item)` over the history. */
+  private def withSeenCount(df: DataFrame, seen: DataFrame): DataFrame =
+    df.join(seen.groupBy(cols.query).agg(F.count(cols.item).as("_seen")),
+        Seq(cols.query), "left")
+      .na.fill(0L, Seq("_seen"))
 
   /** Sampled predict (reference `_predict_with_sampling`,
     * base_rec.py:1283-1364): each query draws
@@ -350,17 +376,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
     val history = log.join(qs, Seq(cols.query), "left_semi")
-    val seenCnt =
-      if (filterSeen)
-        keepScratch(history.groupBy(cols.query)
-          .agg(F.countDistinct(cols.item).as("_seen")))
-      else null
-    val maxSeen =
-      if (filterSeen) seenCnt.agg(F.max("_seen")).first() match {
-        case r if r.isNullAt(0) => 0L
-        case r                  => r.getLong(0)
-      }
-      else 0L
+    val (seen, maxSeen) = seenFilter(history, filterSeen)
     val guarded = selectedPopularity(items).select(F.col(cols.item),
       F.when(F.col(cols.rating) === 0.0, F.lit(1e-6))
         .otherwise(F.col(cols.rating)).as("_w"))
@@ -379,19 +395,15 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     // probability the crop's (rating, item) state doesn't carry.
     val cropped = Ops.getTopKRecsBounded(
       keyed.select(F.col(cols.query), F.col(cols.item), F.col("_key")),
-      k + maxSeen.toInt, cols.query, cols.item, "_key")
+      k + maxSeen, cols.query, cols.item, "_key")
     val keyW = Window.partitionBy(cols.query)
       .orderBy(F.col("_key").desc, F.col(cols.item).asc)
-    var drawn = cropped
+    val drawn = cropped
       .withColumn("_rn", F.row_number().over(keyW))
       .join(F.broadcast(probs), Seq(cols.item))
-    if (filterSeen)
-      drawn = drawn
-        .join(seenCnt, Seq(cols.query), "left").na.fill(0L, Seq("_seen"))
-        .filter(F.col("_rn") <= F.lit(k) + F.col("_seen"))
-        .join(history.select(cols.query, cols.item).distinct(),
-          Seq(cols.query, cols.item), "left_anti")
-    val recs = drawn.select(F.col(cols.query), F.col(cols.item),
+    val kept = seen.fold(drawn)(s => dropSeen(withSeenCount(drawn, s)
+      .filter(F.col("_rn") <= F.lit(k) + F.col("_seen")), seen))
+    val recs = kept.select(F.col(cols.query), F.col(cols.item),
       F.col("_p").as(cols.rating))
     Ops.getTopKRecs(recs, k, cols.query, cols.item, cols.rating)
   }
@@ -481,6 +493,11 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
   * [[fitItems]], which every fit path and the loader keep as a
   * materialized [[graft.core.Persist.leaf]]: its real size lets the planner
   * broadcast the side by size, as before.
+  *
+  * This is the one predict without [[PredictScratch.seenFilter]]: the
+  * distinct seen pairs and their anti-join would cost a second scan of the
+  * log and two more exchanges on every serving request, so it caches no
+  * scratch frame.
   */
 abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
   /** (item_one, item_two, similarity) — materialized by doFit. */

@@ -157,15 +157,9 @@ final class SlopeOne(
         F.col("r_ppm"))
       .join(devs, Seq("item_from"))
       .groupBy(cols.query, cols.item)
-      .agg(F.expr("sum(dev_ppm + n * r_ppm) div sum(n)").as("pred_ppm"))
-      .withColumn(cols.rating, F.col("pred_ppm").cast("double") / 1e6)
+      .agg((F.expr("sum(dev_ppm + n * r_ppm) div sum(n)").cast("double") / 1e6)
+        .as(cols.rating))
   }
-
-  override def predict(log: DataFrame, k: Int,
-      queries: Option[DataFrame] = None, filterSeen: Boolean = true,
-      items: Option[DataFrame] = None): DataFrame =
-    super.predict(log, k, queries, filterSeen, items)
-      .select(F.col(cols.query), F.col(cols.item), F.col(cols.rating))
 
   /** Exact-ppm pair scoring: only supported pairs get a prediction;
     * unsupported pairs surface as NULL pred_ppm (callers choose their

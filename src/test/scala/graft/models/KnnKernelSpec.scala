@@ -154,23 +154,42 @@ class KnnKernelSpec extends SparkSpec {
     val mark = sc.emptyRDD[Int].id
     val p3 = new P3AlphaRec(topKNeighbours = 3)
     val s1 = new SlopeOne()
+    // the models with their own state fields
+    val markov = new MarkovRec()
+    val markov2 = new Markov2Rec()
+    val random = new RandomRec()
+    val bias = new BiasModel()
     def state = Seq(p3.similarity, p3.userDegrees, p3.trainPairs, p3.fitQueries, p3.fitItems,
-      s1.deviations, s1.ratings, s1.fitQueries, s1.fitItems)
+      s1.deviations, s1.ratings, s1.fitQueries, s1.fitItems,
+      markov.transitions, markov.fitQueries, markov.fitItems,
+      markov2.transitions2, markov2.backoff.transitions, markov2.backoff.fitQueries,
+      markov2.backoff.fitItems, markov2.fitQueries, markov2.fitItems,
+      random.itemWeights, random.fitQueries, random.fitItems,
+      bias.itemBias, bias.userBias, bias.fitQueries, bias.fitItems)
+    // the Markov models order each history by timestamp
+    val timed = log.withColumn("timestamp", F.col("item_id"))
     // a repeated input shares the cache entries of the frames it replaces
-    for (in <- Seq(log, log, log.filter($"query_id" <= 5))) {
-      for (m <- Seq(p3, s1)) {
+    for (in <- Seq(timed, timed, timed.filter($"query_id" <= 5))) {
+      for (m <- Seq(p3, s1, markov, markov2, random, bias)) {
         m.fit(in)
         m.fitQueries.count()
         m.fitItems.count()
       }
+      markov2.backoff.fitItems.count()
       assert(state.forall(_.storageLevel.useMemory), "current state must stay cached")
     }
-    // the incremental path replaces the same frames
-    val (half, ratings) = s1.mergeStats(s1.coStats(log.filter($"query_id" <= 3)),
-      s1.coStats(log.filter($"query_id" > 3)))
+    // the incremental paths replace the same frames
+    val (lo, hi) = (timed.filter($"query_id" <= 3), timed.filter($"query_id" > 3))
+    val (half, ratings) = s1.mergeStats(s1.coStats(lo), s1.coStats(hi))
     s1.fitFromStats(half, ratings)
     s1.fitQueries.count()
     s1.fitItems.count()
+    bias.fitFromStats(bias.mergeStats(bias.pairStats(lo), bias.pairStats(hi)))
+    bias.fitQueries.count()
+    bias.fitItems.count()
+    markov.fitFromStats(markov.mergeStats(markov.transStats(lo), markov.transStats(hi)))
+    val (t2, t1) = markov2.mergeStats(markov2.transStats(lo), markov2.transStats(hi))
+    markov2.fitFromStats(t2, t1)
     state.foreach(_.unpersist())
     assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
       "a refit left a cached frame of the replaced state behind")

@@ -134,33 +134,86 @@ class NeighbourPredictSpec extends SparkSpec {
     }
   }
 
-  test("predict scratch frames: at most one per model, none after a refit") {
+  /** Fits with `fit`, predicts three new query sets with `predict`, refits
+    * on a smaller log: only the last predict's frames may stay cached, at
+    * most `maxFrames` of them, and none after the refit. `state` is the
+    * fitted state, materialized after each fit. Returns the id mark that
+    * every RDD persisted since the first fit is newer than. */
+  private def assertScratchOwned(name: String, maxFrames: Int)(fit: DataFrame => Unit)(
+      state: => Seq[DataFrame])(predict: DataFrame => Unit): Int = {
+    // an entry left by an earlier case would stand in for a frame this
+    // model caches, under its old RDD id
+    spark.catalog.clearCache()
     val sc = spark.sparkContext
-    val subsets = Seq(Seq(1L, 2L), Seq(3L, 4L, 5L), Seq(6L, 7L))
-    for (m <- Seq(new UserKNN(numNeighbours = 3), new PopRec())) {
+    val mark = sc.emptyRDD[Int].id
+    def persisted = sc.getPersistentRDDs.keySet.filter(_ > mark).toSet
+    def fitAndMaterialize(in: DataFrame): Set[Int] = {
+      fit(in)
+      state.foreach(_.count())
+      persisted
+    }
+    val withState = fitAndMaterialize(timedLog)
+    var last = Set.empty[Int]
+    for (qs <- Seq(Seq(1L, 2L), Seq(3L, 4L, 5L), Seq(6L, 7L))) {
+      val before = persisted
+      predict(qs.toDF("query_id"))
+      last = persisted -- before
+    }
+    val scratch = persisted -- withState
+    assert(scratch.nonEmpty, s"$name: vacuous, predict cached nothing")
+    assert(scratch.subsetOf(last),
+      s"$name: ${(scratch -- last).size} frames of earlier predicts stay cached")
+    assert(scratch.size <= maxFrames, s"$name: ${scratch.size} predict scratch frames stay cached")
+    fitAndMaterialize(timedLog.filter($"query_id" <= 6))
+    assert(scratch.intersect(persisted).isEmpty,
+      s"$name: a refit kept the last predict's scratch frames")
+    mark
+  }
+
+  // the Markov models order each history by timestamp
+  private def timedLog = log.withColumn("timestamp", F.col("item_id"))
+
+  test("predict scratch frames: at most one per model, none after a refit") {
+    // the forced threshold takes RandomRec's pre-crop path, which also
+    // caches its survivor heaps
+    val random = new RandomRec()
+    random.forcedThreshold = Some(1.0)
+    // (model, frames its predict may own: Markov2Rec's seen pairs and
+    // last-two context plus its backoff tier's seen pairs)
+    val models = Seq[(BaseRecommender, Int)](new UserKNN(numNeighbours = 3) -> 1,
+      new PopRec() -> 1, new MarkovRec() -> 1, new Markov2Rec() -> 3, random -> 2)
+    for ((m, maxFrames) <- models) {
       val name = m.getClass.getSimpleName
-      val mark = sc.emptyRDD[Int].id
       def state: Seq[DataFrame] = (m match {
-        case u: UserKNN => Seq(u.similarity, u.trainPairs)
-        case p: PopRec  => Seq(p.itemPopularity)
-        case _          => Nil
+        case u: UserKNN    => Seq(u.similarity, u.trainPairs)
+        case p: PopRec     => Seq(p.itemPopularity)
+        case t: MarkovRec  => Seq(t.transitions)
+        case t: Markov2Rec => Seq(t.transitions2, t.backoff.transitions,
+          t.backoff.fitQueries, t.backoff.fitItems)
+        case r: RandomRec  => Seq(r.itemWeights)
+        case _             => Nil
       }) ++ Seq(m.fitQueries, m.fitItems)
-      def fitAndMaterialize(in: DataFrame): Set[Int] = {
-        m.fit(in)
-        state.foreach(_.count())
-        sc.getPersistentRDDs.keySet.filter(_ > mark).toSet
+      val mark = assertScratchOwned(name, maxFrames)(m.fit(_))(state) { qs =>
+        m.predict(timedLog, 3, Some(qs)).collect()
       }
-      val withState = fitAndMaterialize(log)
-      for (qs <- subsets)
-        m.predict(log, 3, Some(qs.toDF("query_id"))).collect()
-      val scratch = sc.getPersistentRDDs.keySet.filter(_ > mark).toSet -- withState
-      assert(scratch.size <= 1, s"$name: ${scratch.size} predict scratch frames stay cached")
-      fitAndMaterialize(log.filter($"query_id" <= 6))
-      assert(scratch.intersect(sc.getPersistentRDDs.keySet.toSet).isEmpty,
-        s"$name: a refit kept the last predict's scratch frame")
       state.foreach(_.unpersist())
-      assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
+      assert(spark.sparkContext.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
         s"$name: a cached frame outlived the model's state")
+    }
+  }
+
+  test("predict scratch frames of ALSRec.predictFoldIn and ClusterRec: the last predict's only") {
+    val als = new ALSRec(rank = 2, maxIter = 2)
+    assertScratchOwned("ALSRec.predictFoldIn", 1)(als.fit(_))(Nil) { qs =>
+      als.predictFoldIn(timedLog, 3, Some(qs)).collect()
+    }
+    // ClusterRec recommends to the queries of the log it is given
+    val features = (1L to 8L).map(q => (q, (q % 3).toDouble, (q % 2).toDouble))
+      .toDF("query_id", "f1", "f2")
+    val cluster = new ClusterRec(nClusters = 2)
+    assertScratchOwned("ClusterRec.predict", 1)(cluster.fit(_, features))(
+      Seq(cluster.queryClusters, cluster.clusterItems)) { qs =>
+      cluster.predict(timedLog.join(qs, Seq("query_id"), "left_semi"), 3).collect()
     }
   }
 }
