@@ -461,7 +461,7 @@ object SparkEntry {
         .select("n_queries", "k", "recall_ok")
     }),
     "model_als_ann_recall" -> ((s, d) => {
-      // IVF-routed ALS predict vs MLlib's exact blocked top-k on ONE
+      // IVF-routed ALS predict vs the exact top-k on ONE
       // shared fit (ALSRec.setAnn — r8, the ALS twin of the W2V recall
       // certificate): recall@5 ≥ 0.95, threshold-gated
       val i = Tables.interactions(s, d)

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 
 /** Materialization and release of frames a model or operator owns.
   *
@@ -43,14 +43,17 @@ object Persist {
     next
   }
 
-  /** Free the blocks of `localCheckpoint`ed frames. `Dataset.unpersist`
-    * does not: the checkpoint is no CacheManager entry but a persisted RDD
-    * under the frame's `LogicalRDD`, which stays in `getPersistentRDDs`.
-    * Frames planned on top of the checkpoint can no longer be computed
-    * afterwards — release only superseded or fully consumed checkpoints. */
+  /** Free the blocks of `localCheckpoint`ed frames, and of frames made
+    * from a persisted RDD (MLlib's ALS factors). `Dataset.unpersist` does
+    * not: such a block is no CacheManager entry but a persisted RDD under
+    * the frame's `LogicalRDD` or `ExternalRDD`, which stays in
+    * `getPersistentRDDs`. Frames planned on top of a checkpoint can no
+    * longer be computed afterwards — release only superseded or fully
+    * consumed checkpoints; an RDD with lineage recomputes. */
   def releaseCheckpoint(dfs: DataFrame*): Unit =
     dfs.foreach(_.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = true)
-      case _             => ()
+      case r: LogicalRDD     => r.rdd.unpersist(blocking = true)
+      case r: ExternalRDD[_] => r.rdd.unpersist(blocking = true)
+      case _                 => ()
     })
 }

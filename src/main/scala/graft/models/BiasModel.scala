@@ -79,6 +79,7 @@ final class BiasModel(
     * concatenated events. */
   def fitFromStats(stats0: DataFrame): this.type = {
     require(lambdaItem >= 0 && lambdaUser >= 0, "damping must be >= 0")
+    releaseScratch()
     // r13 (guide §2.4): `stats` feeds four subtrees (global mean, item tier,
     // user tier, the entity frames) — for the streaming twin that plan is a
     // mapGroupsWithState object shuffle, recomputed per subtree uncached.

@@ -1,13 +1,33 @@
 package graft.models
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
-import graft.core.Ops
+import graft.core.{Ops, Persist}
 
-/** ALS wrapper (reference: replay/models/als.py:69-165).
-  * Implicit preference mode by default; predict uses
-  * `recommendForUserSubset` + explode for full-catalog ranking
-  * (als.py:107-130); predictPairs scores via model.transform. */
+/** ALS wrapper (reference: replay/models/als.py:69-165). Implicit
+  * preference mode by default; predictPairs scores via model.transform.
+  *
+  * Exact predict (no ANN index, no `items` restriction) is one pass over
+  * the requested users: each user's factor row, joined with the user's
+  * seen item ids, is scored against every item factor by the BLAS call
+  * MLlib's `recommendForAll` makes (`sgemv`, so the scores are the same
+  * floats), and a bounded heap keeps the top k unseen items under
+  * (rating desc, item asc) ([[AlsTopK]]). Next to [[NeighbourRec]], this
+  * is the second predict without [[PredictScratch.seenFilter]]: seen items
+  * are skipped while scoring, so there is no seen-pair cache, no maxSeen
+  * action, no top-(k + maxSeen) shuffle, explode, anti-join or final
+  * window.
+  *
+  * The item factors are model state: collected once per fit or
+  * [[ModelIO.loadALS]], sorted by id, and broadcast. The broadcast holds
+  * items × rank floats and one int id per item: 32 KB on the perfbench
+  * shape, about 40 MB for 1M items at rank 10, the same order as the item
+  * block MLlib's blocked top-k ships to each task.
+  *
+  * With an ANN index, predict scores the index's candidates; with `items`,
+  * it scores the candidate pairs via model.transform (the reference,
+  * als.py:137-146, also leaves the blocked top-k path there). Both then
+  * run the base seen filter. */
 final class ALSRec(
     val rank: Int = 10,
     val maxIter: Int = 10,
@@ -15,13 +35,17 @@ final class ALSRec(
     val implicitPrefs: Boolean = true,
     val seed: Long = 42,
     // optional pluggable ANN index over the item factors (reference
-    // ann_mixin.py:78-186 via als.py's HnswlibMixin); None → MLlib's exact
-    // blocked recommendForUserSubset
+    // ann_mixin.py:78-186 via als.py's HnswlibMixin); None → the exact
+    // one-pass top-k over the broadcast item factors
     val ann: Option[AnnIndex] = None,
     cols: RecCols = RecCols(),
 ) extends BaseRecommender(cols) {
   import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-  var model: ALSModel = _
+  private var fitted: ALSModel = _
+  // (ids ascending, rank × n column-major factors) of `fitted`'s items
+  private var itemMatrix: Broadcast[(Array[Int], Array[Float])] = _
+
+  def model: ALSModel = fitted
 
   // Active candidate index — the constructor's `ann` until swapped via
   // [[setAnn]] on a fitted model. Unlike Word2Vec, ALS at a fixed seed IS
@@ -31,17 +55,19 @@ final class ALSRec(
   def annIndex: Option[AnnIndex] = annIx
 
   /** Swap the candidate index on a fitted model (fits it against the
-    * current item factors); None restores MLlib's exact blocked top-k. */
+    * current item factors); None restores the exact top-k. */
   def setAnn(a: Option[AnnIndex]): this.type = {
     annIx = a
-    if (model != null) annIx.foreach(_.fit(
-      model.itemFactors.select(F.col("id").cast("long").as(cols.item),
-        F.col("features")), cols.item, "features"))
+    if (fitted != null) annIx.foreach(fitAnn)
     this
   }
 
-  protected def doFit(log: DataFrame): Unit = {
-    model = new ALS()
+  private def fitAnn(ix: AnnIndex): Unit = ix.fit(
+    fitted.itemFactors.select(F.col("id").cast("long").as(cols.item),
+      F.col("features")), cols.item, "features")
+
+  protected def doFit(log: DataFrame): Unit =
+    install(new ALS()
       .setRank(rank).setMaxIter(maxIter).setRegParam(regParam)
       .setImplicitPrefs(implicitPrefs).setSeed(seed)
       .setUserCol(cols.query).setItemCol(cols.item).setRatingCol(cols.rating)
@@ -49,35 +75,76 @@ final class ALSRec(
       .fit(log.select(
         F.col(cols.query).cast("int").as(cols.query),
         F.col(cols.item).cast("int").as(cols.item),
-        F.col(cols.rating).cast("float").as(cols.rating)))
-    annIx.foreach(_.fit(
-      model.itemFactors.select(F.col("id").cast("long").as(cols.item),
-        F.col("features")), cols.item, "features"))
+        F.col(cols.rating).cast("float").as(cols.rating))))
+
+  /** Makes `m` the fitted model (fit, [[ModelIO.loadALS]]): releases the
+    * factor RDDs and the item-factor broadcast of the model it replaces,
+    * broadcasts m's item factors and fits the ANN index to them. MLlib's
+    * factors are frames over persisted RDDs, which `Dataset.unpersist`
+    * does not reach. The old broadcast is unpersisted, not destroyed, so
+    * a predict planned before the refit still computes; its driver copy
+    * goes when no plan refers to it any more. */
+  private[models] def install(m: ALSModel): Unit = {
+    if (fitted != null) Persist.releaseCheckpoint(fitted.userFactors, fitted.itemFactors)
+    if (itemMatrix != null) itemMatrix.unpersist()
+    val spark = m.itemFactors.sparkSession
+    import spark.implicits._
+    val byId = m.itemFactors.select("id", "features").as[(Int, Array[Float])]
+      .collect().sortBy(_._1)
+    itemMatrix = spark.sparkContext.broadcast((byId.map(_._1), byId.flatMap(_._2)))
+    fitted = m
+    annIx.foreach(fitAnn)
+  }
+
+  override def predict(
+      log: DataFrame,
+      k: Int,
+      queries: Option[DataFrame] = None,
+      filterSeen: Boolean = true,
+      items: Option[DataFrame] = None,
+  ): DataFrame = {
+    if (annIx.isDefined || items.isDefined)
+      return super.predict(log, k, queries, filterSeen, items)
+    releaseScratch()
+    val spark = log.sparkSession
+    import spark.implicits._
+    val qs = queries.orElse(Option(fitQueriesDf))
+      .getOrElse(log.select(cols.query).distinct())
+    // absent from the fit → no factor row → dropped, as MLlib drops them
+    val users = fitted.userFactors.select("id", "features")
+      .join(qs.select(F.col(cols.query).cast("int").as("id")), Seq("id"), "left_semi")
+    val withSeen =
+      if (filterSeen)
+        users.join(log.join(qs, Seq(cols.query), "left_semi")
+            .groupBy(F.col(cols.query).cast("long").as("_q"))
+            .agg(F.collect_set(F.col(cols.item).cast("long")).as("_seen")),
+          F.col("id").cast("long") === F.col("_q"), "left")
+          .select("id", "features", "_seen")
+      else users.withColumn("_seen", F.lit(null).cast("array<bigint>"))
+    // locals, so that the task closure does not capture the model
+    val (factors, r) = (itemMatrix, fitted.rank)
+    withSeen.as[(Int, Array[Float], Array[Long])].mapPartitions { rows =>
+      val topK = new AlsTopK(factors.value._1, factors.value._2, r, k)
+      rows.flatMap { case (u, f, seen) =>
+        topK(f, seen).iterator.map { case (i, s) => (u.toLong, i.toLong, s.toDouble) }
+      }
+    }.toDF(cols.query, cols.item, cols.rating)
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,
       items: Option[DataFrame] = None): DataFrame =
-    (annIx, items) match {
-      case (_, Some(it)) =>
-        // candidate restriction → score explicit pairs via model.transform
-        // (reference als.py:137-146 switches off the blocked top-k path)
+    items match {
+      case Some(it) =>
         predictPairs(queries.select(cols.query).crossJoin(
           it.select(cols.item).distinct()), null)
-      case (Some(ix), None) =>
-        val uf = model.userFactors
+      case None =>
+        val uf = fitted.userFactors
           .select(F.col("id").cast("long").as(cols.query), F.col("features"))
           .join(queries.select(F.col(cols.query).cast("long").as(cols.query)),
             Seq(cols.query), "left_semi")
-        ix.candidates(uf, cols.query, "features")
+        annIx.get.candidates(uf, cols.query, "features")
           .select(F.col(cols.query), F.col(cols.item).cast("long").as(cols.item),
             F.col("score").cast("double").as(cols.rating))
-      case (None, None) =>
-        val users = queries.select(F.col(cols.query).cast("int").as(cols.query))
-        model.recommendForUserSubset(users, k + maxSeen)
-          .select(F.col(cols.query), F.explode(F.col("recommendations")).as("_r"))
-          .select(F.col(cols.query).cast("long").as(cols.query),
-            F.col("_r.item_id").cast("long").as(cols.item),
-            F.col("_r.rating").cast("double").as(cols.rating))
     }
 
   def predictPairs(pairs: DataFrame, log: DataFrame): DataFrame =
@@ -222,6 +289,68 @@ final class ALSRec(
     maxIter, regParam, implicitPrefs, seed, ann, cols)
 }
 
+/** One task's exact ALS top-k: `ids` ascending, `mat` their rank × n
+  * column-major factors. [[apply]] scores every item for one user, skips
+  * the user's seen items and returns the top `k` of the rest, or all of
+  * them when fewer, under (rating desc, item asc). The buffers are reused
+  * from user to user, so an instance serves one task at a time. */
+private[models] final class AlsTopK(ids: Array[Int], mat: Array[Float], rank: Int, k: Int) {
+  private val n = ids.length
+  private val blas = dev.ludovic.netlib.blas.JavaBLAS.getInstance()
+  private val scores = new Array[Float](n)
+  private val skip = new Array[Boolean](n)
+  // item indices, a min-heap whose root ranks last; an index orders as
+  // its id does, so the index breaks score ties
+  private val heap = new Array[Int](math.max(0, math.min(k, n)))
+
+  private def after(a: Int, b: Int): Boolean =
+    scores(a) < scores(b) || (scores(a) == scores(b) && a > b)
+
+  private def siftUp(at: Int): Unit = {
+    var c = at
+    while (c > 0 && after(heap(c), heap((c - 1) / 2))) {
+      swap(c, (c - 1) / 2); c = (c - 1) / 2
+    }
+  }
+
+  private def siftDown(size: Int): Unit = {
+    var p = 0
+    var done = false
+    while (!done) {
+      val (l, r) = (2 * p + 1, 2 * p + 2)
+      var m = p
+      if (l < size && after(heap(l), heap(m))) m = l
+      if (r < size && after(heap(r), heap(m))) m = r
+      if (m == p) done = true else { swap(p, m); p = m }
+    }
+  }
+
+  private def swap(a: Int, b: Int): Unit = {
+    val t = heap(a); heap(a) = heap(b); heap(b) = t
+  }
+
+  /** (item id, score) of the top unseen items; `seen` may be null. */
+  def apply(user: Array[Float], seen: Array[Long]): Array[(Int, Float)] = {
+    // the call MLlib's recommendForAll scores a block with
+    blas.sgemv("T", rank, n, 1.0f, mat, 0, rank, user, 0, 1, 0.0f, scores, 0, 1)
+    val marked = Option(seen).getOrElse(Array.emptyLongArray).collect {
+      case s if s.isValidInt => java.util.Arrays.binarySearch(ids, s.toInt)
+    }.filter(_ >= 0)
+    marked.foreach(skip(_) = true)
+    var size = 0
+    var j = 0
+    while (j < n) {
+      if (!skip(j)) {
+        if (size < heap.length) { heap(size) = j; size += 1; siftUp(size - 1) }
+        else if (after(heap(0), j)) { heap(0) = j; siftDown(size) }
+      }
+      j += 1
+    }
+    marked.foreach(skip(_) = false)
+    Array.tabulate(size)(i => (ids(heap(i)), scores(heap(i))))
+  }
+}
+
 /** Word2Vec item-embedding recommender
   * (reference: replay/models/word2vec.py:117-238).
   * fit: per-user time-sorted item "sentences" (collect_list of structs +
@@ -296,10 +425,10 @@ final class Word2VecRec(
       .setNumPartitions(math.max(1, parts))
       .setInputCol("sentence").setOutputCol("_uv")
     val model = w2v.fit(sentences)
-    itemVectors = model.getVectors
+    itemVectors = Persist.replace(itemVectors, model.getVectors
       .select(F.col("word").cast("long").as(cols.item),
         org.apache.spark.ml.functions.vector_to_array(F.col("vector")).as("vec"))
-      .cache()
+      .cache())
 
     val idf =
       if (useIdf) {
@@ -320,7 +449,7 @@ final class Word2VecRec(
       .join(itemVectors, Seq(cols.item)).join(idf, Seq(cols.item))
       .select(F.col(cols.query),
         F.transform(F.col("vec"), x => x * F.col("_idf")).as("wvec"))
-    userVectors = hist
+    userVectors = Persist.replace(userVectors, hist
       .select(F.col(cols.query), F.posexplode(F.col("wvec")))
       .toDF(cols.query, "_i", "_v")
       .groupBy(cols.query, "_i")
@@ -329,7 +458,7 @@ final class Word2VecRec(
       .agg(F.transform(
         F.sort_array(F.collect_list(F.struct(F.col("_i"), F.col("_m")))),
         s => s.getField("_m")).as("vec"))
-      .cache()
+      .cache())
     userVectors.count()
 
     annIx.foreach(_.fit(itemVectors, cols.item, "vec"))
@@ -417,18 +546,18 @@ final class ClusterRec(
     // small parquet scan (1 partition), and predict fans every query row
     // out to the full per-cluster catalog — cached at 1 partition that
     // 300M-row expansion would run in a single task
-    queryClusters = km.transform(assembled)
+    queryClusters = Persist.replace(queryClusters, km.transform(assembled)
       .select(F.col(cols.query), F.col("cluster"))
-      .repartition(F.col(cols.query)).cache()
+      .repartition(F.col(cols.query)).cache())
 
     val withCluster = log.join(queryClusters, Seq(cols.query))
     val counts = withCluster.groupBy("cluster", cols.item)
       .agg(F.count(F.lit(1)).as("_cnt"))
     val maxes = counts.groupBy("cluster").agg(F.max("_cnt").as("_mx"))
-    clusterItems = counts.join(maxes, Seq("cluster"))
+    clusterItems = Persist.replace(clusterItems, counts.join(maxes, Seq("cluster"))
       .select(F.col("cluster"), F.col(cols.item),
         (F.col("_cnt").cast("double") / F.col("_mx")).as(cols.rating))
-      .cache()
+      .cache())
     clusterItems.count()
     assembled.unpersist(false)
     this

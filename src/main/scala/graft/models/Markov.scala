@@ -82,9 +82,11 @@ final class MarkovRec(
     * concatenated user-disjoint slices (minCount applied here). */
   def fitFromStats(stats: DataFrame): this.type = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
+    releaseScratch()
     transitions = Persist.replace(transitions,
       stats.filter(F.col("cnt") >= minCount).cache())
     transitions.count()
+    replaceFitFrames(transitions.select(F.col("item_one").as(cols.item)).distinct())
     this
   }
 

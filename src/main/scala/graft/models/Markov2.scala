@@ -91,10 +91,12 @@ final class Markov2Rec(
     * concatenated user-disjoint slices. */
   def fitFromStats(t2Stats: DataFrame, t1Stats: DataFrame): this.type = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
+    releaseScratch()
     transitions2 = Persist.replace(transitions2,
       t2Stats.filter(F.col("cnt") >= minCount).cache())
     transitions2.count()
     backoffTier.fitFromStats(t1Stats)
+    replaceFitFrames(backoff.transitions.select(F.col("item_one").as(cols.item)).distinct())
     this
   }
 

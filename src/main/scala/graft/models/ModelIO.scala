@@ -251,14 +251,11 @@ object ModelIO {
       implicitPrefs = p.getOrElse("implicitPrefs", "true").toBoolean,
       seed = p.getOrElse("seed", "42").toLong,
       ann = ann)
-    m.model = ALSModel.load(s"$path/als_model")
+    m.install(ALSModel.load(s"$path/als_model"))
     m.fitQueriesDf = m.model.userFactors
       .select(F.col("id").cast("long").as(m.cols.query))
     m.fitItemsDf = m.model.itemFactors
       .select(F.col("id").cast("long").as(m.cols.item))
-    ann.foreach(_.fit(
-      m.model.itemFactors.select(F.col("id").cast("long").as(m.cols.item),
-        F.col("features")), m.cols.item, "features"))
     m
   }
 

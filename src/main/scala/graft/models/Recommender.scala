@@ -78,7 +78,8 @@ private[models] trait PredictScratch {
   * subclasses that override predict, takes the seen pairs and the crop
   * width from [[PredictScratch.seenFilter]] and crops its own candidates
   * to k + maxSeen (globally, per query, per source item, per cluster)
-  * before the anti-join. [[NeighbourRec]] is the one exception.
+  * before the anti-join. There are two exceptions, which skip seen items
+  * while they score: [[NeighbourRec]] and the exact path of [[ALSRec]].
   *
   * State is a plan LEAF: `materialize` caches it through
   * [[graft.core.Persist.leaf]] (reference `cache().count()`,
@@ -111,6 +112,16 @@ abstract class BaseRecommender(val cols: RecCols = RecCols())
     fitItemsDf = Persist.replace(fitItemsDf, keepFitItems(log.select(cols.item).distinct()))
     doFit(log)
     this
+  }
+
+  /** The fit frames after a refit from sufficient statistics that carry
+    * no query ids (the Markov models): the fit queries go, so a predict
+    * without `queries` takes the log's, as for a loaded model, and `items`
+    * become the fit items. */
+  protected def replaceFitFrames(items: DataFrame): Unit = {
+    if (fitQueriesDf != null) fitQueriesDf.unpersist()
+    fitQueriesDf = null
+    fitItemsDf = Persist.replace(fitItemsDf, items.cache())
   }
 
   /** How [[fit]] keeps the distinct fit items: a lazy `cache()`, which a
@@ -494,10 +505,10 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
   * materialized [[graft.core.Persist.leaf]]: its real size lets the planner
   * broadcast the side by size, as before.
   *
-  * This is the one predict without [[PredictScratch.seenFilter]]: the
-  * distinct seen pairs and their anti-join would cost a second scan of the
-  * log and two more exchanges on every serving request, so it caches no
-  * scratch frame.
+  * This predict, like [[ALSRec]]'s exact one, runs without
+  * [[PredictScratch.seenFilter]]: the distinct seen pairs and their
+  * anti-join would cost a second scan of the log and two more exchanges on
+  * every serving request, so it caches no scratch frame.
   */
 abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
   /** (item_one, item_two, similarity) — materialized by doFit. */

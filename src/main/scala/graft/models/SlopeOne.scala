@@ -132,6 +132,7 @@ final class SlopeOne(
   /** Rebuild the full fit from merged stats — bit-exact vs [[fit]] on the
     * concatenated user-disjoint slices. */
   def fitFromStats(half: DataFrame, cappedRatings: DataFrame): this.type = {
+    releaseScratch()
     materializeFrom(half, cappedRatings.withColumnRenamed("r_ppm", "_r"),
       cacheHalf = true)
     fitQueriesDf = Persist.replace(fitQueriesDf,

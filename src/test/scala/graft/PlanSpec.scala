@@ -113,6 +113,24 @@ class PlanSpec extends SparkSpec {
     assert(!plan.toString.contains("LeftAnti"), s"seen filter planned as an anti-join:\n$plan")
   }
 
+  test("exact ALS predict: no explode, no anti-join, no blocked top-k aggregation") {
+    import spark.implicits._
+    val fitLog = (for (u <- 1L to 20L; i <- 1L to 15L if (u * 7 + i * 3) % 5 < 2)
+      yield (u, i, 1.0)).toDF("query_id", "item_id", "rating")
+    val m = new graft.models.ALSRec(rank = 3, maxIter = 2).fit(fitLog)
+    val qs = (1L to 10L).toDF("query_id")
+    val old = executedPlan(
+      graft.models.AlsPredictSpec.oldPredict(m, fitLog, 5, qs, filterSeen = true))
+    val plan = executedPlan(m.predict(fitLog, 5, Some(qs)))
+    // MLlib's per-user top-k aggregate is collect_top_k in Spark 4, its
+    // TopByKeyAggregator before
+    for (node <- Seq("Generate", "LeftAnti", "collect_top_k")) {
+      assert(old.contains(node), s"vacuous: the replaced plan has no $node")
+      assert(!plan.contains(node), s"exact ALS predict plans $node:\n$plan")
+    }
+    assert(!plan.contains("TopByKeyAggregator"), plan)
+  }
+
   test("entity-set ranks avoid single-partition global windows") {
     // NewUsers/ColdUser splitters and the global item rank use the
     // range-partition + zipWithIndex rank — a Window node here would mean

@@ -159,22 +159,33 @@ class KnnKernelSpec extends SparkSpec {
     val markov2 = new Markov2Rec()
     val random = new RandomRec()
     val bias = new BiasModel()
+    val als = new ALSRec(rank = 2, maxIter = 2)
+    val alsX = new ALSRec(rank = 2, maxIter = 2, implicitPrefs = false)
+    val w2v = new Word2VecRec(vectorSize = 4)
+    val cluster = new ClusterRec(nClusters = 2)
+    val features = (1L to 8L).map(q => (q, (q % 3).toDouble, (q % 2).toDouble))
+      .toDF("query_id", "f1", "f2")
+    // the fitFromStats refits below drop the Markov models' fit queries
     def state = Seq(p3.similarity, p3.userDegrees, p3.trainPairs, p3.fitQueries, p3.fitItems,
       s1.deviations, s1.ratings, s1.fitQueries, s1.fitItems,
       markov.transitions, markov.fitQueries, markov.fitItems,
       markov2.transitions2, markov2.backoff.transitions, markov2.backoff.fitQueries,
       markov2.backoff.fitItems, markov2.fitQueries, markov2.fitItems,
       random.itemWeights, random.fitQueries, random.fitItems,
-      bias.itemBias, bias.userBias, bias.fitQueries, bias.fitItems)
+      bias.itemBias, bias.userBias, bias.fitQueries, bias.fitItems,
+      als.fitQueries, als.fitItems, alsX.fitQueries, alsX.fitItems,
+      w2v.itemVectors, w2v.userVectors, w2v.fitQueries, w2v.fitItems,
+      cluster.queryClusters, cluster.clusterItems).filter(_ != null)
     // the Markov models order each history by timestamp
     val timed = log.withColumn("timestamp", F.col("item_id"))
     // a repeated input shares the cache entries of the frames it replaces
     for (in <- Seq(timed, timed, timed.filter($"query_id" <= 5))) {
-      for (m <- Seq(p3, s1, markov, markov2, random, bias)) {
+      for (m <- Seq(p3, s1, markov, markov2, random, bias, als, alsX, w2v)) {
         m.fit(in)
         m.fitQueries.count()
         m.fitItems.count()
       }
+      cluster.fit(in, features)
       markov2.backoff.fitItems.count()
       assert(state.forall(_.storageLevel.useMemory), "current state must stay cached")
     }
@@ -191,6 +202,8 @@ class KnnKernelSpec extends SparkSpec {
     val (t2, t1) = markov2.mergeStats(markov2.transStats(lo), markov2.transStats(hi))
     markov2.fitFromStats(t2, t1)
     state.foreach(_.unpersist())
+    // MLlib's ALS factors are frames over persisted RDDs
+    for (m <- Seq(als, alsX)) graft.core.Persist.releaseCheckpoint(m.userFactors, m.itemFactors)
     assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
       "a refit left a cached frame of the replaced state behind")
   }

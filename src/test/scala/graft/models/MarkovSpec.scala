@@ -103,4 +103,19 @@ class MarkovSpec extends SparkSpec {
     // order: (10,1,4) → (10,2,5) → (10,3,6)
     assertSameRows(m.transitions, Seq((4L, 5L, 1L), (5L, 6L, 1L)))
   }
+
+  test("a refit from merged stats predicts for the log's users, not the previous fit's") {
+    def predicted(m: BaseRecommender) =
+      m.predict(log, k = 5, filterSeen = false).select("query_id").distinct()
+        .as[Long].collect().toSet
+    val (lo, hi) = (log.filter($"query_id" <= 2), log.filter($"query_id" === 3))
+    val m1 = new MarkovRec().fit(log.filter($"query_id" === 1))
+    m1.fitFromStats(m1.mergeStats(m1.transStats(lo), m1.transStats(hi)))
+    assert(predicted(m1) == Set(1L, 3L))
+    val m2 = new Markov2Rec().fit(log.filter($"query_id" === 1))
+    val (t2, t1) = m2.mergeStats(m2.transStats(lo), m2.transStats(hi))
+    m2.fitFromStats(t2, t1)
+    assert(predicted(m2) == Set(1L, 3L))
+    assert(m2.fitItems.as[Long].collect().toSet == Set(1L, 2L, 3L))
+  }
 }

@@ -216,4 +216,38 @@ class NeighbourPredictSpec extends SparkSpec {
       cluster.predict(timedLog.join(qs, Seq("query_id"), "left_semi"), 3).collect()
     }
   }
+
+  test("a refit from merged stats releases the last predict's scratch frames") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    val (lo, hi) = (timedLog.filter($"query_id" <= 3), timedLog.filter($"query_id" > 3))
+    val markov = new MarkovRec()
+    val markov2 = new Markov2Rec()
+    val bias = new BiasModel()
+    val slope = new SlopeOne()
+    val refits = Seq[(BaseRecommender, () => Unit)](
+      markov -> (() => markov.fitFromStats(
+        markov.mergeStats(markov.transStats(lo), markov.transStats(hi)))),
+      markov2 -> { () =>
+        val (t2, t1) = markov2.mergeStats(markov2.transStats(lo), markov2.transStats(hi))
+        markov2.fitFromStats(t2, t1)
+      },
+      bias -> (() => bias.fitFromStats(bias.mergeStats(bias.pairStats(lo), bias.pairStats(hi)))),
+      slope -> { () =>
+        val (half, ratings) = slope.mergeStats(slope.coStats(lo), slope.coStats(hi))
+        slope.fitFromStats(half, ratings)
+      })
+    for ((m, refit) <- refits) {
+      val name = m.getClass.getSimpleName
+      m.fit(timedLog)
+      val before = persisted
+      m.predict(timedLog, 3, Some(Seq(1L, 2L).toDF("query_id"))).collect()
+      val scratch = persisted -- before
+      assert(scratch.nonEmpty, s"$name: vacuous, predict cached nothing")
+      refit()
+      assert(scratch.intersect(persisted).isEmpty,
+        s"$name: a refit from stats kept the last predict's scratch frames")
+    }
+  }
 }
