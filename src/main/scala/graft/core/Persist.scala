@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.sql.types.StructType
 
 /** Materialization and release of frames a model or operator owns.
   *
@@ -26,8 +28,12 @@ object Persist {
   /** Cache `state` as a single-node plan and materialize it eagerly
     * (reference `cache().count()`, pop_rec.py:135). The returned frame is
     * owned by the caller and released with `unpersist()`. */
-  def leaf(state: DataFrame): DataFrame = {
-    val out = state.sparkSession.createDataFrame(state.rdd, state.schema).cache()
+  def leaf(state: DataFrame): DataFrame = leaf(state.sparkSession, state.rdd, state.schema)
+
+  /** [[leaf]] of rows that are not a frame yet (rows built with RDD
+    * operations, e.g. `zipWithIndex`). */
+  def leaf(spark: SparkSession, rows: RDD[Row], schema: StructType): DataFrame = {
+    val out = spark.createDataFrame(rows, schema).cache()
     // one job over the cache scan; `out.count()` would add a shuffle stage
     out.queryExecution.toRdd.count()
     out

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * maxCollectEntries — ADMM-SLIM is a dense-catalog model and does not
   * pretend to stream 10⁷ items. The learned similarity returns to a
   * distributed table and prediction inherits [[NeighbourRec]]'s
-  * join+aggregate path.
+  * one-pass predict.
   *
   * Iteration semantics mirror the reference (_main_iteration,
   * admm_slim.py:18-66) exactly, including two deliberate quirks:

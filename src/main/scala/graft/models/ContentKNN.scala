@@ -47,7 +47,7 @@ final class ContentKNN(
     features = Persist.replace(features,
       Persist.leaf(feats.select(F.col(cols.item), F.col("feature")).distinct()))
     fitItemsDf = Persist.replace(fitItemsDf,
-      Persist.leaf(features.select(F.col(cols.item)).distinct()))
+      features.select(F.col(cols.item)).distinct().cache())
     // r13 (guide §2.4): the capped cells feed norms + both self-join sides —
     // cache once instead of running the cap window three times.
     val cells = ItemKNN.cap(features, "feature", Seq(cols.item, "feature"),

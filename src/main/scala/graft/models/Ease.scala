@@ -24,7 +24,7 @@ import graft.core.Persist
   * upper triangle only, streamed to the driver with toLocalIterator — and
   * only the n×n dense algebra (one LAPACK inversion + one column rescale)
   * runs on the driver. The learned B returns to a distributed similarity
-  * table and prediction inherits [[NeighbourRec]]'s join+aggregate path:
+  * table and prediction inherits [[NeighbourRec]]'s one-pass predict:
   * score(u, j) = Σ_{i ∈ hist(u)} B_ij.
   *
   * CERTIFICATE: the fit stores `lastKktResidual` = max off-diagonal
@@ -147,7 +147,7 @@ final class Ease(
     }
     import spark.implicits._
     // this path fits from cells alone: its fit items are the Gram's items
-    fitItemsDf = Persist.replace(fitItemsDf, Persist.leaf(itemIds.toSeq.toDF(cols.item)))
+    fitItemsDf = Persist.replace(fitItemsDf, itemIds.toSeq.toDF(cols.item).cache())
     materialize(out.toSeq.toDF("item_one", "item_two", "similarity"))
     this
   }

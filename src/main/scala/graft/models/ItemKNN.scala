@@ -110,14 +110,16 @@ final class ItemKNN(
   }
 
   /** Materialize the similarity table from (possibly merged) co-stats —
-    * identical rows to a plain-cosine [[doFit]] over the same users. */
+    * identical rows to a plain-cosine [[doFit]] over the same users. The
+    * co-stats carry no user ids, so the previous fit's queries go: a
+    * predict without `queries` takes the log's. */
   def fitFromStats(pairs: DataFrame, dfs: DataFrame): this.type = {
     require(weighting.isEmpty,
       "sufficient-stats refit is the plain-cosine path")
     ItemKNN.topK(pairs, dfs, cols.item, "item_one", "item_two", numNeighbours,
       shrink)(materialize)
     // dfs holds one row per item (coStats and mergeStats group by item)
-    fitItemsDf = Persist.replace(fitItemsDf, Persist.leaf(dfs.select(F.col(cols.item))))
+    replaceFitFrames(dfs.select(F.col(cols.item)))
     this
   }
 

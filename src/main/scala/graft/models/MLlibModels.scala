@@ -289,68 +289,6 @@ final class ALSRec(
     maxIter, regParam, implicitPrefs, seed, ann, cols)
 }
 
-/** One task's exact ALS top-k: `ids` ascending, `mat` their rank × n
-  * column-major factors. [[apply]] scores every item for one user, skips
-  * the user's seen items and returns the top `k` of the rest, or all of
-  * them when fewer, under (rating desc, item asc). The buffers are reused
-  * from user to user, so an instance serves one task at a time. */
-private[models] final class AlsTopK(ids: Array[Int], mat: Array[Float], rank: Int, k: Int) {
-  private val n = ids.length
-  private val blas = dev.ludovic.netlib.blas.JavaBLAS.getInstance()
-  private val scores = new Array[Float](n)
-  private val skip = new Array[Boolean](n)
-  // item indices, a min-heap whose root ranks last; an index orders as
-  // its id does, so the index breaks score ties
-  private val heap = new Array[Int](math.max(0, math.min(k, n)))
-
-  private def after(a: Int, b: Int): Boolean =
-    scores(a) < scores(b) || (scores(a) == scores(b) && a > b)
-
-  private def siftUp(at: Int): Unit = {
-    var c = at
-    while (c > 0 && after(heap(c), heap((c - 1) / 2))) {
-      swap(c, (c - 1) / 2); c = (c - 1) / 2
-    }
-  }
-
-  private def siftDown(size: Int): Unit = {
-    var p = 0
-    var done = false
-    while (!done) {
-      val (l, r) = (2 * p + 1, 2 * p + 2)
-      var m = p
-      if (l < size && after(heap(l), heap(m))) m = l
-      if (r < size && after(heap(r), heap(m))) m = r
-      if (m == p) done = true else { swap(p, m); p = m }
-    }
-  }
-
-  private def swap(a: Int, b: Int): Unit = {
-    val t = heap(a); heap(a) = heap(b); heap(b) = t
-  }
-
-  /** (item id, score) of the top unseen items; `seen` may be null. */
-  def apply(user: Array[Float], seen: Array[Long]): Array[(Int, Float)] = {
-    // the call MLlib's recommendForAll scores a block with
-    blas.sgemv("T", rank, n, 1.0f, mat, 0, rank, user, 0, 1, 0.0f, scores, 0, 1)
-    val marked = Option(seen).getOrElse(Array.emptyLongArray).collect {
-      case s if s.isValidInt => java.util.Arrays.binarySearch(ids, s.toInt)
-    }.filter(_ >= 0)
-    marked.foreach(skip(_) = true)
-    var size = 0
-    var j = 0
-    while (j < n) {
-      if (!skip(j)) {
-        if (size < heap.length) { heap(size) = j; size += 1; siftUp(size - 1) }
-        else if (after(heap(0), j)) { heap(0) = j; siftDown(size) }
-      }
-      j += 1
-    }
-    marked.foreach(skip(_) = false)
-    Array.tabulate(size)(i => (ids(heap(i)), scores(heap(i))))
-  }
-}
-
 /** Word2Vec item-embedding recommender
   * (reference: replay/models/word2vec.py:117-238).
   * fit: per-user time-sorted item "sentences" (collect_list of structs +

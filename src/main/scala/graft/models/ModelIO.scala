@@ -215,9 +215,8 @@ object ModelIO {
       case other => throw new IllegalArgumentException(s"unknown neighbour kind $other")
     }
     m.similarity = spark.read.parquet(s"$path/similarity").cache()
-    // both sides: predict's seen filter needs every item_two among them
-    m.fitItemsDf = Persist.leaf(m.similarity.select(F.col("item_one").as(m.cols.item))
-      .union(m.similarity.select(F.col("item_two").as(m.cols.item))).distinct())
+    m.fitItemsDf = m.similarity.select(F.col("item_one").as(m.cols.item))
+      .union(m.similarity.select(F.col("item_two").as(m.cols.item))).distinct()
     m
   }
 
@@ -516,7 +515,7 @@ object ModelIO {
         throw new IllegalArgumentException(s"unknown handleUnknown policy $other")
     }
     LabelEncoder.fromState(
-      spark.read.parquet(s"$path/mapping").cache(), p("column"), policy)
+      Persist.leaf(spark.read.parquet(s"$path/mapping")), p("column"), policy)
   }
 
   // ---- Markov ------------------------------------------------------------
@@ -628,7 +627,7 @@ object ModelIO {
       maxFeatureAudience = p.getOrElse("maxFeatureAudience", "1000").toInt)
     m.similarity = spark.read.parquet(s"$path/similarity").cache()
     m.features = spark.read.parquet(s"$path/features").cache()
-    m.fitItemsDf = Persist.leaf(m.features.select(F.col(m.cols.item)).distinct())
+    m.fitItemsDf = m.features.select(F.col(m.cols.item)).distinct()
     m
   }
 

@@ -1,7 +1,9 @@
 package graft.models
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, functions => F}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.core.{Ops, Persist}
 
 /** Column roles shared by all recommenders. */
@@ -89,10 +91,14 @@ private[models] trait PredictScratch {
   * predict cached (the seen pairs and any other frame a predict caches,
   * [[PredictScratch]]). A refit of the same instance releases the state
   * frames it replaces ([[graft.core.Persist.replace]]) and drops the memos
-  * derived from the old state; a predict releases the previous predict's
-  * scratch frames, a `fit` the last ones. The caller that discards a
-  * model, or replaces it with another instance, releases that model's
-  * state with `unpersist()`.
+  * derived from the old state. Broadcasts built from the state
+  * ([[ALSRec]]'s item factors, [[NeighbourRec]]'s adjacency) are state
+  * too: a refit unpersists the replaced one and does not destroy it, so a
+  * predict planned before the refit still computes. A predict releases
+  * the previous predict's scratch frames, a `fit` the last ones. The
+  * caller that discards a model, or replaces it with another instance,
+  * releases that model's state frames with `unpersist()`; its broadcasts
+  * go with the model.
   */
 abstract class BaseRecommender(val cols: RecCols = RecCols())
     extends Serializable with PredictScratch {
@@ -109,13 +115,13 @@ abstract class BaseRecommender(val cols: RecCols = RecCols())
     releaseScratch()
     // distinct entity frames, broadcast later by AQE (base_rec.py:99-137)
     fitQueriesDf = Persist.replace(fitQueriesDf, log.select(cols.query).distinct().cache())
-    fitItemsDf = Persist.replace(fitItemsDf, keepFitItems(log.select(cols.item).distinct()))
+    fitItemsDf = Persist.replace(fitItemsDf, log.select(cols.item).distinct().cache())
     doFit(log)
     this
   }
 
   /** The fit frames after a refit from sufficient statistics that carry
-    * no query ids (the Markov models): the fit queries go, so a predict
+    * no query ids (the Markov models, ItemKNN): the fit queries go, so a predict
     * without `queries` takes the log's, as for a loaded model, and `items`
     * become the fit items. */
   protected def replaceFitFrames(items: DataFrame): Unit = {
@@ -123,10 +129,6 @@ abstract class BaseRecommender(val cols: RecCols = RecCols())
     fitQueriesDf = null
     fitItemsDf = Persist.replace(fitItemsDf, items.cache())
   }
-
-  /** How [[fit]] keeps the distinct fit items: a lazy `cache()`, which a
-    * refit on the same input shares. */
-  protected def keepFitItems(items: DataFrame): DataFrame = items.cache()
 
   /** Restrict an item-keyed state frame to a candidate item set
     * (reference `_filter_interactions_queries_items_dataframes`,
@@ -489,39 +491,49 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
   * "sum of similarities of my seen items to the candidate"
   * (reference: base_neighbour_rec.py:55-127).
   *
-  * Predict shuffles once. The requested users' history rows (repeat
-  * purchases count) are repartitioned by query; everything after that is
-  * local to a query's partition: a broadcast join onto the similarity
-  * table, the per-(query, candidate) sum and the top-k window, whose
-  * clustering on the query the repartition already satisfies.
+  * The table is model state twice over: [[similarity]], a cached plan
+  * leaf (save/load, pair scoring, explain, nearest items), and its
+  * adjacency as CSR arrays ([[NeighbourTable]]), collected and broadcast
+  * once whenever the table is set (fit, refit, [[ModelIO]] load). A refit
+  * unpersists the replaced broadcast; it is not destroyed, so a predict
+  * planned before the refit still computes, and its driver copy goes when
+  * no plan refers to it any more. The collect is bounded by the fits:
+  * ItemKNN, ContentKNN and AssociationRules crop to k neighbours per item,
+  * SLIM caps them at `maxNeighbours`, and EASE and AdmmSlim build the
+  * table from driver arrays. Item ids must be integral.
   *
-  * The seen filter needs no anti-join and no second scan of the log. The
-  * broadcast side also carries one SELF ROW `(item, item, null)` per fit
-  * item, so a history item that reaches itself lands in its own candidate
-  * group; `sum` skips the null, so scores are unchanged, and a group with
-  * more rows than similarities (`count(1) > count(similarity)`) is a seen
-  * item and is dropped. This needs every `item_two` of the similarity in
-  * [[fitItems]], which every fit path and the loader keep as a
-  * materialized [[graft.core.Persist.leaf]]: its real size lets the planner
-  * broadcast the side by size, as before.
-  *
-  * This predict, like [[ALSRec]]'s exact one, runs without
-  * [[PredictScratch.seenFilter]]: the distinct seen pairs and their
-  * anti-join would cost a second scan of the log and two more exchanges on
-  * every serving request, so it caches no scratch frame.
+  * Predict shuffles once: the requested users' history rows (repeat
+  * purchases count) are repartitioned by query and sorted within each
+  * partition. One `mapPartitions` pass ([[NeighbourScorer]]) then sums each
+  * user's rows over the broadcast adjacency, skips the user's own items
+  * when `filterSeen`, rounds each rating to 9 decimals (float sums depend
+  * on the summation order at the last ulp; the rounded rating ranks
+  * equal candidates the same way in every run) and keeps the top k under
+  * (rating desc, item asc). `items` restricts the candidates before the
+  * crop. There is no seen-pair anti-join, aggregate or rank window, and
+  * this predict, like [[ALSRec]]'s exact one, runs without
+  * [[PredictScratch.seenFilter]], so it caches no scratch frame.
   */
 abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
+  private var table: DataFrame = _
+  private[models] var adjacency: Broadcast[NeighbourTable] = _
+
   /** (item_one, item_two, similarity) — materialized by doFit. */
-  var similarity: DataFrame = _
+  def similarity: DataFrame = table
+
+  /** Sets the similarity table and broadcasts its adjacency, unpersisting
+    * the broadcast of the table it replaces. */
+  def similarity_=(df: DataFrame): Unit = {
+    val next = df.sparkSession.sparkContext.broadcast(NeighbourTable(df))
+    if (adjacency != null) adjacency.unpersist()
+    adjacency = next
+    table = df
+  }
 
   protected def materialize(state: DataFrame): Unit = {
     releasePairScores() // the memo scored the previous similarity table
     similarity = Persist.replace(similarity, Persist.leaf(state))
   }
-
-  /** The fit items are the seen filter's self rows: a leaf, so the
-    * broadcast side's size estimate is real. */
-  override protected def keepFitItems(items: DataFrame): DataFrame = Persist.leaf(items)
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,
       items: Option[DataFrame] = None): DataFrame =
@@ -536,30 +548,20 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
   ): DataFrame = {
     val qs = queries.orElse(Option(fitQueriesDf))
       .getOrElse(log.select(cols.query).distinct())
+    // sorted by item too, so that a candidate's sum adds its terms in the
+    // same order in every run
     val history = log.join(qs, Seq(cols.query), "left_semi")
-      .select(F.col(cols.query), F.col(cols.item))
+      .select(F.col(cols.query), F.col(cols.item).cast("long"))
       .repartition(F.col(cols.query))
-    val selfRows = fitItemsDf.select(F.col(cols.item).as("item_one"),
-      F.col(cols.item).as("item_two"), F.lit(null).cast("double").as("similarity"))
-    val side = if (filterSeen) similarity.unionByName(selfRows) else similarity
-    // candidate restriction: filter the PREDICTED side before the sum —
-    // commutes with the per-item aggregation
-    val sim = items.map(it => side.join(
-      it.select(F.col(cols.item).as("item_two")).distinct(),
-      Seq("item_two"), "left_semi")).getOrElse(side)
-    // round to 9 decimals before ranking: float sums are partition-order
-    // dependent at the last ulp, and an unrounded rating would make
-    // "equal" candidates rank differently between runs/layouts
-    val rating = F.round(F.sum("similarity"), 9).as(cols.rating)
-    val scored = history
-      .join(sim, F.col(cols.item) === F.col("item_one"))
-      .groupBy(F.col(cols.query), F.col("item_two").as(cols.item))
-    val recs =
-      if (filterSeen)
-        scored.agg(rating, (F.count(F.lit(1)) > F.count("similarity")).as("_seen"))
-          .filter(!F.col("_seen")).drop("_seen")
-      else scored.agg(rating)
-    Ops.getTopKRecs(recs, k, cols.query, cols.item, cols.rating)
+      .sortWithinPartitions(cols.query, cols.item)
+    val allowed = items.map(it =>
+      adjacency.value.mask(it.select(F.col(cols.item).cast("long")))).orNull
+    val out = StructType(Seq(history.schema(cols.query),
+      StructField(cols.item, LongType, nullable = false),
+      StructField(cols.rating, DoubleType, nullable = false)))
+    history.mapPartitions(new NeighbourScorer(adjacency, allowed, k, filterSeen))(
+        Encoders.row(out))
+      .withColumn(cols.item, F.col(cols.item).cast(similarity.schema("item_two").dataType))
   }
 
   /** r14 (guide §5 caching-when-reused, VERDICT r13 item 3): the dense

@@ -88,15 +88,16 @@ final case class NumInteractionsFilter(
   }
 }
 
-/** Keep entities with >= n occurrences: count-filter then semi-join back
-  * (reference: filters.py:286-294). The distinct-entity side is small — at
-  * scale Catalyst/AQE broadcasts it into the semi-join. */
+/** Keep entities with >= n occurrences (reference: filters.py:286-294,
+  * count-filter then join back): `count(1) over (partition by entity)`,
+  * then a filter, so the input is exchanged once, by entity. A null
+  * entity is dropped, as the reference's join back drops it. */
 final case class MinCountFilter(n: Long, groupByCol: String = QueryId)
     extends InteractionFilter {
-  def transform(df: DataFrame): DataFrame = {
-    val keep = df.groupBy(groupByCol).count().filter(F.col("count") >= n).select(groupByCol)
-    df.join(keep, Seq(groupByCol), "left_semi")
-  }
+  def transform(df: DataFrame): DataFrame =
+    df.withColumn("_count", F.count(F.lit(1)).over(Window.partitionBy(groupByCol)))
+      .filter(F.col(groupByCol).isNotNull && F.col("_count") >= n)
+      .drop("_count")
 }
 
 /** Iterated min/max interactions per user AND per item until fixpoint

@@ -2,6 +2,7 @@ package graft.preprocessing
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.Persist
 
 /** Unknown-label policies (reference: replay/preprocessing/label_encoder.py:352-379). */
 sealed trait HandleUnknown
@@ -24,8 +25,12 @@ object HandleUnknown {
   * dict (label_encoder.py:172-185) — at 100 TB that's a driver OOM. Here the
   * mapping is itself a DataFrame: fit uses range-repartition + sort-within +
   * zipWithIndex, so the global sort never lands on a single partition and
-  * nothing is collected. Transform is a plain equi-join Catalyst/AQE will
-  * broadcast when the mapping is small.
+  * nothing is collected. The mapping is a materialized plan leaf
+  * ([[graft.core.Persist.leaf]]) in `fit`, `partialFit` and
+  * `ModelIO.loadEncoder`, so the planner knows its size: transform joins a
+  * small mapping by broadcast, without shuffling its input, and keeps a
+  * shuffle join for a large one. The mapping is cached; the caller that
+  * discards an encoder releases it with `mapping.unpersist()`.
   */
 final class LabelEncoder private (
     val mapping: DataFrame,   // columns: label (original type), code LONG
@@ -40,11 +45,11 @@ final class LabelEncoder private (
     val m = mapping.withColumnRenamed("label", column)
     handleUnknown match {
       case HandleUnknown.Error =>
-        val unknown = df.select(column).distinct()
-          .join(m.select(column), Seq(column), "left_anti").count()
-        if (unknown > 0)
+        // stops at the first unseen label; they are counted only to fail
+        val unknown = df.select(column).join(m.select(column), Seq(column), "left_anti")
+        if (!unknown.isEmpty)
           throw new IllegalArgumentException(
-            s"$unknown unseen labels in '$column' with handleUnknown=Error")
+            s"${unknown.distinct().count()} unseen labels in '$column' with handleUnknown=Error")
         joinEncode(df, m)
       case HandleUnknown.Drop =>
         df.join(m, Seq(column), "inner")
@@ -73,9 +78,10 @@ final class LabelEncoder private (
     }
     val fresh = df.select(F.col(column).as("label")).distinct()
       .join(mapping.select("label"), Seq("label"), "left_anti")
-    val freshCoded = LabelEncoder.denseIds(fresh, "label")
-      .withColumn("code", F.col("code") + F.lit(maxCode + 1))
-    new LabelEncoder(mapping.unionByName(freshCoded), column, handleUnknown)
+    val freshCoded = LabelEncoder.denseIds(fresh, "label", from = maxCode + 1)
+    val merged = Persist.leaf(mapping.unionByName(freshCoded))
+    freshCoded.unpersist()
+    new LabelEncoder(merged, column, handleUnknown)
   }
 }
 
@@ -95,19 +101,20 @@ object LabelEncoder {
       handleUnknown: HandleUnknown): LabelEncoder =
     new LabelEncoder(mapping, column, handleUnknown)
 
-  /** Codes 0..n-1 in sorted label order without a single-partition global
+  /** Codes `from`, `from` + 1, … in sorted label order, as a
+    * [[graft.core.Persist.leaf]], without a single-partition global
     * window: range partitioning keeps partitions globally ordered, so
     * zipWithIndex yields the same ids a global sort would. */
-  private[preprocessing] def denseIds(distinct: DataFrame, labelCol: String): DataFrame = {
-    val spark = distinct.sparkSession
+  private[preprocessing] def denseIds(distinct: DataFrame, labelCol: String,
+      from: Long = 0L): DataFrame = {
     val sorted = distinct
       .repartitionByRange(F.col(labelCol))
       .sortWithinPartitions(labelCol)
     val schema = StructType(sorted.schema.fields :+ StructField("code", LongType, nullable = false))
     val rdd = sorted.rdd.zipWithIndex().map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ idx)
+      Row.fromSeq(row.toSeq :+ (from + idx))
     }
-    spark.createDataFrame(rdd, schema)
+    Persist.leaf(distinct.sparkSession, rdd, schema)
   }
 }
 

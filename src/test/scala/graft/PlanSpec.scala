@@ -69,10 +69,10 @@ class PlanSpec extends SparkSpec {
       "cropped item list should broadcast into the per-query cross join")
   }
 
-  test("ItemKNN predict on a refitted model broadcasts the similarity table") {
+  test("ItemKNN predict on a refitted model joins no similarity table") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import spark.implicits._
     val fitLog = (for (u <- 1L to 40L; i <- 1L to 30L if (u * 7 + i * 3) % 5 < 2)
       yield (u, i)).toDF("query_id", "item_id")
@@ -81,17 +81,17 @@ class PlanSpec extends SparkSpec {
       probe.coStats(fitLog.filter(col("query_id") <= 30)),
       probe.coStats(fitLog.filter(col("query_id") > 30)))
     val model = new graft.models.ItemKNN(numNeighbours = 5).fitFromStats(pairs, dfs)
-    // a history side estimated above the broadcast threshold: only the
-    // similarity table's materialized size can make it the build side
+    // a history side estimated above the broadcast threshold: the
+    // similarity table is scored from the model's broadcast adjacency, so
+    // no join sees it, whatever the sizes
     val log = spark.range(0, 2000000).select(
       (col("id") % 1000).as("query_id"), (col("id") % 30 + 1).as("item_id"))
     val df = model.predict(log, 10, queries = Some(Seq(1L, 2L).toDF("query_id")))
-    val builds = df.queryExecution.sparkPlan.collect { case j: BroadcastHashJoinExec =>
-      j.buildSide match { case BuildRight => j.right; case BuildLeft => j.left }
-    }
-    assert(builds.exists(_.output.exists(_.name == "similarity")),
-      "similarity table should be the broadcast build side:\n" +
-        df.queryExecution.sparkPlan.toString.take(1500))
+    val plan = df.queryExecution.sparkPlan
+    val simJoins = plan.collect { case j: BaseJoinExec
+      if j.children.exists(_.output.exists(_.name == "similarity")) => j }
+    assert(simJoins.isEmpty, s"predict joins the similarity table:\n$plan")
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.size == 1, plan.toString)
   }
 
   test("ItemKNN predict shuffles once, by query, and plans no anti-join") {
@@ -111,6 +111,42 @@ class PlanSpec extends SparkSpec {
     assert(shuffles.size == 1, s"expected one exchange:\n$plan")
     assert(shuffles.head.outputPartitioning.toString.contains("query_id"), plan.toString)
     assert(!plan.toString.contains("LeftAnti"), s"seen filter planned as an anti-join:\n$plan")
+    // scoring is one pass over the broadcast adjacency: no rank window, no
+    // aggregate, no broadcast of the similarity table
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collectWithSubqueries(plan) { case w: WindowExec => w }.isEmpty,
+      s"predict plans a window:\n$plan")
+    assert(helper.collectWithSubqueries(plan) { case a: BaseAggregateExec => a }.isEmpty,
+      s"predict plans an aggregate:\n$plan")
+    assert(helper.collectWithSubqueries(plan) { case b: BroadcastExchangeLike
+      if b.output.exists(a => Set("item_one", "item_two", "similarity")(a.name)) => b }.isEmpty,
+      s"predict broadcasts the similarity table:\n$plan")
+  }
+
+  test("min-count filter, then label encoding: both mapping joins broadcast above one exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import graft.preprocessing.{LabelEncoder, MinCountFilter}
+    import spark.implicits._
+    val log = (for (u <- 1L to 40L; i <- 1L to 30L if (u * 7 + i * 3) % 5 < 2)
+      yield (u, i)).toDF("query_id", "item_id")
+    val filtered = MinCountFilter(5).transform(log)
+    val users = LabelEncoder.fit(filtered, "query_id")
+    val items = LabelEncoder.fit(filtered, "item_id")
+    val df = items.transform(users.transform(filtered))
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val joins = helper.collectWithSubqueries(plan) { case j: BaseJoinExec => j }
+    assert(joins.size == 2 && joins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"expected two broadcast mapping joins:\n$plan")
+    val shuffles = helper.collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"expected one exchange:\n$plan")
+    Seq(users, items).foreach(_.mapping.unpersist())
   }
 
   test("exact ALS predict: no explode, no anti-join, no blocked top-k aggregation") {

@@ -1,6 +1,7 @@
 package graft.models
 
 import graft.SparkSpec
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
@@ -133,7 +134,9 @@ class KnnKernelSpec extends SparkSpec {
     val user = new UserKNN(numNeighbours = 3)
     def state = Seq(knn.similarity, knn.fitQueries, knn.fitItems,
       pop.itemPopularity, pop.fitQueries, pop.fitItems,
-      user.similarity, user.trainPairs, user.fitQueries, user.fitItems)
+      user.similarity, user.trainPairs, user.fitQueries, user.fitItems).filter(_ != null)
+    // ItemKNN's adjacency broadcast, one per fit
+    val adjacencies = scala.collection.mutable.ArrayBuffer.empty[Broadcast[NeighbourTable]]
     // the second fit repeats the first one's input: its entity frames reuse
     // the cache entries of the frames they replace, which must stay cached
     for (in <- Seq(log, log, log.filter($"query_id" <= 5))) {
@@ -142,8 +145,27 @@ class KnnKernelSpec extends SparkSpec {
         m.fitQueries.count()
         m.fitItems.count()
       }
+      adjacencies += knn.adjacency
       assert(state.forall(_.storageLevel.useMemory), "current state must stay cached")
     }
+    // the refit from merged co-stats replaces the same state (its fit
+    // queries go: the stats carry no users). The entity frames it releases
+    // share their cache entries with PopRec's and UserKNN's (one input,
+    // one plan), so only ItemKNN's state is checked here.
+    val (pairs, dfs) = ItemKNN.mergeStats(knn.coStats(log.filter($"query_id" <= 3)),
+      knn.coStats(log.filter($"query_id" > 3)))
+    knn.fitFromStats(pairs, dfs)
+    knn.fitItems.count()
+    adjacencies += knn.adjacency
+    assert(knn.fitQueries == null)
+    assert(Seq(knn.similarity, knn.fitItems).forall(_.storageLevel.useMemory),
+      "current state must stay cached")
+    // each refit broadcasts a new adjacency; the replaced ones are
+    // unpersisted, not destroyed (reading a destroyed broadcast throws),
+    // so a predict planned before a refit still computes. Unpersisting
+    // frees executor copies only, which a local session does not have.
+    assert(adjacencies.map(_.id).distinct.size == 4, adjacencies.map(_.id))
+    assert(adjacencies.init.forall(_.value.ids.nonEmpty))
     state.foreach(_.unpersist())
     assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
       "a refit left a cached frame of the replaced state behind")

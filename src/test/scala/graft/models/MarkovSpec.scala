@@ -117,5 +117,12 @@ class MarkovSpec extends SparkSpec {
     m2.fitFromStats(t2, t1)
     assert(predicted(m2) == Set(1L, 3L))
     assert(m2.fitItems.as[Long].collect().toSet == Set(1L, 2L, 3L))
+    // ItemKNN's co-stats carry no users either
+    val knn = new ItemKNN(numNeighbours = 3).fit(log.filter($"query_id" === 1))
+    val (pairs, dfs) = ItemKNN.mergeStats(knn.coStats(lo), knn.coStats(hi))
+    knn.fitFromStats(pairs, dfs)
+    assert(predicted(knn) == Set(1L, 2L, 3L))
+    assert(knn.fitQueries == null)
+    assert(knn.fitItems.as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
   }
 }

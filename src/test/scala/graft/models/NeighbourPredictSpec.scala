@@ -6,9 +6,9 @@ import graft.SparkSpec
 import graft.core.Ops
 import org.apache.spark.sql.{DataFrame, functions => F}
 
-/** NeighbourRec predict (one exchange, self-row seen marker) against the
-  * plan it replaced, the self-row coverage it relies on, and the release
-  * of predict scratch frames. */
+/** NeighbourRec predict (one exchange, one scoring pass over the
+  * broadcast adjacency) against the anti-join plan, and the release of
+  * predict scratch frames. */
 class NeighbourPredictSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,11 +37,17 @@ class NeighbourPredictSpec extends SparkSpec {
   // user 9 asks but has no history; users 1 and 3 buy items again
   private val queries = (1L to 9L).toDF("query_id")
 
-  /** Every (k, filterSeen, items) combination gives the old plan's rows. */
+  /** Every (k, filterSeen, items) combination gives the old plan's rows.
+    * k = 50 is above every user's candidate count; the narrow restriction
+    * (with an item no model knows) leaves out some user's unrestricted top
+    * k = 1. */
   private def assertSameAsOldPlan(m: NeighbourRec, log: DataFrame, what: String): Unit = {
     val restrict = Seq(10L, 12L, 14L, 15L, 17L).toDF("item_id")
-    for (k <- Seq(2, 50); filterSeen <- Seq(true, false);
-         items <- Seq(None, Some(restrict))) {
+    val narrow = Seq(13L, 16L, 99L).toDF("item_id")
+    val top1 = triples(m.predict(log, 1, Some(queries))).map(r => r._2)
+    assert(top1.exists(i => i != 13L && i != 16L), s"$what: vacuous narrow restriction")
+    for (k <- Seq(1, 2, 50); filterSeen <- Seq(true, false);
+         items <- Seq(None, Some(restrict), Some(narrow))) {
       val got = triples(m.predict(log, k, Some(queries), filterSeen, items))
       val want = triples(oldPredict(m, log, k, queries, filterSeen, items))
       assert(want.nonEmpty, s"$what: vacuous fixture")
@@ -103,6 +109,46 @@ class NeighbourPredictSpec extends SparkSpec {
     val recs = triples(loaded.predict(withNineteen, 10, Some(queries)))
     assert(!recs.exists(r => r._1 != 5L && r._2 == 19L), "a seen item was recommended")
     assert(recs.exists(r => r._1 == 5L && r._2 == 19L), "19 is a candidate for user 5")
+  }
+
+  test("a loaded SLIM and a loaded EASE equal the anti-join plan") {
+    val dir = Files.createTempDirectory("neighbour_loaded").toString
+    for ((kind, m) <- Seq("slim" -> new SLIM().fit(log), "ease" -> new Ease(lambda = 2.0).fit(log))) {
+      ModelIO.saveNeighbour(m, s"$dir/$kind")
+      val loaded = ModelIO.loadNeighbour(spark, s"$dir/$kind")
+      assertSameAsOldPlan(loaded, log, s"loaded $kind")
+      assert(triples(loaded.predict(log, 3, Some(queries))) ==
+        triples(m.predict(log, 3, Some(queries))), kind)
+    }
+  }
+
+  test("a predict planned before a refit still computes after it") {
+    val m = new ItemKNN(numNeighbours = 3).fit(log)
+    val early = m.predict(log, 3, Some(queries))
+    val want = triples(oldPredict(m, log, 3, queries, filterSeen = true, None))
+    m.fit(log.filter($"query_id" <= 4))
+    val (pairs, dfs) = m.coStats(log.filter($"query_id" > 2))
+    m.fitFromStats(pairs, dfs)
+    assert(triples(early) == want)
+  }
+
+  test("ratings round as Spark's round(x, 9)") {
+    val rng = new scala.util.Random(7)
+    val xs = Seq(0.0, -0.0, 1.0, -1.0, 0.5, 1e-10, 5e-10, -5e-10, 1.0000000005,
+      2.9999999995, 0.1234567895, -0.1234567895, 1e300, -1e-300, Double.MaxValue,
+      Double.MinPositiveValue, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity) ++
+      Seq.fill(2000)(rng.nextDouble() * math.pow(10, rng.nextInt(12) - 6) *
+        (if (rng.nextBoolean()) 1 else -1)) ++
+      // sums of cosine-like terms, as the kernel rounds them
+      Seq.fill(2000)(Seq.fill(1 + rng.nextInt(8))(rng.nextDouble()).sum)
+    val want = xs.toDF("x").select(F.col("x"), F.round(F.col("x"), 9).as("r"))
+      .as[(Double, Double)].collect()
+    for ((x, r) <- want) {
+      val got = NeighbourTopK.round9(x)
+      assert(java.lang.Double.compare(got, r) == 0 || (got == 0.0 && r == 0.0),
+        s"round9($x) = $got, Spark gives $r")
+    }
   }
 
   test("every item_two of a neighbour model's similarity is among its fit items") {

@@ -32,6 +32,31 @@ class EncoderSpec extends SparkSpec {
     assert(sub == Set(0L, -1L))
   }
 
+  test("handleUnknown=Error fails at transform, counting the distinct unseen labels") {
+    val enc = LabelEncoder.fit(Seq(1L, 2L).toDF("x"), "x", HandleUnknown.Error)
+    val e = intercept[IllegalArgumentException](enc.transform(Seq(1L, 3L, 3L, 4L).toDF("x")))
+    assert(e.getMessage == "2 unseen labels in 'x' with handleUnknown=Error")
+    assert(enc.transform(Seq(2L, 1L, 2L).toDF("x")).as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 1L))
+  }
+
+  test("the mapping is a materialized leaf after fit, partialFit and load") {
+    val fitted = LabelEncoder.fit(Seq("b", "a").toDF("x"), "x")
+    val grown = fitted.partialFit(Seq("c", "a").toDF("x"))
+    val dir = java.nio.file.Files.createTempDirectory("encoder_leaf").toString
+    graft.models.ModelIO.saveEncoder(grown, s"$dir/enc")
+    val loaded = graft.models.ModelIO.loadEncoder(spark, s"$dir/enc")
+    for ((what, enc) <- Seq("fit" -> fitted, "partialFit" -> grown, "load" -> loaded)) {
+      val plan = enc.mapping.queryExecution.optimizedPlan
+      assert(enc.mapping.storageLevel.useMemory, s"$what: mapping not cached")
+      // the planner reads the cached size, not a default estimate
+      assert(plan.stats.sizeInBytes < 1024 * 1024, s"$what: ${plan.stats.sizeInBytes}")
+    }
+    for (enc <- Seq(grown, loaded))
+      assert(enc.transform(Seq("a", "c").toDF("x")).as[Long].collect().toSet == Set(0L, 2L))
+    Seq(fitted, grown, loaded).foreach(_.mapping.unpersist())
+  }
+
   test("partialFit appends new labels after max code") {
     val enc = LabelEncoder.fit(Seq("b", "a").toDF("x"), "x")
     val enc2 = enc.partialFit(Seq("c", "a", "d").toDF("x"))
