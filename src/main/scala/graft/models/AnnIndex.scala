@@ -2,6 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
+import graft.core.Owner
 import graft.text.Similarity
 
 /** Pluggable ANN index for vector-scoring recommenders (reference:
@@ -14,8 +15,12 @@ import graft.text.Similarity
   * expressed as joins, with exact dot re-scoring on the candidate set. No
   * native per-executor index, no driver collect; the candidate join scales
   * with bucket/list occupancy, not |queries|·|items|.
+  *
+  * An index holds the frames it caches; a `fit` is a refit that releases
+  * the previous fit's. The model that fits an index to its vectors holds
+  * the index too, so releasing the model releases it.
   */
-trait AnnIndex extends Serializable {
+trait AnnIndex extends Serializable with Owner {
   /** Build the index over (id, vector) rows. */
   def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type
 
@@ -47,13 +52,14 @@ final class IvfAnn(
   private var exactItems: DataFrame = _ // fallback for tiny catalogs
   private var itemCol: String = _
 
-  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = {
+  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = held.refit {
     itemCol = idCol
     if (itemVectors.count() < nCentroids * 4L) {
       exactItems = itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv"))
     } else {
       ivf = new graft.text.IvfIndex(nCentroids = nCentroids, nProbe = nProbe,
         seed = seed, idCol = idCol, vecCol = vecCol).fit(itemVectors)
+      held(ivf.assigned)
     }
     this
   }
@@ -67,11 +73,12 @@ final class IvfAnn(
     Option(ivf).map(_.centroids)
 
   private[models] def fitFromCentroids(itemVectors: DataFrame, idCol: String,
-      vecCol: String, cents: Array[Array[Double]]): this.type = {
+      vecCol: String, cents: Array[Array[Double]]): this.type = held.refit {
     itemCol = idCol
     ivf = new graft.text.IvfIndex(nCentroids = nCentroids, nProbe = nProbe,
       seed = seed, idCol = idCol, vecCol = vecCol)
       .fitFromCentroids(itemVectors.select(F.col(idCol), F.col(vecCol)), cents)
+    held(ivf.assigned)
     this
   }
 
@@ -109,7 +116,7 @@ final class LshAnn(
   private var itemVecs: DataFrame = _ // (itemId, _iv)
   private var itemCol: String = _
 
-  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = {
+  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = held.refit {
     itemCol = idCol
     // fail fast on a dims mismatch: zip_with null-pads, so a wrong `dims`
     // would make every plane projection aggregate to NULL → contribute 0,
@@ -119,12 +126,12 @@ final class LshAnn(
       require(r.getInt(0) == dims,
         s"LshAnn dims=$dims but vectors have size ${r.getInt(0)}")
     }
-    itemVecs = itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv")).cache()
+    itemVecs = held(itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv")).cache())
     // bucket table carries ids only: caching the vector `tables`× over
     // would multiply memory for no lookup benefit
-    buckets = Similarity.signBuckets(itemVectors, idCol, vecCol, planes, tables, dims)
+    buckets = held(Similarity.signBuckets(itemVectors, idCol, vecCol, planes, tables, dims)
       .select(F.col(idCol), F.col("tbl"), F.col("bkt"))
-      .cache()
+      .cache())
     buckets.count()
     this
   }
@@ -183,15 +190,16 @@ final class IvfPqAnn(
   private var exactItems: DataFrame = _
   private var itemCol: String = _
 
-  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = {
+  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = held.refit {
     itemCol = idCol
     val floor = math.max(4L * nCentroids, 4L * codebookSize)
     if (itemVectors.count() < floor) {
       exactItems = itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv"))
     } else {
-      itemVecs = itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv")).cache()
+      itemVecs = held(itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv")).cache())
       idx = new graft.text.IvfPqIndex(nCentroids, nProbe, numSubspaces,
         codebookSize, seed, idCol = idCol, vecCol = vecCol).fit(itemVectors)
+      Seq(idx.cells, idx.ivf.assigned, idx.pq.codes).foreach(held(_))
     }
     this
   }
@@ -225,14 +233,15 @@ final class PqAnn(
   private var exactItems: DataFrame = _
   private var itemCol: String = _
 
-  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = {
+  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = held.refit {
     itemCol = idCol
     if (itemVectors.count() < codebookSize * 4L) {
       exactItems = itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv"))
     } else {
-      itemVecs = itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv")).cache()
+      itemVecs = held(itemVectors.select(F.col(idCol), F.col(vecCol).as("_iv")).cache())
       pq = new graft.text.PqIndex(numSubspaces, codebookSize, seed,
         idCol = idCol, vecCol = vecCol).fit(itemVectors)
+      held(pq.codes)
     }
     this
   }

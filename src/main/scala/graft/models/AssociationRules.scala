@@ -64,10 +64,10 @@ final class AssociationRules(
     val cgDenom = (F.col("_con_cnt") - F.col("_pair")) / (F.lit(nSessions) - F.col("_ant_cnt"))
     val confidenceGain = F.when(cgDenom > 0, conf / cgDenom).otherwise(F.lit(null))
 
-    rules = withCounts.select(
+    rules = held(withCounts.select(
       F.col("antecedent"), F.col("consequent"),
       conf.as("confidence"), lift.as("lift"), confidenceGain.as("confidence_gain"))
-      .cache()
+      .cache())
     rules.count()
 
     val topW = Window.partitionBy("antecedent")

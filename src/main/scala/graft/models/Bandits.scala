@@ -1,6 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.core.Owner
 
 /** Non-personalized bandit-style models over binary {0,1} ratings
   * (reference: wilson.py, ucb.py, kl_ucb.py, thompson_sampling.py).
@@ -51,21 +52,20 @@ final class UCB(val coef: Double = 2.0, cols: RecCols = RecCols())
 
 /** UCB with explicit (pos, total) state supporting incremental refit —
   * the batch analogue of a streaming aggregation (reference ucb.py:147-177). */
-final class UCBState(val coef: Double = 2.0, cols: RecCols = RecCols()) extends Serializable {
+final class UCBState(val coef: Double = 2.0, cols: RecCols = RecCols())
+    extends Serializable with Owner {
   var state: DataFrame = _ // (item, pos, total)
 
-  def fit(log: DataFrame): this.type = {
-    state = Bandits.posTotals(log, cols).cache(); state.count(); this
+  def fit(log: DataFrame): this.type = held.refit {
+    state = held(Bandits.posTotals(log, cols).cache()); state.count(); this
   }
 
-  def refit(batch: DataFrame): this.type = {
-    val merged = state.unionByName(Bandits.posTotals(batch, cols))
+  def refit(batch: DataFrame): this.type = held.refit {
+    state = held(state.unionByName(Bandits.posTotals(batch, cols))
       .groupBy(cols.item)
       .agg(F.sum("pos").as("pos"), F.sum("total").as("total"))
-    val old = state
-    state = merged.cache()
+      .cache())
     state.count()
-    old.unpersist()
     this
   }
 

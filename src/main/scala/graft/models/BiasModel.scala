@@ -1,7 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.{Ops, Persist}
+import graft.core.Ops
 
 /** Damped-mean bias baseline — the classic rating predictor
   * r̂(u,i) = μ + b_u + b_i (the standard CF baseline from the Netflix-era
@@ -37,13 +37,13 @@ final class BiasModel(
     val g = base.agg(F.sum("_r").as("_s"), F.count(F.lit(1)).as("_n")).first()
     require(g.getLong(1) > 0, "empty log")
     muPpm = Math.floorDiv(g.getLong(0), g.getLong(1))
-    itemBias = Persist.replace(itemBias, base.groupBy(cols.item)
+    itemBias = held(base.groupBy(cols.item)
       .agg(F.sum("_r").as("_s"), F.count(F.lit(1)).as("_n"))
       .select(F.col(cols.item),
         F.expr(s"(_s - _n * ${muPpm}L) div (${lambdaItem}L + _n)")
           .as("b_i_ppm"))
       .cache())
-    userBias = Persist.replace(userBias, base
+    userBias = held(base
       .join(itemBias, Seq(cols.item))
       .groupBy(cols.query)
       .agg(F.sum("_r").as("_s"), F.sum("b_i_ppm").as("_sb"),
@@ -77,25 +77,24 @@ final class BiasModel(
 
   /** Rebuild the full fit from merged stats — bit-exact vs [[fit]] on the
     * concatenated events. */
-  def fitFromStats(stats0: DataFrame): this.type = {
+  def fitFromStats(stats0: DataFrame): this.type = refitFromStats {
     require(lambdaItem >= 0 && lambdaUser >= 0, "damping must be >= 0")
-    releaseScratch()
-    // r13 (guide §2.4): `stats` feeds four subtrees (global mean, item tier,
-    // user tier, the entity frames) — for the streaming twin that plan is a
+    // r13 (guide §2.4): `stats` feeds three subtrees (global mean, item
+    // tier, user tier) — for the streaming twin that plan is a
     // mapGroupsWithState object shuffle, recomputed per subtree uncached.
-    // The entity frames are materialized before release so nothing re-runs
-    // the stats pipeline after the unpersist.
+    // The tiers are materialized before its release, and the entity
+    // frames read the tiers, so nothing re-runs the stats pipeline after.
     val stats = stats0.cache()
     val g = stats.agg(F.sum("s_ppm").as("_s"), F.sum("n").as("_n")).first()
     require(!g.isNullAt(1) && g.getLong(1) > 0, "empty stats")
     muPpm = Math.floorDiv(g.getLong(0), g.getLong(1))
-    itemBias = Persist.replace(itemBias, stats.groupBy(cols.item)
+    itemBias = held(stats.groupBy(cols.item)
       .agg(F.sum("s_ppm").as("_s"), F.sum("n").as("_n"))
       .select(F.col(cols.item),
         F.expr(s"(_s - _n * ${muPpm}L) div (${lambdaItem}L + _n)")
           .as("b_i_ppm"))
       .cache())
-    userBias = Persist.replace(userBias, stats
+    userBias = held(stats
       .join(itemBias, Seq(cols.item))
       .groupBy(cols.query)
       .agg(F.sum("s_ppm").as("_s"),
@@ -106,19 +105,16 @@ final class BiasModel(
           .as("b_u_ppm"))
       .cache())
     itemBias.count(); userBias.count()
+    stats.unpersist()
     // entity frames from the cached tiers (their groupBy keys ARE the
-    // distinct entity sets) — no extra pass over the stats pipeline, and
-    // `stats` can be released without anything re-running it later.
+    // distinct entity sets) — no extra pass over the stats pipeline.
     // NOTE (ADVICE r13): userBias inner-joins stats to itemBias on the item
     // key, so a stats row with a NULL item id would drop its query from
-    // fitQueriesDf (the old stats.select(query).distinct() retained it).
+    // fitQueries (stats.select(query).distinct() would retain it).
     // Interaction stats never carry NULL item ids by the feed contract
     // (mapGroupsWithState keys / groupBy keys of real interactions), so the
     // derivation is set-identical on every supported input.
-    fitQueriesDf = Persist.replace(fitQueriesDf, userBias.select(F.col(cols.query)).cache())
-    fitItemsDf = Persist.replace(fitItemsDf, itemBias.select(F.col(cols.item)).cache())
-    stats.unpersist()
-    this
+    (itemBias.select(F.col(cols.item)), Some(userBias.select(F.col(cols.query))))
   }
 
   /** Candidate scores: per-user order is b_i alone (μ + b_u is constant

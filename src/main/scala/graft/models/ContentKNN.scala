@@ -43,11 +43,9 @@ final class ContentKNN(
       "ContentKNN fits on an item FEATURE table — call fitFeatures(features)")
 
   /** Build the content similarity state from (item, feature) rows. */
-  def fitFeatures(feats: DataFrame): this.type = {
-    features = Persist.replace(features,
-      Persist.leaf(feats.select(F.col(cols.item), F.col("feature")).distinct()))
-    fitItemsDf = Persist.replace(fitItemsDf,
-      features.select(F.col(cols.item)).distinct().cache())
+  def fitFeatures(feats: DataFrame): this.type = held.refit {
+    features = held(Persist.leaf(feats.select(F.col(cols.item), F.col("feature")).distinct()))
+    fitItemsDf = features.select(F.col(cols.item)).distinct()
     // r13 (guide §2.4): the capped cells feed norms + both self-join sides —
     // cache once instead of running the cap window three times.
     val cells = ItemKNN.cap(features, "feature", Seq(cols.item, "feature"),

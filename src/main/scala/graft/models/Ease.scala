@@ -2,7 +2,6 @@ package graft.models
 
 import breeze.linalg.{inv, DenseMatrix}
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.Persist
 
 /** EASE — Embarrassingly Shallow Autoencoder (Steck, WWW 2019,
   * arXiv:1905.03375): the closed-form item-item linear model that is the
@@ -69,10 +68,16 @@ final class Ease(
   def mergeCells(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).groupBy("_i1", "_i2").agg(F.sum("_d").as("_d"))
 
-  protected def doFit(log: DataFrame): Unit = fitFromCells(gramCells(log))
+  protected def doFit(log: DataFrame): Unit = solve(gramCells(log))
 
-  /** Driver algebra over a Gram-cell frame (see [[gramCells]]). */
-  def fitFromCells(cells: DataFrame): this.type = {
+  /** Refit from a Gram-cell frame (see [[gramCells]]). The cells carry no
+    * users: the fit items are the Gram's items, and there are no fit
+    * queries. */
+  def fitFromCells(cells: DataFrame): this.type = refitFromStats((solve(cells), None))
+
+  /** Driver algebra over a Gram-cell frame; materializes the similarity
+    * table and returns the Gram's items. */
+  private def solve(cells: DataFrame): DataFrame = {
     val spark = cells.sparkSession
 
     val itemIds = cells.select(F.col("_i1").as("_i"))
@@ -146,10 +151,8 @@ final class Ease(
       oj += 1
     }
     import spark.implicits._
-    // this path fits from cells alone: its fit items are the Gram's items
-    fitItemsDf = Persist.replace(fitItemsDf, itemIds.toSeq.toDF(cols.item).cache())
     materialize(out.toSeq.toDF("item_one", "item_two", "similarity"))
-    this
+    itemIds.toSeq.toDF(cols.item)
   }
 
   /** λ ~ loguniform [1, 10⁴] (ln-space borders), the range Steck §5

@@ -3,6 +3,7 @@ package graft.models
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.core.Owner
 
 /** Hierarchical (HCB) recommender (reference:
   * replay/experimental/models/hierarchical_recommender.py:13-280; Song et
@@ -23,7 +24,9 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * reference's all-python Node recursion (hierarchical_recommender.py:
   * 147-246 `.toPandas()` on the full log) is re-expressed as: one KMeans
   * per internal node on the node's item slice, one ULinUCB fit per node on
-  * the relabeled slice, and per-level equi-joins at predict.
+  * the relabeled slice, and per-level equi-joins at predict. The model
+  * holds every node's ULinUCB, its assignment frame and the assembled
+  * feature frame its KMeans was fit on; a refit releases the old tree.
   */
 final class HierarchicalRecommender(
     val depth: Int = 2,
@@ -31,7 +34,7 @@ final class HierarchicalRecommender(
     val alpha: Double = -2.0,
     val seed: Long = 42,
     val cols: RecCols = RecCols(),
-) extends Serializable {
+) extends Serializable with Owner {
   require(depth >= 2, s"depth must be >= 2, got $depth")
 
   /** One fitted tree node. `path` is the cluster-id route from the root
@@ -57,9 +60,9 @@ final class HierarchicalRecommender(
         .select(F.lit(0L).as(cols.item) +: itemFeatCols.map(F.col): _*)
       return (assigned, centers)
     }
-    val assembled = new VectorAssembler()
+    val assembled = held(new VectorAssembler()
       .setInputCols(itemFeatCols.toArray).setOutputCol("_fv")
-      .transform(items).cache()
+      .transform(items).cache())
     val nItems = assembled.count()
     val km = new KMeans().setK(nClusters).setSeed(seed)
       .setFeaturesCol("_fv").setPredictionCol("_cl")
@@ -84,7 +87,7 @@ final class HierarchicalRecommender(
   }
 
   /** Fit the node tree. `itemFeatures`: (item, numeric feature columns). */
-  def fit(log: DataFrame, itemFeatures: DataFrame): this.type = {
+  def fit(log: DataFrame, itemFeatures: DataFrame): this.type = held.refit {
     itemFeatCols = itemFeatures.columns.filterNot(_ == cols.item).toIndexedSeq
     nodes = Map.empty
     def fitNode(path: String, level: Int, slice: DataFrame,
@@ -92,15 +95,15 @@ final class HierarchicalRecommender(
       val isLeaf = level == depth - 1
       if (isLeaf) {
         // discrete clusterer: each item is its own cluster
-        val rec = new ULinUCB(alpha, cols).fit(slice, feats)
+        val rec = held(new ULinUCB(alpha, cols)).fit(slice, feats)
         val assign = feats.select(F.col(cols.item), F.col(cols.item).as("_cl"))
-        nodes += path -> Node(path, isLeaf = true, rec, assign.cache())
+        nodes += path -> Node(path, isLeaf = true, rec, held(assign.cache()))
       } else {
         val (assigned, centers) = clusterItems(feats)
         val relabeled = slice.join(F.broadcast(assigned), Seq(cols.item))
           .drop(cols.item).withColumnRenamed("_cl", cols.item)
-        val rec = new ULinUCB(alpha, cols).fit(relabeled, centers)
-        nodes += path -> Node(path, isLeaf = false, rec, assigned.cache())
+        val rec = held(new ULinUCB(alpha, cols)).fit(relabeled, centers)
+        nodes += path -> Node(path, isLeaf = false, rec, held(assigned.cache()))
         // recurse into each child's item slice (bounded driver loop over
         // cluster ids — |clusters| tiny)
         val clusterIds = assigned.select("_cl").distinct()
@@ -155,7 +158,7 @@ final class HierarchicalRecommender(
   /** Restore one fitted node (ModelIO load path). */
   private[graft] def restoreNode(path: String, isLeaf: Boolean,
       rec: ULinUCB, assign: DataFrame): Unit =
-    nodes += path -> Node(path, isLeaf, rec, assign)
+    nodes += path -> Node(path, isLeaf, held(rec), held(assign))
 
   /** Root-level (item → cluster) assignment — the routing certificate's
     * ground truth. */

@@ -211,7 +211,7 @@ final class HnswAnn(
   @transient private var bc: Broadcast[HnswIndex] = _
   private var itemCol: String = _
 
-  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = {
+  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = held.refit {
     itemCol = idCol
     val cnt = itemVectors.count()
     require(cnt <= maxCollect,
@@ -223,7 +223,7 @@ final class HnswAnn(
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val idx = HnswIndex.fromRows(rows, m, efConstruction, "dot", seed)
-    bc = itemVectors.sparkSession.sparkContext.broadcast(idx)
+    bc = held(itemVectors.sparkSession.sparkContext.broadcast(idx))
     this
   }
 

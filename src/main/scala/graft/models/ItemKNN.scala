@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.storage.StorageLevel
-import graft.core.{Ops, Persist}
+import graft.core.Ops
 
 /** Item-item cosine KNN (reference: replay/models/knn.py:74-229).
   *
@@ -113,14 +113,13 @@ final class ItemKNN(
     * identical rows to a plain-cosine [[doFit]] over the same users. The
     * co-stats carry no user ids, so the previous fit's queries go: a
     * predict without `queries` takes the log's. */
-  def fitFromStats(pairs: DataFrame, dfs: DataFrame): this.type = {
+  def fitFromStats(pairs: DataFrame, dfs: DataFrame): this.type = refitFromStats {
     require(weighting.isEmpty,
       "sufficient-stats refit is the plain-cosine path")
     ItemKNN.topK(pairs, dfs, cols.item, "item_one", "item_two", numNeighbours,
       shrink)(materialize)
     // dfs holds one row per item (coStats and mergeStats group by item)
-    replaceFitFrames(dfs.select(F.col(cols.item)))
-    this
+    (dfs.select(F.col(cols.item)), None)
   }
 
   /** Reference knn.py:32-37: num_neighbours int [1,100], shrink int

@@ -2,6 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import breeze.linalg.{DenseMatrix, DenseVector, inv}
+import graft.core.Owner
 
 /** LinUCB contextual bandit (reference: replay/models/lin_ucb.py:97-451).
   *
@@ -18,7 +19,7 @@ final class LinUCB(
     val alpha: Double = 1.0,
     val lambdaReg: Double = 1.0,
     val cols: RecCols = RecCols(),
-) extends Serializable {
+) extends Serializable with Owner {
   /** (item, theta[d], ainv[d*d]) */
   var armState: DataFrame = _
   private var dim: Int = 0
@@ -28,7 +29,7 @@ final class LinUCB(
   private[models] def dimension: Int = dim
   private[models] def setDimension(d: Int): Unit = dim = d
 
-  def fit(log: DataFrame, queryFeatures: DataFrame): this.type = {
+  def fit(log: DataFrame, queryFeatures: DataFrame): this.type = held.refit {
     val spark = log.sparkSession
     import spark.implicits._
     val featCols = queryFeatures.columns.filterNot(_ == cols.query)
@@ -80,7 +81,7 @@ final class LinUCB(
         (item, theta.toArray, aInv.toArray)
       }
     }.toDF(cols.item, "theta", "ainv")
-    armState = solved.cache()
+    armState = held(solved.cache())
     armState.count()
     this
   }

@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.{Ops, Persist}
+import graft.core.Ops
 
 /** ALS wrapper (reference: replay/models/als.py:69-165). Implicit
   * preference mode by default; predictPairs scores via model.transform.
@@ -55,14 +55,16 @@ final class ALSRec(
   def annIndex: Option[AnnIndex] = annIx
 
   /** Swap the candidate index on a fitted model (fits it against the
-    * current item factors); None restores the exact top-k. */
+    * current item factors); None restores the exact top-k. The replaced
+    * index is released. */
   def setAnn(a: Option[AnnIndex]): this.type = {
+    annIx.filterNot(a.contains).foreach(held.drop)
     annIx = a
     if (fitted != null) annIx.foreach(fitAnn)
     this
   }
 
-  private def fitAnn(ix: AnnIndex): Unit = ix.fit(
+  private def fitAnn(ix: AnnIndex): Unit = held(ix).fit(
     fitted.itemFactors.select(F.col("id").cast("long").as(cols.item),
       F.col("features")), cols.item, "features")
 
@@ -77,21 +79,16 @@ final class ALSRec(
         F.col(cols.item).cast("int").as(cols.item),
         F.col(cols.rating).cast("float").as(cols.rating))))
 
-  /** Makes `m` the fitted model (fit, [[ModelIO.loadALS]]): releases the
-    * factor RDDs and the item-factor broadcast of the model it replaces,
-    * broadcasts m's item factors and fits the ANN index to them. MLlib's
-    * factors are frames over persisted RDDs, which `Dataset.unpersist`
-    * does not reach. The old broadcast is unpersisted, not destroyed, so
-    * a predict planned before the refit still computes; its driver copy
-    * goes when no plan refers to it any more. */
+  /** Makes `m` the fitted model (fit, [[ModelIO.loadALS]]): holds m's
+    * factor frames, which are frames over persisted RDDs, broadcasts m's
+    * item factors and fits the ANN index to them. */
   private[models] def install(m: ALSModel): Unit = {
-    if (fitted != null) Persist.releaseCheckpoint(fitted.userFactors, fitted.itemFactors)
-    if (itemMatrix != null) itemMatrix.unpersist()
+    held.checkpointed(m.userFactors, m.itemFactors)
     val spark = m.itemFactors.sparkSession
     import spark.implicits._
     val byId = m.itemFactors.select("id", "features").as[(Int, Array[Float])]
       .collect().sortBy(_._1)
-    itemMatrix = spark.sparkContext.broadcast((byId.map(_._1), byId.flatMap(_._2)))
+    itemMatrix = held(spark.sparkContext.broadcast((byId.map(_._1), byId.flatMap(_._2))))
     fitted = m
     annIx.foreach(fitAnn)
   }
@@ -105,11 +102,10 @@ final class ALSRec(
   ): DataFrame = {
     if (annIx.isDefined || items.isDefined)
       return super.predict(log, k, queries, filterSeen, items)
-    releaseScratch()
+    held.releaseScratch()
     val spark = log.sparkSession
     import spark.implicits._
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     // absent from the fit → no factor row → dropped, as MLlib drops them
     val users = fitted.userFactors.select("id", "features")
       .join(qs.select(F.col(cols.query).cast("int").as("id")), Seq("id"), "left_semi")
@@ -344,10 +340,12 @@ final class Word2VecRec(
   def annIndex: Option[AnnIndex] = annIx
 
   /** Swap the candidate index on a fitted model (fits it against the
-    * current item vectors); None restores exact cross-join scoring. */
+    * current item vectors); None restores exact cross-join scoring. The
+    * replaced index is released. */
   def setAnn(a: Option[AnnIndex]): this.type = {
+    annIx.filterNot(a.contains).foreach(held.drop)
     annIx = a
-    if (itemVectors != null) annIx.foreach(_.fit(itemVectors, cols.item, "vec"))
+    if (itemVectors != null) annIx.foreach(held(_).fit(itemVectors, cols.item, "vec"))
     this
   }
 
@@ -363,7 +361,7 @@ final class Word2VecRec(
       .setNumPartitions(math.max(1, parts))
       .setInputCol("sentence").setOutputCol("_uv")
     val model = w2v.fit(sentences)
-    itemVectors = Persist.replace(itemVectors, model.getVectors
+    itemVectors = held(model.getVectors
       .select(F.col("word").cast("long").as(cols.item),
         org.apache.spark.ml.functions.vector_to_array(F.col("vector")).as("vec"))
       .cache())
@@ -387,7 +385,7 @@ final class Word2VecRec(
       .join(itemVectors, Seq(cols.item)).join(idf, Seq(cols.item))
       .select(F.col(cols.query),
         F.transform(F.col("vec"), x => x * F.col("_idf")).as("wvec"))
-    userVectors = Persist.replace(userVectors, hist
+    userVectors = held(hist
       .select(F.col(cols.query), F.posexplode(F.col("wvec")))
       .toDF(cols.query, "_i", "_v")
       .groupBy(cols.query, "_i")
@@ -399,7 +397,7 @@ final class Word2VecRec(
       .cache())
     userVectors.count()
 
-    annIx.foreach(_.fit(itemVectors, cols.item, "vec"))
+    annIx.foreach(held(_).fit(itemVectors, cols.item, "vec"))
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,
@@ -456,8 +454,8 @@ final class Word2VecRec(
 /** KMeans cluster recommender (reference: replay/models/cluster.py:43-120):
   * cluster queries by their feature vector; per-cluster item relevance =
   * interaction count normalized by the cluster's max. Predict runs the
-  * recommenders' one seen filter and owns its scratch frames as they do
-  * ([[PredictScratch]]). */
+  * recommenders' one seen filter and holds its state and scratch frames as
+  * they do ([[PredictScratch]]). */
 final class ClusterRec(
     val nClusters: Int = 10,
     val seed: Long = 42,
@@ -469,8 +467,7 @@ final class ClusterRec(
   var queryClusters: DataFrame = _   // (query, cluster)
   var clusterItems: DataFrame = _    // (cluster, item, rating)
 
-  def fit(log: DataFrame, queryFeatures: DataFrame): this.type = {
-    releaseScratch()
+  def fit(log: DataFrame, queryFeatures: DataFrame): this.type = held.refit {
     val featCols = queryFeatures.columns.filterNot(_ == cols.query)
     val assembled = new VectorAssembler()
       .setInputCols(featCols).setOutputCol("_features").setHandleInvalid("skip")
@@ -484,7 +481,7 @@ final class ClusterRec(
     // small parquet scan (1 partition), and predict fans every query row
     // out to the full per-cluster catalog — cached at 1 partition that
     // 300M-row expansion would run in a single task
-    queryClusters = Persist.replace(queryClusters, km.transform(assembled)
+    queryClusters = held(km.transform(assembled)
       .select(F.col(cols.query), F.col("cluster"))
       .repartition(F.col(cols.query)).cache())
 
@@ -492,7 +489,7 @@ final class ClusterRec(
     val counts = withCluster.groupBy("cluster", cols.item)
       .agg(F.count(F.lit(1)).as("_cnt"))
     val maxes = counts.groupBy("cluster").agg(F.max("_cnt").as("_mx"))
-    clusterItems = Persist.replace(clusterItems, counts.join(maxes, Seq("cluster"))
+    clusterItems = held(counts.join(maxes, Seq("cluster"))
       .select(F.col("cluster"), F.col(cols.item),
         (F.col("_cnt").cast("double") / F.col("_mx")).as(cols.rating))
       .cache())

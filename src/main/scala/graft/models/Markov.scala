@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Ops, Persist}
+import graft.core.Ops
 
 /** First-order Markov next-item recommender — the relational stand-in for
   * the reference's sequential next-item family (replay/models/nn/sequential:
@@ -52,7 +52,7 @@ final class MarkovRec(
         F.col(cols.item).as("item_two"))
       .agg(F.count(F.lit(1)).as("cnt"))
       .filter(F.col("cnt") >= minCount)
-    transitions = Persist.replace(transitions, t.cache())
+    transitions = held(t.cache())
     transitions.count()
   }
 
@@ -79,15 +79,14 @@ final class MarkovRec(
       .agg(F.sum("cnt").cast("long").as("cnt"))
 
   /** Rebuild the fit from merged stats — bit-exact vs [[fit]] on the
-    * concatenated user-disjoint slices (minCount applied here). */
-  def fitFromStats(stats: DataFrame): this.type = {
+    * concatenated user-disjoint slices (minCount applied here). The stats
+    * carry no users: the fit items are the source items, and there are
+    * no fit queries. */
+  def fitFromStats(stats: DataFrame): this.type = refitFromStats {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    releaseScratch()
-    transitions = Persist.replace(transitions,
-      stats.filter(F.col("cnt") >= minCount).cache())
+    transitions = held(stats.filter(F.col("cnt") >= minCount).cache())
     transitions.count()
-    replaceFitFrames(transitions.select(F.col("item_one").as(cols.item)).distinct())
-    this
+    (transitions.select(F.col("item_one").as(cols.item)).distinct(), None)
   }
 
   /** Last interaction's item per query under the fit order. */
@@ -110,8 +109,7 @@ final class MarkovRec(
       filterSeen: Boolean = true,
       items: Option[DataFrame] = None,
   ): DataFrame = {
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val history = log.join(qs, Seq(cols.query), "left_semi")
     // candidate restriction commutes with the per-source crop: filter the
     // predicted side FIRST, then crop — restricted top-k stays exact

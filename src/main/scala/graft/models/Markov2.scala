@@ -2,7 +2,7 @@ package graft.models
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Ops, Persist}
+import graft.core.Ops
 
 /** Second-order Markov next-item recommender with stupid backoff — the
   * sparse-context completion of [[MarkovRec]] (the relational stand-ins
@@ -47,16 +47,16 @@ final class Markov2Rec(
         F.col(cols.item).as("item_two"))
       .agg(F.count(F.lit(1)).as("cnt"))
       .filter(F.col("cnt") >= minCount)
-    transitions2 = Persist.replace(transitions2, t2.cache())
+    transitions2 = held(t2.cache())
     transitions2.count()
     backoffTier.fit(log)
   }
 
-  /** The order-1 tier: one instance across refits, so that a refit of the
-    * tier releases the state it replaces. */
+  /** The order-1 tier, held: one instance across refits, so that a refit
+    * of the tier releases the state it replaces. */
   private def backoffTier: MarkovRec = {
     if (backoff == null) backoff = new MarkovRec(minCount, tieBreak, cols)
-    backoff
+    held(backoff)
   }
 
   // ---- incremental refit (the MarkovRec discipline, one lag deeper) -----
@@ -89,15 +89,11 @@ final class Markov2Rec(
 
   /** Rebuild both tiers from merged stats — bit-exact vs [[fit]] on the
     * concatenated user-disjoint slices. */
-  def fitFromStats(t2Stats: DataFrame, t1Stats: DataFrame): this.type = {
+  def fitFromStats(t2Stats: DataFrame, t1Stats: DataFrame): this.type = refitFromStats {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    releaseScratch()
-    transitions2 = Persist.replace(transitions2,
-      t2Stats.filter(F.col("cnt") >= minCount).cache())
+    transitions2 = held(t2Stats.filter(F.col("cnt") >= minCount).cache())
     transitions2.count()
-    backoffTier.fitFromStats(t1Stats)
-    replaceFitFrames(backoff.transitions.select(F.col("item_one").as(cols.item)).distinct())
-    this
+    (backoffTier.fitFromStats(t1Stats).fitItems, None)
   }
 
   /** Last two items per query under the fit order: (query, _l1, _l2) with
@@ -123,8 +119,7 @@ final class Markov2Rec(
       filterSeen: Boolean = true,
       items: Option[DataFrame] = None,
   ): DataFrame = {
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val t20 = items.map(it => transitions2.join(
       it.select(F.col(cols.item).as("item_two")).distinct(),

@@ -14,7 +14,9 @@ import graft.core.Persist
   * neighbour (ItemKNN/AssociationRules/SLIM — similarity table),
   * ALS (MLlib ALSModel native save), Word2Vec (item/user vectors), each
   * with its ANN config where applicable (reference round-trips every model,
-  * model_handler.py:42-118). */
+  * model_handler.py:42-118). A loader fills a new model, so the frames it
+  * holds (`held`) are that model's first generation of state, which its
+  * next refit or `release()` frees. */
 object ModelIO {
   private[graft] def writeJson(path: String, fields: Map[String, String]): Unit = {
     val body = fields.map { case (k, v) =>
@@ -156,7 +158,7 @@ object ModelIO {
       case other =>
         throw new IllegalArgumentException(s"unknown non-personalized kind $other")
     }
-    m.itemPopularity = spark.read.parquet(s"$path/item_popularity").cache()
+    m.itemPopularity = m.held(spark.read.parquet(s"$path/item_popularity").cache())
     p.get("fill").foreach(f => m.setFill(f.toDouble))
     m.sample = p.getOrElse("sample", "false").toBoolean
     m.sampleSeed = p.getOrElse("sampleSeed", "42").toLong
@@ -207,7 +209,7 @@ object ModelIO {
       case "assoc_rules" =>
         val a = new AssociationRules()
         if (Files.exists(Paths.get(s"$path/rules")))
-          a.rules = spark.read.parquet(s"$path/rules").cache()
+          a.rules = a.held(spark.read.parquet(s"$path/rules").cache())
         a
       case "slim"        => new SLIM()
       case "admm_slim"   => new AdmmSlim()
@@ -301,12 +303,12 @@ object ModelIO {
     require(params("kind") == "word2vec", s"not a Word2VecRec at $path")
     val ann = parseAnn(params.getOrElse("ann", "none"))
     val m = new Word2VecRec(ann = ann)
-    m.itemVectors = spark.read.parquet(s"$path/item_vectors").cache()
-    m.userVectors = spark.read.parquet(s"$path/user_vectors").cache()
+    m.itemVectors = m.held(spark.read.parquet(s"$path/item_vectors").cache())
+    m.userVectors = m.held(spark.read.parquet(s"$path/user_vectors").cache())
     m.fitItemsDf = m.itemVectors.select(m.cols.item)
     m.fitQueriesDf = m.userVectors.select(m.cols.query)
     val centroidsPath = Paths.get(s"$path/ivf_centroids")
-    ann.foreach {
+    ann.map(m.held(_)).foreach {
       case ivf: IvfAnn if Files.exists(centroidsPath) =>
         // nCentroids rows of dims doubles — driver-bounded by construction
         val cents = spark.read.parquet(s"$path/ivf_centroids")
@@ -330,7 +332,7 @@ object ModelIO {
     val p = readJson(path)
     require(p("kind") == "query_pop", s"not a QueryPopRec at $path")
     val m = new QueryPopRec(colsOf(p))
-    m.queryProfile = spark.read.parquet(s"$path/query_profile").cache()
+    m.queryProfile = m.held(spark.read.parquet(s"$path/query_profile").cache())
     m.fitQueriesDf = m.queryProfile.select(m.cols.query).distinct()
     m.fitItemsDf = m.queryProfile.select(m.cols.item).distinct()
     m
@@ -360,7 +362,7 @@ object ModelIO {
       addColdItems = p.getOrElse("addColdItems", "true").toBoolean,
       coldWeight = p.getOrElse("coldWeight", "0.5").toDouble,
       hashMode = p.getOrElse("hashMode", "portable"), cols = colsOf(p))
-    m.itemWeights = spark.read.parquet(s"$path/item_weights").cache()
+    m.itemWeights = m.held(spark.read.parquet(s"$path/item_weights").cache())
     m.fitItemsDf = m.itemWeights.select(m.cols.item)
     m
   }
@@ -381,8 +383,8 @@ object ModelIO {
     require(p("kind") == "cat_pop_rec", s"not a CatPopRec at $path")
     // tree/itemCats deliberately absent: both are fit-time-only inputs
     val m = new CatPopRec(null, null, colsOf(p))
-    m.setClosure(spark.read.parquet(s"$path/leaf_closure").cache())
-    m.leafItemCounts = spark.read.parquet(s"$path/leaf_item_counts").cache()
+    m.setClosure(m.held(spark.read.parquet(s"$path/leaf_closure").cache()))
+    m.leafItemCounts = m.held(spark.read.parquet(s"$path/leaf_item_counts").cache())
     m
   }
 
@@ -408,9 +410,9 @@ object ModelIO {
     // same repartition-before-cache rationale as fit: predict fans queries
     // out to the per-cluster catalog, so a 1-partition parquet scan would
     // serialize the whole expansion into one task
-    m.queryClusters = spark.read.parquet(s"$path/query_clusters")
-      .repartition(F.col(m.cols.query)).cache()
-    m.clusterItems = spark.read.parquet(s"$path/cluster_items").cache()
+    m.queryClusters = m.held(spark.read.parquet(s"$path/query_clusters")
+      .repartition(F.col(m.cols.query)).cache())
+    m.clusterItems = m.held(spark.read.parquet(s"$path/cluster_items").cache())
     m
   }
 
@@ -432,7 +434,7 @@ object ModelIO {
     val m = new LinUCB(alpha = p.getOrElse("alpha", "1.0").toDouble,
       lambdaReg = p.getOrElse("lambdaReg", "1.0").toDouble, cols = colsOf(p))
     m.setDimension(p("dim").toInt)
-    m.armState = spark.read.parquet(s"$path/arm_state").cache()
+    m.armState = m.held(spark.read.parquet(s"$path/arm_state").cache())
     m
   }
 
@@ -536,7 +538,7 @@ object ModelIO {
     val m = new MarkovRec(
       minCount = p.getOrElse("minCount", "1").toLong,
       tieBreak = if (tb.isEmpty) Nil else tb.split(",").toSeq)
-    m.transitions = spark.read.parquet(s"$path/transitions").cache()
+    m.transitions = m.held(spark.read.parquet(s"$path/transitions").cache())
     m.fitItemsDf = m.transitions
       .select(F.col("item_one").as(m.cols.item)).distinct()
     m
@@ -558,8 +560,8 @@ object ModelIO {
       numNeighbours = p.getOrElse("numNeighbours", "10").toInt,
       shrink = p.getOrElse("shrink", "0.0").toDouble,
       maxItemAudience = p.getOrElse("maxItemAudience", "1000").toInt)
-    m.similarity = spark.read.parquet(s"$path/similarity").cache()
-    m.trainPairs = spark.read.parquet(s"$path/train_pairs").cache()
+    m.similarity = m.held(spark.read.parquet(s"$path/similarity").cache())
+    m.trainPairs = m.held(spark.read.parquet(s"$path/train_pairs").cache())
     m.fitQueriesDf = m.trainPairs.select(F.col(m.cols.query)).distinct()
     m.fitItemsDf = m.trainPairs.select(F.col(m.cols.item)).distinct()
     m
@@ -577,8 +579,8 @@ object ModelIO {
     require(p("kind") == "slope_one", s"not a SlopeOne at $path")
     val m = new SlopeOne(
       maxUserHistory = p.getOrElse("maxUserHistory", "1000").toInt)
-    m.deviations = spark.read.parquet(s"$path/deviations").cache()
-    m.ratings = spark.read.parquet(s"$path/ratings").cache()
+    m.deviations = m.held(spark.read.parquet(s"$path/deviations").cache())
+    m.ratings = m.held(spark.read.parquet(s"$path/ratings").cache())
     m.fitQueriesDf = m.ratings.select(F.col(m.cols.query)).distinct()
     m.fitItemsDf = m.ratings.select(F.col(m.cols.item)).distinct()
     m
@@ -601,9 +603,9 @@ object ModelIO {
       beta = p.getOrElse("beta", "0").toInt,
       topKNeighbours = p.getOrElse("topKNeighbours", "100").toInt,
       maxUserHistory = p.getOrElse("maxUserHistory", "1000").toInt)
-    m.similarity = spark.read.parquet(s"$path/similarity").cache()
-    m.userDegrees = spark.read.parquet(s"$path/user_degrees").cache()
-    m.trainPairs = spark.read.parquet(s"$path/train_pairs").cache()
+    m.similarity = m.held(spark.read.parquet(s"$path/similarity").cache())
+    m.userDegrees = m.held(spark.read.parquet(s"$path/user_degrees").cache())
+    m.trainPairs = m.held(spark.read.parquet(s"$path/train_pairs").cache())
     m.fitQueriesDf = m.trainPairs.select(F.col(m.cols.query)).distinct()
     m.fitItemsDf = m.trainPairs.select(F.col(m.cols.item)).distinct()
     m
@@ -626,7 +628,7 @@ object ModelIO {
       shrink = p.getOrElse("shrink", "0.0").toDouble,
       maxFeatureAudience = p.getOrElse("maxFeatureAudience", "1000").toInt)
     m.similarity = spark.read.parquet(s"$path/similarity").cache()
-    m.features = spark.read.parquet(s"$path/features").cache()
+    m.features = m.held(spark.read.parquet(s"$path/features").cache())
     m.fitItemsDf = m.features.select(F.col(m.cols.item)).distinct()
     m
   }
@@ -640,7 +642,7 @@ object ModelIO {
     val p = readJson(path)
     require(p("kind") == "repeat", s"not a RepeatRec at $path")
     val m = new RepeatRec()
-    m.state = spark.read.parquet(s"$path/state").cache()
+    m.state = m.held(spark.read.parquet(s"$path/state").cache())
     m.fitItemsDf = m.state.select(F.col(m.cols.item)).distinct()
     m.fitQueriesDf = m.state.select(F.col(m.cols.query)).distinct()
     m
@@ -661,8 +663,8 @@ object ModelIO {
       lambdaItem = p.getOrElse("lambdaItem", "10").toLong,
       lambdaUser = p.getOrElse("lambdaUser", "10").toLong)
     m.muPpm = p("muPpm").toLong
-    m.itemBias = spark.read.parquet(s"$path/item_bias").cache()
-    m.userBias = spark.read.parquet(s"$path/user_bias").cache()
+    m.itemBias = m.held(spark.read.parquet(s"$path/item_bias").cache())
+    m.userBias = m.held(spark.read.parquet(s"$path/user_bias").cache())
     m.fitItemsDf = m.itemBias.select(F.col(m.cols.item)).distinct()
     m.fitQueriesDf = m.userBias.select(F.col(m.cols.query)).distinct()
     m
@@ -683,9 +685,9 @@ object ModelIO {
     val tie = if (tb.isEmpty) Nil else tb.split(",").toSeq
     val mc = p.getOrElse("minCount", "1").toLong
     val m = new Markov2Rec(minCount = mc, tieBreak = tie)
-    m.transitions2 = spark.read.parquet(s"$path/transitions2").cache()
-    m.backoff = new MarkovRec(minCount = mc, tieBreak = tie)
-    m.backoff.transitions = spark.read.parquet(s"$path/transitions").cache()
+    m.transitions2 = m.held(spark.read.parquet(s"$path/transitions2").cache())
+    m.backoff = m.held(new MarkovRec(minCount = mc, tieBreak = tie))
+    m.backoff.transitions = m.backoff.held(spark.read.parquet(s"$path/transitions").cache())
     m.fitItemsDf = m.backoff.transitions
       .select(F.col("item_one").as(m.cols.item)).distinct()
     m

@@ -2,7 +2,6 @@ package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.core.Persist
 
 /** P³ / RP³β random-walk recommender (engine extra — Cooper et al.,
   * WWW 2014 "Random Walks in Recommender Systems"; Paudel et al., TiiS
@@ -98,12 +97,11 @@ final class P3AlphaRec(
       penalized.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= topKNeighbours).drop("_rn")
     } else penalized
-    similarity = Persist.replace(similarity,
-      cropped.select("item_from", "item_to", "sim_ppt").cache())
+    similarity = held(cropped.select("item_from", "item_to", "sim_ppt").cache())
     similarity.count()
     half.unpersist() // scratch; the cropped similarity is the fit state
-    userDegrees = Persist.replace(userDegrees, du.cache()); userDegrees.count()
-    trainPairs = Persist.replace(trainPairs, capped); trainPairs.count()
+    userDegrees = held(du.cache()); userDegrees.count()
+    trainPairs = held(capped); trainPairs.count()
   }
 
   /** Exact-ppt scores: Σ_{j∈hist} sim(j→candidate) div deg(query). Only

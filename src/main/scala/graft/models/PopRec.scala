@@ -1,6 +1,6 @@
 package graft.models
 
-import graft.core.Persist
+import graft.core.{Owner, Persist}
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Item popularity recommender (reference: replay/models/pop_rec.py:121-137).
@@ -38,10 +38,10 @@ final class QueryPopRec(cols: RecCols = RecCols()) extends BaseRecommender(cols)
       .agg(F.count(F.lit(1)).cast("double").as("_pair_cnt"))
     val byQuery = log.groupBy(cols.query)
       .agg(F.count(F.lit(1)).cast("double").as("_q_cnt"))
-    queryProfile = byPair.join(byQuery, Seq(cols.query))
+    queryProfile = held(byPair.join(byQuery, Seq(cols.query))
       .select(F.col(cols.query), F.col(cols.item),
         (F.col("_pair_cnt") / F.col("_q_cnt")).as(cols.rating))
-      .cache()
+      .cache())
     queryProfile.count()
   }
 
@@ -58,12 +58,17 @@ final class QueryPopRec(cols: RecCols = RecCols()) extends BaseRecommender(cols)
 /** Category-popularity recommender over a category tree
   * (reference: cat_pop_rec.py:44-280). The tree is flattened to leaves by
   * iterative self-join (transitive closure with localCheckpoint per round);
-  * item relevance is its interaction share within the category. */
+  * item relevance is its interaction share within the category.
+  *
+  * `fit` holds the leaf item counts. The closure depends on the tree
+  * alone: computed once per instance and kept across fits as local rows
+  * (it is tree-sized), it holds no blocks; a loaded closure is held with
+  * the loaded counts. */
 final class CatPopRec(
     catTree: DataFrame,   // (category, parent_cat); roots have null parent
     itemCats: DataFrame,  // (item_id, category)
     val cols: RecCols = RecCols(),
-) extends Serializable {
+) extends Serializable with Owner {
   import org.apache.spark.sql.functions.col
 
   private var closureCache: DataFrame = _
@@ -109,8 +114,12 @@ final class CatPopRec(
     if (!done)
       throw new IllegalArgumentException(
         s"category tree deeper than $maxDepth levels — cycle in catTree?")
-    edges.unpersist() // a cache: a closure still planned on it recomputes it
-    closure
+    // tree-sized: as local rows the closure holds no blocks, so a frame
+    // planned on it computes after any release
+    val rows = closure.collect()
+    if (depth > 1) Persist.releaseCheckpoint(closure) // grown once at least: a checkpoint
+    edges.unpersist()
+    closure.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), closure.schema)
   }
 
   /** per-LEAF-category raw item counts — predict re-aggregates these over
@@ -123,12 +132,12 @@ final class CatPopRec(
     * children (cat_pop_rec.py:51-66 coalesce walk). */
   var leafItemCounts: DataFrame = _
 
-  def fit(log: DataFrame): this.type = {
+  def fit(log: DataFrame): this.type = held.refit {
     val withCat = log.join(itemCats, Seq(cols.item))
-    leafItemCounts = withCat.groupBy("category", cols.item)
+    leafItemCounts = held(withCat.groupBy("category", cols.item)
       .agg(F.count(F.lit(1)).as("_cnt"))
       .withColumnRenamed("category", "leaf")
-      .cache()
+      .cache())
     leafItemCounts.count()
     this
   }

@@ -1,7 +1,7 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.{Ops, Persist}
+import graft.core.Ops
 
 /** Weighted random recommender (reference: random_rec.py:180-228 +
   * base_rec.py:1283-1364).
@@ -49,7 +49,7 @@ final class RandomRec(
       case other => throw new IllegalArgumentException(s"unknown distribution $other")
     }
     fillCache = None
-    itemWeights = Persist.replace(itemWeights, w.cache())
+    itemWeights = held(w.cache())
     itemWeights.count()
   }
 
@@ -219,8 +219,7 @@ final class RandomRec(
       queries: Option[DataFrame] = None, filterSeen: Boolean = true,
       items: Option[DataFrame] = None): DataFrame = {
     if (!filterSeen) return super.predict(log, k, queries, filterSeen, items)
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val (seen, maxSeen) = seenFilter(history, filterSeen = true)
     val sel = selectedWeights(items)
@@ -274,8 +273,7 @@ final class RandomRec(
   override def predictProba(log: DataFrame, k: Int,
       queries: Option[DataFrame] = None,
       filterSeen: Boolean = true): DataFrame = {
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val guarded = itemWeights.select(F.col(cols.item),
       F.when(F.col("_w") === 0.0, F.lit(1e-6)).otherwise(F.col("_w")).as("_w"))
     // normalization total as a lazy broadcast scalar (the

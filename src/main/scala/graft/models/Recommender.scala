@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import graft.core.{Ops, Persist}
+import graft.core.{Ops, Owner, Persist}
 
 /** Column roles shared by all recommenders. */
 final case class RecCols(
@@ -14,31 +14,20 @@ final case class RecCols(
     ts: String = "timestamp",
 )
 
-/** The frames a predict caches for itself ("scratch"), and the one seen
-  * filter every predict runs (reference `_filter_seen`,
-  * base_rec.py:152-201).
+/** The one seen filter every predict runs (reference `_filter_seen`,
+  * base_rec.py:152-201), and the frames a predict caches for itself
+  * ("scratch").
   *
   * A predict starts with [[seenFilter]], which releases the previous
-  * predict's scratch frames; the predict then owns the frames it caches
-  * through [[keepScratch]] until the next predict, or until a fit calls
-  * [[releaseScratch]]. Releasing them cannot break a predict's lazy
-  * result: a plan whose cache is gone recomputes it. */
-private[models] trait PredictScratch {
+  * predict's scratch frames; the frames the predict caches through
+  * [[keepScratch]] are held as scratch until the next predict or refit
+  * ([[graft.core.Holdings.scratch]]). Releasing them cannot break a
+  * predict's lazy result: a plan whose cache is gone recomputes it. */
+private[models] trait PredictScratch extends Owner {
   def cols: RecCols
 
-  private var scratch: List[DataFrame] = Nil
-
   /** `df`, cached as one of this predict's scratch frames. */
-  protected def keepScratch(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    scratch ::= cached
-    cached
-  }
-
-  private[models] def releaseScratch(): Unit = {
-    scratch.foreach(_.unpersist())
-    scratch = Nil
-  }
+  protected def keepScratch(df: DataFrame): DataFrame = held.scratch(df.cache())
 
   /** Starts a predict over `history`, the requested queries' log rows.
     * With `filterSeen`, returns the distinct (query, item) seen pairs,
@@ -53,7 +42,7 @@ private[models] trait PredictScratch {
     * pair set spills. */
   private[models] def seenFilter(history: DataFrame,
       filterSeen: Boolean): (Option[DataFrame], Int) = {
-    releaseScratch()
+    held.releaseScratch()
     if (!filterSeen) return (None, 0)
     val pairs = keepScratch(history.select(cols.query, cols.item).distinct())
     val maxSeen = pairs.groupBy(cols.query)
@@ -86,19 +75,20 @@ private[models] trait PredictScratch {
   * State is a plan LEAF: `materialize` caches it through
   * [[graft.core.Persist.leaf]] (reference `cache().count()`,
   * pop_rec.py:135), so predict never recomputes it and its plan is one
-  * `Scan ExistingRDD` node however many refits built it. Ownership: the
-  * model owns its state and memos, and the scratch frames its last
-  * predict cached (the seen pairs and any other frame a predict caches,
-  * [[PredictScratch]]). A refit of the same instance releases the state
-  * frames it replaces ([[graft.core.Persist.replace]]) and drops the memos
-  * derived from the old state. Broadcasts built from the state
-  * ([[ALSRec]]'s item factors, [[NeighbourRec]]'s adjacency) are state
-  * too: a refit unpersists the replaced one and does not destroy it, so a
-  * predict planned before the refit still computes. A predict releases
-  * the previous predict's scratch frames, a `fit` the last ones. The
-  * caller that discards a model, or replaces it with another instance,
-  * releases that model's state frames with `unpersist()`; its broadcasts
-  * go with the model.
+  * `Scan ExistingRDD` node however many refits built it.
+  *
+  * Ownership, one rule: the model holds its state frames, the broadcasts
+  * built from them ([[ALSRec]]'s item factors, [[NeighbourRec]]'s
+  * adjacency), its memos and its last predict's scratch frames in its
+  * [[graft.core.Holdings]]. `fit` and every refit from sufficient
+  * statistics ([[refitFromStats]]) runs as one refit of them, which
+  * releases what the previous fit held once the new state is built; a
+  * [[ModelIO]] load holds what it sets in a new model; a predict releases
+  * the previous predict's scratch. The fit
+  * frames ([[fitQueries]], [[fitItems]]) are plain projections of the fit
+  * input or the stats that no one caches or releases. The caller that
+  * discards a model calls `release()`; a released model still predicts,
+  * recomputing its state.
   */
 abstract class BaseRecommender(val cols: RecCols = RecCols())
     extends Serializable with PredictScratch {
@@ -111,24 +101,31 @@ abstract class BaseRecommender(val cols: RecCols = RecCols())
   /** Model-specific state computation; must cache+materialize its state. */
   protected def doFit(log: DataFrame): Unit
 
-  def fit(log: DataFrame): this.type = {
-    releaseScratch()
-    // distinct entity frames, broadcast later by AQE (base_rec.py:99-137)
-    fitQueriesDf = Persist.replace(fitQueriesDf, log.select(cols.query).distinct().cache())
-    fitItemsDf = Persist.replace(fitItemsDf, log.select(cols.item).distinct().cache())
+  def fit(log: DataFrame): this.type = held.refit {
+    // distinct entity frames (base_rec.py:99-137)
+    fitQueriesDf = log.select(cols.query).distinct()
+    fitItemsDf = log.select(cols.item).distinct()
     doFit(log)
     this
   }
 
-  /** The fit frames after a refit from sufficient statistics that carry
-    * no query ids (the Markov models, ItemKNN): the fit queries go, so a predict
-    * without `queries` takes the log's, as for a loaded model, and `items`
-    * become the fit items. */
-  protected def replaceFitFrames(items: DataFrame): Unit = {
-    if (fitQueriesDf != null) fitQueriesDf.unpersist()
-    fitQueriesDf = null
-    fitItemsDf = Persist.replace(fitItemsDf, items.cache())
-  }
+  /** A refit from sufficient statistics: `body` builds the new state and
+    * returns the fit items and, when the stats carry query ids, the fit
+    * queries. Without them a predict without `queries` takes the log's, as
+    * for a loaded model without fit queries. */
+  protected def refitFromStats(body: => (DataFrame, Option[DataFrame])): this.type =
+    held.refit {
+      val (items, queries) = body
+      fitItemsDf = items
+      fitQueriesDf = queries.orNull
+      this
+    }
+
+  /** The queries a predict serves: `queries`, else the fit queries, else
+    * the log's (a refit from stats without query ids, and some loaded
+    * models, have no fit queries). */
+  protected def requestedQueries(log: DataFrame, queries: Option[DataFrame]): DataFrame =
+    queries.orElse(Option(fitQueriesDf)).getOrElse(log.select(cols.query).distinct())
 
   /** Restrict an item-keyed state frame to a candidate item set
     * (reference `_filter_interactions_queries_items_dataframes`,
@@ -154,9 +151,7 @@ abstract class BaseRecommender(val cols: RecCols = RecCols())
       filterSeen: Boolean = true,
       items: Option[DataFrame] = None,
   ): DataFrame = {
-    // loaded models (ModelIO) have no fit frames → fall back to the log
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val (seen, maxSeen) = seenFilter(history, filterSeen)
     Ops.getTopKRecs(dropSeen(score(qs, k, maxSeen, items), seen),
@@ -293,7 +288,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
     require(coldWeight > 0 && coldWeight <= 1,
       s"coldWeight must be in (0, 1], got $coldWeight")
     fillCache = None
-    itemPopularity = Persist.replace(itemPopularity, Persist.leaf(state))
+    itemPopularity = held(Persist.leaf(state))
   }
 
   /** The popularity table restricted to a candidate set: right join +
@@ -345,8 +340,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
   ): DataFrame = {
     if (sample) return predictSampled(log, k, queries, filterSeen, items)
     if (!filterSeen) return super.predict(log, k, queries, filterSeen, items)
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val (seen, maxSeen) = seenFilter(history, filterSeen = true)
     val cand = withSeenCount(qs.select(cols.query), seen.get)
@@ -386,8 +380,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
       filterSeen: Boolean,
       items: Option[DataFrame],
   ): DataFrame = {
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     val history = log.join(qs, Seq(cols.query), "left_semi")
     val (seen, maxSeen) = seenFilter(history, filterSeen)
     val guarded = selectedPopularity(items).select(F.col(cols.item),
@@ -431,11 +424,7 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
       queries: Option[DataFrame] = None,
       filterSeen: Boolean = true): DataFrame = {
     if (!sample) return super.predictProba(log, k, queries, filterSeen)
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
-    val guarded = itemPopularity.select(F.col(cols.item),
-      F.when(F.col(cols.rating) === 0.0, F.lit(1e-6))
-        .otherwise(F.col(cols.rating)).as("_w"))
+    val qs = requestedQueries(log, queries)
     qs.select(cols.query)
       .crossJoin(F.broadcast(samplingDistribution))
       .select(F.col(cols.query), F.col(cols.item),
@@ -494,10 +483,10 @@ abstract class NonPersonalizedRec(cols: RecCols = RecCols()) extends BaseRecomme
   * The table is model state twice over: [[similarity]], a cached plan
   * leaf (save/load, pair scoring, explain, nearest items), and its
   * adjacency as CSR arrays ([[NeighbourTable]]), collected and broadcast
-  * once whenever the table is set (fit, refit, [[ModelIO]] load). A refit
-  * unpersists the replaced broadcast; it is not destroyed, so a predict
-  * planned before the refit still computes, and its driver copy goes when
-  * no plan refers to it any more. The collect is bounded by the fits:
+  * once whenever the table is set (fit, refit, [[ModelIO]] load). Both
+  * are held state: a refit unpersists the replaced broadcast and does not
+  * destroy it, so a predict planned before the refit still computes. The
+  * collect is bounded by the fits:
   * ItemKNN, ContentKNN and AssociationRules crop to k neighbours per item,
   * SLIM caps them at `maxNeighbours`, and EASE and AdmmSlim build the
   * table from driver arrays. Item ids must be integral.
@@ -521,18 +510,16 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
   /** (item_one, item_two, similarity) — materialized by doFit. */
   def similarity: DataFrame = table
 
-  /** Sets the similarity table and broadcasts its adjacency, unpersisting
-    * the broadcast of the table it replaces. */
+  /** Sets the similarity table and broadcasts its adjacency; the model
+    * holds both. */
   def similarity_=(df: DataFrame): Unit = {
-    val next = df.sparkSession.sparkContext.broadcast(NeighbourTable(df))
-    if (adjacency != null) adjacency.unpersist()
-    adjacency = next
-    table = df
+    adjacency = held(df.sparkSession.sparkContext.broadcast(NeighbourTable(df)))
+    table = held(df)
   }
 
   protected def materialize(state: DataFrame): Unit = {
     releasePairScores() // the memo scored the previous similarity table
-    similarity = Persist.replace(similarity, Persist.leaf(state))
+    similarity = Persist.leaf(state)
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,
@@ -546,8 +533,7 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
       filterSeen: Boolean = true,
       items: Option[DataFrame] = None,
   ): DataFrame = {
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     // sorted by item too, so that a candidate's sum adds its terms in the
     // same order in every run
     val history = log.join(qs, Seq(cols.query), "left_semi")
@@ -571,7 +557,7 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
     * train log, rebuilding it each time. Opt-in memo keyed on the log
     * REFERENCE: the scenario flips the flag when it knows enrich runs
     * twice; one-shot predictPairs callers keep the uncached plan. The
-    * previous memo unpersists on key rotation (no session-lifetime leak). */
+    * model holds the memo; a memo for another log releases it. */
   var memoPairScores: Boolean = false
   private var pairScoresKey: DataFrame = _
   private var pairScoresDf: DataFrame = _
@@ -585,9 +571,9 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
       if (!memoPairScores) scorePlan
       else {
         if (pairScoresDf == null || !(pairScoresKey eq log)) {
-          if (pairScoresDf != null) pairScoresDf.unpersist()
+          releasePairScores()
           pairScoresKey = log
-          pairScoresDf = scorePlan.cache()
+          pairScoresDf = held(scorePlan.cache())
         }
         pairScoresDf
       }
@@ -598,7 +584,7 @@ abstract class NeighbourRec(cols: RecCols = RecCols()) extends BaseRecommender(c
   /** Release the [[predictPairs]] memo (library callers; the bench/Verify
     * harnesses clear the whole cache between reps/gates anyway). */
   def releasePairScores(): Unit = {
-    if (pairScoresDf != null) pairScoresDf.unpersist()
+    if (pairScoresDf != null) held.drop(pairScoresDf)
     pairScoresDf = null
     pairScoresKey = null
   }

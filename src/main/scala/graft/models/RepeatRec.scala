@@ -27,10 +27,7 @@ final class RepeatRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
 
   protected def doFit(log: DataFrame): Unit = {
     // DATE-typed logs cast to UTC-midnight timestamps (session TZ is UTC)
-    state = log.groupBy(cols.query, cols.item)
-      .agg(F.unix_micros(F.max(cols.ts).cast("timestamp")).as("last_ts_us"),
-        F.count(F.lit(1)).as("cnt"))
-      .cache()
+    state = held(pairStats(log).cache())
     state.count()
   }
 
@@ -52,11 +49,12 @@ final class RepeatRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
       .agg(F.max("last_ts_us").as("last_ts_us"),
         F.sum("cnt").cast("long").as("cnt"))
 
-  /** Rebuild the fit from merged stats — bit-exact vs [[fit]]. */
-  def fitFromStats(stats: DataFrame): this.type = {
-    state = stats.cache()
+  /** Rebuild the fit from merged stats — bit-exact vs [[fit]]; the fit
+    * queries and items are the stats'. */
+  def fitFromStats(stats: DataFrame): this.type = refitFromStats {
+    state = held(stats.cache())
     state.count()
-    this
+    (state.select(cols.item).distinct(), Some(state.select(cols.query).distinct()))
   }
 
   protected def score(queries: DataFrame, k: Int, maxSeen: Int,
@@ -76,8 +74,7 @@ final class RepeatRec(cols: RecCols = RecCols()) extends BaseRecommender(cols) {
     require(!filterSeen,
       "RepeatRec recommends items the user has already consumed; " +
       "call predict(..., filterSeen = false)")
-    val qs = queries.orElse(Option(fitQueriesDf))
-      .getOrElse(log.select(cols.query).distinct())
+    val qs = requestedQueries(log, queries)
     Ops.getTopKRecs(score(qs, k, 0, items), k, cols.query, cols.item, cols.rating)
   }
 

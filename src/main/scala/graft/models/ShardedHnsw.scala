@@ -120,11 +120,11 @@ final class ShardedHnswAnn(
   private var itemCol: String = _
   private var itemVecCol: String = _
 
-  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = {
+  def fit(itemVectors: DataFrame, idCol: String, vecCol: String): this.type = held.refit {
     itemCol = idCol
     itemVecCol = vecCol
-    items = itemVectors.select(F.col(idCol), F.col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    items = held(itemVectors.select(F.col(idCol), F.col(vecCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     this
   }
 

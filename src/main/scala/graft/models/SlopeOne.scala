@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.core.Persist
 
 /** Weighted Slope One rating predictor (Lemire & Maclachlan, SDM 2005 —
   * engine extra: with [[BiasModel]] it completes the classic
@@ -57,24 +56,6 @@ final class SlopeOne(
         F.sum(F.col("_rt") - F.col("_rf")).as("dev_ppm"))
   }
 
-  /** cacheHalf: the antisymmetrization union reads `half` twice. For the
-    * BATCH fit the duplicated work is only the final aggregation above a
-    * ReuseExchange'd shuffle — measured CHEAPER than a cache roundtrip of
-    * the pair table (18.0 vs 14.8 s on the sample row), so doFit passes
-    * false. For [[fitFromStats]] the half plan is the caller's whole stats
-    * pipeline (e.g. the streaming delta mapGroupsWithState), which must not
-    * run twice — it passes true. (r13, guide §1: measured both ways.) */
-  private def materializeFrom(half0: DataFrame, capped: DataFrame,
-      cacheHalf: Boolean): Unit = {
-    val half = if (cacheHalf) half0.cache() else half0
-    deviations = Persist.replace(deviations, half.unionByName(half.select(
-      F.col("item_to").as("item_from"), F.col("item_from").as("item_to"),
-      F.col("n"), (-F.col("dev_ppm")).as("dev_ppm"))).cache())
-    deviations.count()
-    if (cacheHalf) half.unpersist()
-    ratings = Persist.replace(ratings, capped.withColumnRenamed("_r", "r_ppm").cache())
-    ratings.count()
-  }
 
   protected def doFit(log: DataFrame): Unit = {
     // r13 (guide §2.4): the ratings state feeds both self-join sides, so
@@ -82,23 +63,22 @@ final class SlopeOne(
     // as the ratings: a rename-only projection of a cached frame shares
     // that frame's cache entry, so unpersisting a separately cached
     // `capped` would drop the ratings' cache too.
-    ratings = Persist.replace(ratings,
-      cappedBase(log).withColumnRenamed("_r", "r_ppm").cache())
-    // r14 (guide §1/§2.4, third option after r13 probed cacheHalf both
-    // ways): the BATCH fit builds the full ordered-pair deviation table in
+    ratings = held(cappedBase(log).withColumnRenamed("_r", "r_ppm").cache())
+    // r14 (guide §1/§2.4; r13 measured the union with and without a
+    // cached half): the BATCH fit builds the full ordered-pair deviation table in
     // ONE aggregation — self-join without the upper-triangle filter, both
     // (i→j) and (j→i) groups in the same pass — instead of aggregating the
     // upper triangle and unioning its flip (which re-ran the final
     // HashAggregate per union branch; caching `half` instead measured
     // slower still, r13). Result-identical: n and dev_ppm per ordered pair
     // are the same exact-integer sums, just grouped directly. The
-    // half-based materializeFrom stays for fitFromStats (the incremental/
-    // streaming stats contract is the upper triangle).
+    // half-based union stays in fitFromStats (the incremental/streaming
+    // stats contract is the upper triangle).
     val l = ratings.select(F.col(cols.query),
       F.col(cols.item).as("item_from"), F.col("r_ppm").as("_rf"))
     val r = ratings.select(F.col(cols.query),
       F.col(cols.item).as("item_to"), F.col("r_ppm").as("_rt"))
-    deviations = Persist.replace(deviations, l.join(r, Seq(cols.query))
+    deviations = held(l.join(r, Seq(cols.query))
       .filter(F.col("item_from") =!= F.col("item_to"))
       .groupBy("item_from", "item_to")
       .agg(F.count(F.lit(1)).as("n"),
@@ -131,14 +111,21 @@ final class SlopeOne(
 
   /** Rebuild the full fit from merged stats — bit-exact vs [[fit]] on the
     * concatenated user-disjoint slices. */
-  def fitFromStats(half: DataFrame, cappedRatings: DataFrame): this.type = {
-    releaseScratch()
-    materializeFrom(half, cappedRatings.withColumnRenamed("r_ppm", "_r"),
-      cacheHalf = true)
-    fitQueriesDf = Persist.replace(fitQueriesDf,
-      ratings.select(F.col(cols.query)).distinct().cache())
-    fitItemsDf = Persist.replace(fitItemsDf, ratings.select(F.col(cols.item)).distinct().cache())
-    this
+  def fitFromStats(half: DataFrame, cappedRatings: DataFrame): this.type = refitFromStats {
+    // the antisymmetrization union reads `half` twice, and its plan is the
+    // caller's whole stats pipeline (e.g. the streaming delta
+    // mapGroupsWithState), which must not run twice: cached until the
+    // deviations are
+    val cachedHalf = half.cache()
+    deviations = held(cachedHalf.unionByName(cachedHalf.select(
+      F.col("item_to").as("item_from"), F.col("item_from").as("item_to"),
+      F.col("n"), (-F.col("dev_ppm")).as("dev_ppm"))).cache())
+    deviations.count()
+    cachedHalf.unpersist()
+    ratings = held(cappedRatings.cache())
+    ratings.count()
+    (ratings.select(F.col(cols.item)).distinct(),
+      Some(ratings.select(F.col(cols.query)).distinct()))
   }
 
   /** Exact-ppm scores for every (query, candidate) with support; the

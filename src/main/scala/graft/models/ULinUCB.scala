@@ -3,6 +3,7 @@ package graft.models
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import breeze.linalg.{inv, DenseMatrix, DenseVector}
+import graft.core.Owner
 
 /** User-disjoint LinUCB (reference:
   * replay/experimental/models/u_lin_ucb.py:11-117; Song et al. 2021,
@@ -29,7 +30,7 @@ import breeze.linalg.{inv, DenseMatrix, DenseVector}
 final class ULinUCB(
     val alpha: Double = -2.0,
     val cols: RecCols = RecCols(),
-) extends Serializable {
+) extends Serializable with Owner {
   /** (query, theta[d], ainv[d*d]) — the per-user prefix snapshot. */
   var userState: DataFrame = _
   /** (item, _x[d]) — fit-time item features. */
@@ -40,17 +41,17 @@ final class ULinUCB(
 
   /** Restore fitted state (ModelIO load path). */
   private[graft] def restore(state: DataFrame, feats: DataFrame,
-      d: Int): this.type = {
-    userState = state; itemFeats = feats; dim = d; this
+      d: Int): this.type = held.refit {
+    userState = held(state); itemFeats = held(feats); dim = d; this
   }
 
-  def fit(log: DataFrame, itemFeatures: DataFrame): this.type = {
+  def fit(log: DataFrame, itemFeatures: DataFrame): this.type = held.refit {
     val spark = log.sparkSession
     import spark.implicits._
     val featCols = itemFeatures.columns.filterNot(_ == cols.item)
     dim = featCols.length
     val x = F.array(featCols.toIndexedSeq.map(c => F.col(c).cast("double")): _*)
-    itemFeats = itemFeatures.select(F.col(cols.item), x.as("_x")).cache()
+    itemFeats = held(itemFeatures.select(F.col(cols.item), x.as("_x")).cache())
     itemFeats.count()
 
     val joined = log.join(F.broadcast(itemFeats), Seq(cols.item))
@@ -99,7 +100,7 @@ final class ULinUCB(
         (q, theta.toArray, aInv.toArray)
       }
     }.toDF(cols.query, "theta", "ainv")
-    userState = solved.cache()
+    userState = held(solved.cache())
     userState.count()
     this
   }

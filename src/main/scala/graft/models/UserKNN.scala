@@ -37,8 +37,7 @@ final class UserKNN(
   var trainPairs: DataFrame = _
 
   protected def doFit(log: DataFrame): Unit = {
-    trainPairs = Persist.replace(trainPairs,
-      Persist.leaf(log.select(cols.query, cols.item).distinct()))
+    trainPairs = held(Persist.leaf(log.select(cols.query, cols.item).distinct()))
     // r13 (guide §2.4): the capped cells feed norms + both self-join sides —
     // cache once instead of re-running the audience-cap window three times.
     val cells = ItemKNN.cap(trainPairs, cols.item, Seq(cols.query, cols.item),
@@ -48,9 +47,8 @@ final class UserKNN(
     // UserKNN has no stats refit whose plans could nest
     ItemKNN.topK(pairs, dfs, cols.query, "query_one", "query_two", numNeighbours,
       shrink) { crop =>
-      val next = crop.cache()
-      next.count()
-      similarity = Persist.replace(similarity, next)
+      similarity = held(crop.cache())
+      similarity.count()
     }
     cells.unpersist() // scratch; state = similarity + trainPairs
   }

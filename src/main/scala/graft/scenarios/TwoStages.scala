@@ -5,7 +5,7 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, functions => F}
 
-import graft.core.Ops
+import graft.core.{Ops, Owner}
 import graft.models.{BaseRecommender, NeighbourRec, PopRec, RecCols}
 import graft.preprocessing.HistoryFeatures
 import graft.splitters.{RatioSplitter, Splitter}
@@ -32,6 +32,11 @@ import graft.splitters.{RatioSplitter, Splitter}
   * on the candidate frame (|queries|·numNegatives rows, never |q|×|catalog|);
   * the per-model relevance join broadcasts nothing larger than the candidate
   * set; GBT training is MLlib-distributed.
+  *
+  * The scenario holds the first-level train half, its generated-feature
+  * frames, the random negative sampler and the last predict's candidates;
+  * a refit releases the previous fit's. The first-level and fallback
+  * models' state stays with their owner.
   */
 final class TwoStagesScenario(
     val firstLevelModels: Seq[BaseRecommender],
@@ -46,7 +51,7 @@ final class TwoStagesScenario(
     val seed: Long = 123,
     val trainSplitter: Splitter = RatioSplitter(0.5),
     cols: RecCols = RecCols(),
-) {
+) extends Owner {
   require(firstLevelModels.nonEmpty, "TwoStagesScenario needs >= 1 first-level model")
   require(Set("first_level", "random").contains(negativesType),
     s"negativesType must be first_level | random, got $negativesType")
@@ -65,6 +70,8 @@ final class TwoStagesScenario(
     * its own training set. */
   var trainAucFrame: DataFrame = _
   private var firstLevelTrain: DataFrame = _
+  /** [[generatedStats]] of `firstLevelTrain`, cached by [[fit]]. */
+  private var trainStats: Option[(DataFrame, DataFrame, DataFrame)] = None
   private var userFeaturesFit: Option[DataFrame] = None
   private var itemFeaturesFit: Option[DataFrame] = None
 
@@ -110,18 +117,11 @@ final class TwoStagesScenario(
     * pairs), provided user/item feature frames, and — when
     * `useGeneratedFeatures` — the HistoryBasedFeaturesProcessor statistics
     * (per-user and per-item count/log-count/rating moments + abnormality)
-    * computed from `flTrain`. Missing values → 0 (reference fillna(0)). */
-  /** Memoized generated-feature frames (r13, guide §5 caching-when-reused):
-    * [[enrich]] runs twice per scenario (fit-side train table, predict-side
-    * candidates) over the SAME `flTrain`, and the three statistics frames —
-    * per-user stats, per-item stats, abnormality — are identical in both
-    * calls. They are small (|users| / |items| rows) and each costs 1-3
-    * aggregation passes over the train log, so compute-once-cache is a pure
-    * win. Keyed on the `flTrain` reference: a caller enriching against a
-    * different train frame recomputes. */
-  private var statsKey: DataFrame = _
-  private var statsCached: Option[(DataFrame, DataFrame, DataFrame)] = None
-
+    * computed from `flTrain`. Missing values → 0 (reference fillna(0)).
+    * Against the fitted first-level train half, the statistics come from
+    * the frames [[fit]] cached (r13, guide §5 caching-when-reused: enrich
+    * runs twice per scenario, fit-side and predict-side, over the same
+    * half); against another train frame they are computed. */
   def enrich(pairs: DataFrame, flTrain: DataFrame,
       userFeatures: Option[DataFrame], itemFeatures: Option[DataFrame]): DataFrame = {
     var out = pairs
@@ -134,34 +134,28 @@ final class TwoStagesScenario(
     userFeatures.foreach(uf => out = out.join(uf, Seq(cols.query), "left"))
     itemFeatures.foreach(fi => out = out.join(fi, Seq(cols.item), "left"))
     if (useGeneratedFeatures) {
-      def prefixed(df: DataFrame, keep: String, p: String): DataFrame =
-        df.select(F.col(keep) +:
-          df.columns.filterNot(_ == keep).toIndexedSeq
-            .map(c => F.col(c).as(s"$p$c")): _*)
-      if (statsCached.isEmpty || (statsKey ne flTrain)) {
-        // r14 (ADVICE r13): release the previous memo before replacing it —
-        // a long-lived session re-fitting the scenario must not accumulate
-        // stale InMemoryRelations (bench/Verify clearCache masked this).
-        statsCached.foreach { case (a, b, c) =>
-          a.unpersist(); b.unpersist(); c.unpersist()
-        }
-        statsKey = flTrain
-        statsCached = Some((
-          prefixed(
-            HistoryFeatures.entityStats(flTrain, cols.query, cols.rating, cols.ts),
-            cols.query, "u_").cache(),
-          prefixed(
-            HistoryFeatures.entityStats(flTrain, cols.item, cols.rating, cols.ts),
-            cols.item, "i_").cache(),
-          HistoryFeatures.abnormality(flTrain, cols.query, cols.item, cols.rating)
-            .cache()))
-      }
-      val (uStats, iStats, abn) = statsCached.get
+      val (uStats, iStats, abn) = trainStats.filter(_ => flTrain eq firstLevelTrain)
+        .getOrElse(generatedStats(flTrain))
       out = out.join(uStats, Seq(cols.query), "left")
         .join(iStats, Seq(cols.item), "left")
         .join(abn, Seq(cols.query), "left")
     }
     out.na.fill(0.0)
+  }
+
+  /** The generated features of a train frame: per-user stats, per-item
+    * stats and abnormality, each |users| or |items| rows and 1-3
+    * aggregation passes over the train frame. */
+  private def generatedStats(flTrain: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    def prefixed(df: DataFrame, keep: String, p: String): DataFrame =
+      df.select(F.col(keep) +:
+        df.columns.filterNot(_ == keep).toIndexedSeq
+          .map(c => F.col(c).as(s"$p$c")): _*)
+    (prefixed(HistoryFeatures.entityStats(flTrain, cols.query, cols.rating, cols.ts),
+        cols.query, "u_"),
+      prefixed(HistoryFeatures.entityStats(flTrain, cols.item, cols.rating, cols.ts),
+        cols.item, "i_"),
+      HistoryFeatures.abnormality(flTrain, cols.query, cols.item, cols.rating))
   }
 
   /** The labeled second-level training table — candidates from the
@@ -172,7 +166,7 @@ final class TwoStagesScenario(
     val negSource =
       if (negativesType == "first_level") firstLevelModels.head else randomModel
     firstLevelModels.foreach(_.fit(flTrain))
-    if (negativesType == "random") randomModel.fit(flTrain)
+    if (negativesType == "random") held(randomModel).fit(flTrain)
     fallbackModel.foreach(_.fit(flTrain))
     val cand = candidatesWithFallback(negSource, flTrain, numNegatives, flTrain)
     // r13 (guide §2.4 duplicated subtrees): `labeled` feeds [[enrich]] both
@@ -192,10 +186,13 @@ final class TwoStagesScenario(
 
   def fit(log: DataFrame,
       userFeatures: Option[DataFrame] = None,
-      itemFeatures: Option[DataFrame] = None): this.type = {
+      itemFeatures: Option[DataFrame] = None): this.type = held.refit {
     val (labeled, flTrain) = secondLevelTrain(log)
-    if (firstLevelTrain != null) firstLevelTrain.unpersist() // refit rotation
-    firstLevelTrain = flTrain.cache()
+    firstLevelTrain = held(flTrain.cache())
+    trainStats = if (!useGeneratedFeatures) None else {
+      val (u, i, a) = generatedStats(firstLevelTrain)
+      Some((held(u.cache()), held(i.cache()), held(a.cache())))
+    }
     userFeaturesFit = userFeatures
     itemFeaturesFit = itemFeatures
     // the refit above already dropped the models' previous pair-score memos
@@ -233,21 +230,16 @@ final class TwoStagesScenario(
   /** Rerank first-level candidates by the GBT positive-class probability
     * (reference `_predict` + reranker.py `LamaWrap.predict`). Seen pairs
     * are excluded at candidate generation (log_to_filter = log). */
-  /** Previous predict call's candidate cache — rotated (unpersisted) on the
-    * next call so repeated predicts on a long-lived session don't
-    * accumulate InMemoryRelations (ADVICE r13). The returned frame is lazy,
-    * so the CURRENT cand stays cached until the next predict/release. */
-  private var lastCand: DataFrame = _
-
   def predict(log: DataFrame, k: Int): DataFrame = {
     require(secondModel != null, "TwoStagesScenario.predict before fit")
     // r13: cached for the same duplicated-subtree reason as `labeled` in
     // [[secondLevelTrain]] — `cand` appears in the final plan twice (enrich
-    // base + rel predictPairs probe); ≤ numNegatives·|users| rows.
-    if (lastCand != null) lastCand.unpersist()
-    val cand = candidatesWithFallback(firstLevelModels.head, log,
-      numNegatives, log).select(cols.query, cols.item).cache()
-    lastCand = cand
+    // base + rel predictPairs probe); ≤ numNegatives·|users| rows. Held as
+    // scratch: the returned frame is lazy, so it stays cached until the
+    // next predict, refit or release.
+    held.releaseScratch()
+    val cand = held.scratch(candidatesWithFallback(firstLevelModels.head, log,
+      numNegatives, log).select(cols.query, cols.item).cache())
     val feats = withPairScoreMemo(
       enrich(cand, firstLevelTrain, userFeaturesFit, itemFeaturesFit))
     val assembled = new VectorAssembler()
@@ -274,22 +266,15 @@ final class TwoStagesScenario(
     finally neighbours.zip(saved).foreach { case (n, f) => n.memoPairScores = f }
   }
 
-  /** Release every frame the scenario cached: the first-level models'
-    * pair-score memos, the generated-feature stats, the first-level train
-    * half and the last predict's candidates. The fitted scenario still
-    * predicts afterwards (recomputing what it needs); the first-level
-    * models' own state stays with their owner. */
-  def release(): Unit = {
+  /** Release every frame the scenario holds, and the first-level models'
+    * pair-score memos it made. The fitted scenario still predicts
+    * afterwards (recomputing what it needs). */
+  override def release(): Unit = {
     firstLevelModels.foreach {
       case n: NeighbourRec => n.releasePairScores()
       case _               => ()
     }
-    statsCached.foreach { case (a, b, c) =>
-      a.unpersist(); b.unpersist(); c.unpersist()
-    }
-    statsCached = None
-    statsKey = null
-    Seq(firstLevelTrain, lastCand).filter(_ != null).foreach(_.unpersist())
+    super.release()
   }
 
   def fitPredict(log: DataFrame, k: Int,

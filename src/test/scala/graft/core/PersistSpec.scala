@@ -39,6 +39,43 @@ class PersistSpec extends SparkSpec {
     assert(leaf.count() == 7, "released state recomputes from its lineage")
   }
 
+  test("holdings: a refit releases what the new generation does not reuse, release the rest") {
+    val m = mark()
+    val h = new Holdings
+    def table(n: Int) = spark.range(0, n).toDF("id")
+    val part = new Owner {}
+    val kept = h(table(10).cache())
+    val replaced = h(table(20).cache())
+    val bc = h(sc.broadcast(Array(1, 2, 3)))
+    h(part)
+    val partState = part.held(table(30).cache())
+    val node = h(new Owner {})
+    val nodeState = node.held(table(80).cache())
+    val scratch = h.scratch(table(40).cache())
+    Seq(kept, replaced, partState, nodeState, scratch).foreach(_.count())
+    val next = h.refit {
+      assert(scratch.storageLevel == StorageLevel.NONE, "a refit starts by releasing scratch")
+      h(table(10).cache()) // the plan `kept` was cached from: one cache entry
+      h(new Owner {}).held(table(80).cache()) // a new part reuses `nodeState`'s entry
+      h(table(50).cache())
+    }
+    assert(nodeState.storageLevel.useMemory, "an entry a new part reuses stays")
+    assert(kept.storageLevel.useMemory, "an entry the new generation reuses stays")
+    assert(next.storageLevel.useMemory)
+    assert(replaced.storageLevel == StorageLevel.NONE)
+    assert(partState.storageLevel == StorageLevel.NONE, "a part is released with its owner")
+    assert(bc.value.sum == 6, "a replaced broadcast is unpersisted, not destroyed")
+    // a failing refit keeps both generations held
+    val failed = table(60).cache()
+    intercept[IllegalStateException](h.refit { h(failed); throw new IllegalStateException })
+    assert(next.storageLevel.useMemory && failed.storageLevel.useMemory)
+    h.checkpointed(table(70).localCheckpoint(true))
+    h.release()
+    assert(Seq(kept, next, failed).forall(_.storageLevel == StorageLevel.NONE))
+    assert(persistedSince(m).isEmpty, persistedSince(m))
+    assert(next.count() == 50, "released state recomputes")
+  }
+
   test("releaseCheckpoint frees what Dataset.unpersist leaves persisted") {
     val m = mark()
     val cp = spark.range(0, 50).toDF("id").localCheckpoint(true)
@@ -103,10 +140,14 @@ class PersistSpec extends SparkSpec {
     val tree = Seq(("root", null: String), ("a", "root"), ("b", "root"),
       ("a1", "a"), ("a2", "a")).toDF("category", "parent_cat")
     val m2 = mark()
-    val closure = new CatPopRec(tree, Seq((0L, "a1")).toDF("item_id", "category"))
-      .leafClosure
-    assert(closure.count() == 8)
-    Persist.releaseCheckpoint(closure)
+    val cat = new CatPopRec(tree, Seq((0L, "a1"), (1L, "b")).toDF("item_id", "category"))
+    assert(cat.leafClosure.count() == 8)
+    val planned = cat.fit(Seq((0L, 0L), (1L, 0L), (2L, 1L)).toDF("query_id", "item_id"))
+      .predict(Seq("root").toDF("category"), 2)
+    cat.release()
+    // the closure holds no blocks, and a predict planned before release() computes
     assert(persistedSince(m2).isEmpty, persistedSince(m2))
+    assert(planned.as[(String, Long, Double)].collect().toSet ==
+      Set(("root", 0L, 2.0 / 3), ("root", 1L, 1.0 / 3)))
   }
 }

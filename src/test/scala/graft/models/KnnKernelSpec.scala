@@ -1,6 +1,7 @@
 package graft.models
 
 import graft.SparkSpec
+import graft.core.Owner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
@@ -126,107 +127,209 @@ class KnnKernelSpec extends SparkSpec {
 
   // ---- state ownership across refits ------------------------------------
 
-  test("a refit of the same instance releases that instance's previous state") {
-    val sc = spark.sparkContext
-    val mark = sc.emptyRDD[Int].id
-    val knn = new ItemKNN(numNeighbours = 3)
-    val pop = new PopRec()
-    val user = new UserKNN(numNeighbours = 3)
-    def state = Seq(knn.similarity, knn.fitQueries, knn.fitItems,
-      pop.itemPopularity, pop.fitQueries, pop.fitItems,
-      user.similarity, user.trainPairs, user.fitQueries, user.fitItems).filter(_ != null)
-    // ItemKNN's adjacency broadcast, one per fit
-    val adjacencies = scala.collection.mutable.ArrayBuffer.empty[Broadcast[NeighbourTable]]
-    // the second fit repeats the first one's input: its entity frames reuse
-    // the cache entries of the frames they replace, which must stay cached
-    for (in <- Seq(log, log, log.filter($"query_id" <= 5))) {
-      for (m <- Seq(knn, pop, user)) {
-        m.fit(in)
-        m.fitQueries.count()
-        m.fitItems.count()
-      }
-      adjacencies += knn.adjacency
-      assert(state.forall(_.storageLevel.useMemory), "current state must stay cached")
+  private def sc = spark.sparkContext
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  /** One owner under test: `fit` runs one refit of it on an input, `state`
+    * lists the cached frames it must hold after it, and `predict` (None:
+    * its fits are not reproducible) must equal a fresh instance's after
+    * the same fit. `parts` are owners it uses but does not own. */
+  private final class Owned[M <: Owner](make: => M, fitOn: (M, DataFrame) => Unit,
+      state: M => Seq[DataFrame], predict: Option[(M, DataFrame) => DataFrame],
+      parts: M => Seq[Owner] = (_: M) => Nil) {
+    val m: M = make
+    def owners: Seq[Owner] = m +: parts(m)
+    def name: String = m.getClass.getSimpleName
+    def stateCached: Boolean = state(m).forall(_.storageLevel.useMemory)
+    def fit(in: DataFrame): Unit = predict match {
+      case Some(p) => asFresh(in, fitOn, p)(fitOn(m, in))
+      case None =>
+        fitOn(m, in)
+        assert(stateCached, s"$name: current state must stay cached")
     }
-    // the refit from merged co-stats replaces the same state (its fit
-    // queries go: the stats carry no users). The entity frames it releases
-    // share their cache entries with PopRec's and UserKNN's (one input,
-    // one plan), so only ItemKNN's state is checked here.
-    val (pairs, dfs) = ItemKNN.mergeStats(knn.coStats(log.filter($"query_id" <= 3)),
-      knn.coStats(log.filter($"query_id" > 3)))
-    knn.fitFromStats(pairs, dfs)
-    knn.fitItems.count()
-    adjacencies += knn.adjacency
-    assert(knn.fitQueries == null)
-    assert(Seq(knn.similarity, knn.fitItems).forall(_.storageLevel.useMemory),
-      "current state must stay cached")
-    // each refit broadcasts a new adjacency; the replaced ones are
-    // unpersisted, not destroyed (reading a destroyed broadcast throws),
-    // so a predict planned before a refit still computes. Unpersisting
-    // frees executor copies only, which a local session does not have.
-    assert(adjacencies.map(_.id).distinct.size == 4, adjacencies.map(_.id))
-    assert(adjacencies.init.forall(_.value.ids.nonEmpty))
-    state.foreach(_.unpersist())
-    assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
-      "a refit left a cached frame of the replaced state behind")
+    /** After `refit` of `m` (and `m`'s state is then cached, if `cached`),
+      * `m`'s predict equals that of a fresh instance given `fitFresh`. The
+      * fresh instance is fit and released first: a frame it caches from
+      * one of `m`'s plans shares `m`'s cache entry, which its release drops. */
+    def asFresh(in: DataFrame, fitFresh: (M, DataFrame) => Unit,
+        p: (M, DataFrame) => DataFrame, cached: Boolean = true)(refit: => Unit): Unit = {
+      val fresh = make
+      fitFresh(fresh, in)
+      val expected = try rows(p(fresh, in)) finally (fresh +: parts(fresh)).foreach(_.release())
+      refit
+      if (cached) assert(stateCached, s"$name: current state must stay cached")
+      assert(rows(p(m, in)) == expected, s"$name: a refit predicts as a fresh fit")
+    }
+  }
+
+  /** Runs `body` on a clean cache; after `release()` of the owners it
+    * returns, no RDD persisted and no cache entry made since may remain.
+    * `body` gets the count of RDDs persisted since: a refit that leaves
+    * the generation it replaced persisted raises it. */
+  private def releasesEverything(body: (() => Int) => Seq[Owner]): Unit = {
+    spark.catalog.clearCache()
+    val mark = sc.emptyRDD[Int].id
+    body(() => sc.getPersistentRDDs.keySet.count(_ > mark)).foreach(_.release())
+    val left = sc.getPersistentRDDs.filter(_._1 > mark)
+    assert(left.isEmpty, left.values.map(_.toDebugString.take(300)).mkString("\n"))
+    assert(cacheManager.isEmpty, "release() left a cache entry behind")
+  }
+
+  // the Markov models, RepeatRec and TwoStages order each history by time
+  private def timed = log.withColumn("timestamp", F.timestamp_seconds(F.col("item_id") * 86400))
+  private def queryFeatures = (1L to 8L).map(q => (q, (q % 3).toDouble, (q % 2).toDouble))
+    .toDF("query_id", "f1", "f2")
+  private def itemFeatures = (1L to 9L).map(i => (i, (i % 3).toDouble, (i % 2).toDouble))
+    .toDF("item_id", "f1", "f2")
+  // the second input repeats the first: a frame cached from the same plan
+  // reuses the cache entry of the frame it replaces, which must stay cached
+  private def inputs = Seq(timed, timed, timed.filter($"query_id" <= 5))
+  // user-disjoint halves for the refits from merged stats, split at 3 or 5
+  private def halves(at: Int) = (timed.filter($"query_id" <= at), timed.filter($"query_id" > at))
+
+  /** After each round of refits as many RDDs are persisted as after the
+    * first: each refit leaves its own generation only. */
+  private def sameAfterEachRound(persisted: () => Int, rounds: Seq[() => Unit]): Unit = {
+    val counts = rounds.map { round => round(); persisted() }
+    assert(counts.distinct.size == 1, s"persisted RDDs after each round: $counts")
+  }
+
+  private def rec[M <: BaseRecommender](make: => M, state: M => Seq[DataFrame],
+      reproducible: Boolean = true, filterSeen: Boolean = true) =
+    new Owned[M](make, (m, in) => m.fit(in), state,
+      Option.when(reproducible)((m, in) => m.predict(in, 3, filterSeen = filterSeen)))
+
+  test("a refit of the same instance releases that instance's previous state") {
+    val knn = rec(new ItemKNN(numNeighbours = 3), (m: ItemKNN) => Seq(m.similarity))
+    releasesEverything { persisted =>
+      val pop = rec(new PopRec(), (m: PopRec) => Seq(m.itemPopularity))
+      val user = rec(new UserKNN(numNeighbours = 3),
+        (m: UserKNN) => Seq(m.similarity, m.trainPairs))
+      val queryPop = rec(new QueryPopRec(), (m: QueryPopRec) => Seq(m.queryProfile),
+        filterSeen = false)
+      val rules = rec(new AssociationRules(sessionCol = "query_id", minItemCount = 1,
+        minPairCount = 1, numNeighbours = 3), (m: AssociationRules) => Seq(m.similarity, m.rules))
+      val repeat = rec(new RepeatRec(), (m: RepeatRec) => Seq(m.state), filterSeen = false)
+      val tree = Seq(("root", null: String), ("a", "root"), ("b", "root"))
+        .toDF("category", "parent_cat")
+      val cats = (1L to 9L).map(i => (i, if (i % 2 == 0) "a" else "b")).toDF("item_id", "category")
+      val catPop = new Owned[CatPopRec](new CatPopRec(tree, cats), (m, in) => m.fit(in),
+        m => Seq(m.leafItemCounts),
+        Some((m, _) => m.predict(Seq("root", "a").toDF("category"), 3)))
+      val ucb = new Owned[UCBState](new UCBState(), (m, in) => m.fit(in), m => Seq(m.state),
+        Some((m, _) => m.scores))
+      val owners = Seq(knn, pop, user, queryPop, rules, repeat, catPop, ucb)
+      // ItemKNN's adjacency broadcast, one per fit
+      val adjacencies = scala.collection.mutable.ArrayBuffer.empty[Broadcast[NeighbourTable]]
+      sameAfterEachRound(persisted, inputs.map(in => () => {
+        owners.foreach(_.fit(in))
+        adjacencies += knn.m.adjacency
+      }))
+      // the refits from merged stats replace the same state, twice, from
+      // other halves; ItemKNN's co-stats carry no users, so its fit queries go
+      sameAfterEachRound(persisted, Seq(3, 5).map(at => () => {
+        val (lo, hi) = halves(at)
+        knn.asFresh(timed, (m, in) => m.fit(in), (m, in) => m.predict(in, 3)) {
+          val (pairs, dfs) = ItemKNN.mergeStats(knn.m.coStats(lo), knn.m.coStats(hi))
+          knn.m.fitFromStats(pairs, dfs)
+        }
+        adjacencies += knn.m.adjacency
+        assert(knn.m.fitQueries == null)
+        // the fit frames are projections no one caches, so this refit
+        // releases nothing the PopRec and UserKNN fitted on the same input hold
+        assert(pop.stateCached && user.stateCached)
+        repeat.asFresh(timed, (m, in) => m.fit(in),
+            (m, in) => m.predict(in, 3, filterSeen = false)) {
+          repeat.m.fitFromStats(
+            repeat.m.mergeStats(repeat.m.pairStats(lo), repeat.m.pairStats(hi)))
+        }
+        ucb.asFresh(timed, (m, in) => m.fit(in), (m, _) => m.scores)(ucb.m.fit(lo).refit(hi))
+      }))
+      // each refit broadcasts a new adjacency; the replaced ones are
+      // unpersisted, not destroyed (reading a destroyed broadcast throws),
+      // so a predict planned before a refit still computes. Unpersisting
+      // frees executor copies only, which a local session does not have.
+      assert(adjacencies.map(_.id).distinct.size == 5, adjacencies.map(_.id))
+      assert(adjacencies.init.forall(_.value.ids.nonEmpty))
+      owners.map(_.m)
+    }
+    // a released owner still predicts, recomputing its state
+    knn.asFresh(timed, (m, in) => m.fit(in), (m, in) => m.predict(in, 3), cached = false)(())
   }
 
   test("P3AlphaRec and SlopeOne refits release the state they replace") {
-    val sc = spark.sparkContext
-    val mark = sc.emptyRDD[Int].id
-    val p3 = new P3AlphaRec(topKNeighbours = 3)
-    val s1 = new SlopeOne()
-    // the models with their own state fields
-    val markov = new MarkovRec()
-    val markov2 = new Markov2Rec()
-    val random = new RandomRec()
-    val bias = new BiasModel()
-    val als = new ALSRec(rank = 2, maxIter = 2)
-    val alsX = new ALSRec(rank = 2, maxIter = 2, implicitPrefs = false)
-    val w2v = new Word2VecRec(vectorSize = 4)
-    val cluster = new ClusterRec(nClusters = 2)
-    val features = (1L to 8L).map(q => (q, (q % 3).toDouble, (q % 2).toDouble))
-      .toDF("query_id", "f1", "f2")
-    // the fitFromStats refits below drop the Markov models' fit queries
-    def state = Seq(p3.similarity, p3.userDegrees, p3.trainPairs, p3.fitQueries, p3.fitItems,
-      s1.deviations, s1.ratings, s1.fitQueries, s1.fitItems,
-      markov.transitions, markov.fitQueries, markov.fitItems,
-      markov2.transitions2, markov2.backoff.transitions, markov2.backoff.fitQueries,
-      markov2.backoff.fitItems, markov2.fitQueries, markov2.fitItems,
-      random.itemWeights, random.fitQueries, random.fitItems,
-      bias.itemBias, bias.userBias, bias.fitQueries, bias.fitItems,
-      als.fitQueries, als.fitItems, alsX.fitQueries, alsX.fitItems,
-      w2v.itemVectors, w2v.userVectors, w2v.fitQueries, w2v.fitItems,
-      cluster.queryClusters, cluster.clusterItems).filter(_ != null)
-    // the Markov models order each history by timestamp
-    val timed = log.withColumn("timestamp", F.col("item_id"))
-    // a repeated input shares the cache entries of the frames it replaces
-    for (in <- Seq(timed, timed, timed.filter($"query_id" <= 5))) {
-      for (m <- Seq(p3, s1, markov, markov2, random, bias, als, alsX, w2v)) {
-        m.fit(in)
-        m.fitQueries.count()
-        m.fitItems.count()
-      }
-      cluster.fit(in, features)
-      markov2.backoff.fitItems.count()
-      assert(state.forall(_.storageLevel.useMemory), "current state must stay cached")
+    val als = rec(new ALSRec(rank = 2, maxIter = 2), (_: ALSRec) => Nil)
+    releasesEverything { persisted =>
+      val p3 = rec(new P3AlphaRec(topKNeighbours = 3),
+        (m: P3AlphaRec) => Seq(m.similarity, m.userDegrees, m.trainPairs))
+      val s1 = rec(new SlopeOne(), (m: SlopeOne) => Seq(m.deviations, m.ratings))
+      val markov = rec(new MarkovRec(), (m: MarkovRec) => Seq(m.transitions))
+      val markov2 = rec(new Markov2Rec(),
+        (m: Markov2Rec) => Seq(m.transitions2, m.backoff.transitions))
+      val random = rec(new RandomRec(), (m: RandomRec) => Seq(m.itemWeights))
+      val bias = rec(new BiasModel(), (m: BiasModel) => Seq(m.itemBias, m.userBias))
+      val ease = rec(new Ease(), (m: Ease) => Seq(m.similarity))
+      val alsX = rec(new ALSRec(rank = 2, maxIter = 2, implicitPrefs = false), (_: ALSRec) => Nil)
+      val alsIvf = rec(new ALSRec(rank = 2, maxIter = 2,
+        ann = Some(new IvfAnn(nCentroids = 2, nProbe = 1))), (_: ALSRec) => Nil)
+      val w2v = rec(new Word2VecRec(vectorSize = 4),
+        (m: Word2VecRec) => Seq(m.itemVectors, m.userVectors), reproducible = false)
+      val cluster = new Owned[ClusterRec](new ClusterRec(nClusters = 2),
+        (m, in) => m.fit(in, queryFeatures), m => Seq(m.queryClusters, m.clusterItems),
+        Some((m, in) => m.predict(in, 3)))
+      val linUcb = new Owned[LinUCB](new LinUCB(), (m, in) => m.fit(in, queryFeatures),
+        m => Seq(m.armState), Some((m, _) => m.predict(queryFeatures, 3)))
+      val uLinUcb = new Owned[ULinUCB](new ULinUCB(), (m, in) => m.fit(in, itemFeatures),
+        m => Seq(m.userState, m.itemFeats), Some((m, in) => m.predict(in, 3)))
+      val hcb = new Owned[HierarchicalRecommender](
+        new HierarchicalRecommender(depth = 2, nClusters = 2),
+        (m, in) => m.fit(in, itemFeatures), m => Seq(m.rootAssignment),
+        Some((m, in) => m.predict(in, 3)))
+      val twoStages = new Owned[graft.scenarios.TwoStagesScenario](
+        new graft.scenarios.TwoStagesScenario(Seq(new ItemKNN(numNeighbours = 3)),
+          numNegatives = 3, negativesType = "random", gbtMaxIter = 2, gbtMaxDepth = 2),
+        (m, in) => m.fit(in), _ => Nil, Some((m, in) => m.predict(in, 2)),
+        // the models the scenario fits are its caller's
+        m => m.firstLevelModels ++ m.fallbackModel)
+      val owners = Seq(p3, s1, markov, markov2, random, bias, ease, als, alsX, alsIvf, w2v,
+        cluster, linUcb, uLinUcb, hcb, twoStages)
+      sameAfterEachRound(persisted, inputs.map(in => () => owners.foreach(_.fit(in))))
+      // the refits from merged stats replace the same state, twice, from
+      // other halves
+      def fit[M <: BaseRecommender](m: M, in: DataFrame): Unit = m.fit(in)
+      def top[M <: BaseRecommender](m: M, in: DataFrame): DataFrame = m.predict(in, 3)
+      sameAfterEachRound(persisted, Seq(3, 5).map(at => () => {
+        val (lo, hi) = halves(at)
+        s1.asFresh(timed, fit, top) {
+          val (half, ratings) = s1.m.mergeStats(s1.m.coStats(lo), s1.m.coStats(hi))
+          s1.m.fitFromStats(half, ratings)
+        }
+        bias.asFresh(timed, fit, top) {
+          bias.m.fitFromStats(bias.m.mergeStats(bias.m.pairStats(lo), bias.m.pairStats(hi)))
+        }
+        markov.asFresh(timed, fit, top) {
+          markov.m.fitFromStats(
+            markov.m.mergeStats(markov.m.transStats(lo), markov.m.transStats(hi)))
+        }
+        markov2.asFresh(timed, fit, top) {
+          val (t2, t1) = markov2.m.mergeStats(markov2.m.transStats(lo), markov2.m.transStats(hi))
+          markov2.m.fitFromStats(t2, t1)
+        }
+        ease.asFresh(timed, fit, top) {
+          ease.m.fitFromCells(ease.m.mergeCells(ease.m.gramCells(lo), ease.m.gramCells(hi)))
+        }
+      }))
+      // setAnn releases the index it replaces and holds a re-set one once
+      val withIvf = persisted()
+      alsIvf.m.setAnn(Some(new IvfAnn(nCentroids = 2, nProbe = 1)))
+      alsIvf.m.setAnn(alsIvf.m.annIndex)
+      assert(persisted() == withIvf, "setAnn kept the replaced index persisted")
+      alsIvf.m.setAnn(None)
+      assert(persisted() < withIvf, "setAnn(None) kept the index persisted")
+      owners.flatMap(_.owners)
     }
-    // the incremental paths replace the same frames
-    val (lo, hi) = (timed.filter($"query_id" <= 3), timed.filter($"query_id" > 3))
-    val (half, ratings) = s1.mergeStats(s1.coStats(lo), s1.coStats(hi))
-    s1.fitFromStats(half, ratings)
-    s1.fitQueries.count()
-    s1.fitItems.count()
-    bias.fitFromStats(bias.mergeStats(bias.pairStats(lo), bias.pairStats(hi)))
-    bias.fitQueries.count()
-    bias.fitItems.count()
-    markov.fitFromStats(markov.mergeStats(markov.transStats(lo), markov.transStats(hi)))
-    val (t2, t1) = markov2.mergeStats(markov2.transStats(lo), markov2.transStats(hi))
-    markov2.fitFromStats(t2, t1)
-    state.foreach(_.unpersist())
-    // MLlib's ALS factors are frames over persisted RDDs
-    for (m <- Seq(als, alsX)) graft.core.Persist.releaseCheckpoint(m.userFactors, m.itemFactors)
-    assert(sc.getPersistentRDDs.keySet.filter(_ > mark).isEmpty,
-      "a refit left a cached frame of the replaced state behind")
+    // a released ALS model recomputes its factors from their lineage
+    als.asFresh(inputs.last, (m, in) => m.fit(in), (m, in) => m.predict(in, 3), cached = false)(())
   }
 }

@@ -124,5 +124,19 @@ class MarkovSpec extends SparkSpec {
     assert(predicted(knn) == Set(1L, 2L, 3L))
     assert(knn.fitQueries == null)
     assert(knn.fitItems.as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
+    // nor do EASE's Gram cells
+    val ease = new Ease().fit(log.filter($"query_id" === 1))
+    ease.fitFromCells(ease.mergeCells(ease.gramCells(lo), ease.gramCells(hi)))
+    assert(predicted(ease) == Set(1L, 2L, 3L))
+    assert(ease.fitQueries == null)
+    assert(ease.fitItems.as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
+    // RepeatRec's pair stats carry users: the fit queries are theirs
+    val timed = log.withColumn("timestamp", F.timestamp_seconds($"timestamp"))
+    val repeat = new RepeatRec().fit(timed.filter($"query_id" === 1))
+    repeat.fitFromStats(repeat.mergeStats(
+      repeat.pairStats(timed.filter($"query_id" <= 2)),
+      repeat.pairStats(timed.filter($"query_id" === 3))))
+    assert(predicted(repeat) == Set(1L, 2L, 3L))
+    assert(repeat.fitQueries.as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 }
